@@ -246,6 +246,14 @@ object Corpus extends graft.QueryModule {
     * eval-set shingles; chosen to actually hit the synthetic corpus). */
   private val probes = Seq("stream table hash", "window fast query", "part filter scan")
 
+  /** Stages 1-2 of [[cleanPipeline]] over the documents table: the
+    * quality gate (length floors) and language selection. */
+  private[graft] def gatedDocs(s: SparkSession, d: String): DataFrame =
+    Tables.documents(s, d)
+      .filter(col("n_chars") >= 100 &&
+        size(split(col("text"), " ")) >= 20 &&
+        col("lang").isin("en", "fr", "de"))
+
   /** The whole C4/RefinedWeb-style cleaning pipeline — the composition
     * showpiece: every stage is an operator this library already ships
     * individually, chained so Catalyst plans the chain end to end
@@ -271,10 +279,7 @@ object Corpus extends graft.QueryModule {
     * six-stage composition loses nothing vs the per-operator
     * semantics. */
   private def cleanPipeline(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d)
-      .filter(col("n_chars") >= 100 &&
-        size(split(col("text"), " ")) >= 20 &&
-        col("lang").isin("en", "fr", "de"))
+    val docs = gatedDocs(s, d)
     // r15 (guide §2.4/§5): materialize the exact-dedup stage ONCE. Its
     // subplan (scan + quality filter + md5 + the min-struct hash-agg) is
     // referenced four-plus times downstream — the near-dup stage's band

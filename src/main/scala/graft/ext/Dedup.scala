@@ -1040,7 +1040,7 @@ object Dedup extends graft.QueryModule {
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
                           idCol: String = "id", iCol: String = "i",
                           jCol: String = "j", maxIter: Int = 25): DataFrame = {
-    val (labels, converged) =
+    val (labels, converged, _) =
       connectedComponentsWithStatus(nodes, edges, idCol, iCol, jCol, maxIter)
     if (!converged)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
@@ -1050,9 +1050,10 @@ object Dedup extends graft.QueryModule {
     labels
   }
 
-  /** [[connectedComponents]] with an explicit convergence flag, so callers
-    * that must not consume partial labels can decide for themselves
-    * (ADVICE r3: a require-throw at maxIter discards all completed work).
+  /** [[connectedComponents]] with an explicit convergence flag and the
+    * number of rounds run, so callers that must not consume partial labels
+    * can decide for themselves (ADVICE r3: a require-throw at maxIter
+    * discards all completed work) and measurements can size the fixpoint.
     *
     * ONE Spark action per round (VERDICT r3 #3): the changed-label count
     * is an `observe()` metric collected by the same localCheckpoint action
@@ -1064,7 +1065,8 @@ object Dedup extends graft.QueryModule {
   def connectedComponentsWithStatus(nodes: DataFrame, edges: DataFrame,
                                     idCol: String = "id", iCol: String = "i",
                                     jCol: String = "j",
-                                    maxIter: Int = 25): (DataFrame, Boolean) = {
+                                    maxIter: Int = 25)
+      : (DataFrame, Boolean, Int) = {
     val sym = edges.select(col(iCol).as("src"), col(jCol).as("dst"))
       .union(edges.select(col(jCol).as("src"), col(iCol).as("dst")))
     var labels = nodes.select(col(idCol).as("id"), col(idCol).as("label"))
@@ -1130,11 +1132,8 @@ object Dedup extends graft.QueryModule {
       converged = changed == 0
       iter += 1
     }
-    // measurement hook (r15): round counts size the fixpoint's share of a
-    // key's actions; env-gated so the query path stays print-free
-    if (sys.env.contains("GRAFT_CC_TRACE"))
-      System.err.println(s"[cc] rounds=$iter converged=$converged")
-    (labels.select(col("id").as(idCol), col("label").as("cluster_id")), converged)
+    (labels.select(col("id").as(idCol), col("label").as("cluster_id")),
+      converged, iter)
   }
 
   /** Connected components by ALTERNATING LARGE-STAR / SMALL-STAR edge

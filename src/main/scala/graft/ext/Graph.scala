@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -32,10 +32,12 @@ object Graph extends graft.QueryModule {
     * is dimension-bounded (~part table, MBs). At a scale where |V|
     * outgrows the broadcast budget (billions of parts at 100 TB), set it
     * FALSE: every vertex-domain join falls back to a plain shuffled
-    * equi-join, and PageRank pre-partitions the edge table on `src` once
-    * so each iteration shuffles only the |V|-row rank table — the edge
-    * relation (the big side) never moves again. Both modes are
-    * hash-identical (GraphSpec proves it at 4 and 32 partitions). */
+    * equi-join, and the fixpoints pre-partition their edge table on the
+    * join key once ([[edgePrep]]) so each iteration shuffles only the
+    * |V|-row vertex table — the edge relation (the big side) never moves
+    * again. Both modes are hash-identical (GraphSpec proves it at 4 and
+    * 32 partitions). Read only by [[maybeBroadcast]], [[edgePrep]] and
+    * [[hitsIterate]]. */
   val BroadcastConf = "graft.graph.broadcastVertexDomain"
 
   private def vertexBroadcast(s: SparkSession): Boolean =
@@ -44,6 +46,42 @@ object Graph extends graft.QueryModule {
   /** Broadcast hint only while the vertex domain is broadcast-safe. */
   private def maybeBroadcast(s: SparkSession, df: DataFrame): DataFrame =
     if (vertexBroadcast(s)) broadcast(df) else df
+
+  /** The edge prep of the vertex-domain fixpoints: the symmetric edge
+    * list `sym`, cut once. Broadcast mode ships the |V|-row vertex table
+    * to it each round (localCheckpoint erases size stats, so the
+    * auto-broadcast heuristic can't see how small that table is — the
+    * rounds force it through [[maybeBroadcast]]). Shuffle mode first
+    * hash-partitions the list on the join `key` — localCheckpoint keeps
+    * that partitioning — so each round shuffles only the vertex table to
+    * meet it and the |E|-row side never moves again. */
+  private def edgePrep(s: SparkSession, sym: DataFrame, key: String): DataFrame =
+    if (vertexBroadcast(s)) sym.cut() else sym.repartition(col(key)).cut()
+
+  /** Both directions of every canonical `a < b` edge, as (`from`, `to`). */
+  private def bothWays(e: DataFrame, from: String, to: String): DataFrame =
+    e.select(col("a").as(from), col("b").as(to))
+      .unionAll(e.select(col("b").as(from), col("a").as(to)))
+
+  /** Per-vertex degree (v, deg) of a canonical `a < b` edge list. */
+  private def degrees(e: DataFrame): DataFrame =
+    e.select(col("a").as("v")).unionAll(e.select(col("b").as("v")))
+      .groupBy(col("v")).agg(count(lit(1)).as("deg"))
+
+  /** The edges of `e` whose endpoints both lie in `keep` (column `v`). */
+  private def induced(s: SparkSession, e: DataFrame, keep: DataFrame): DataFrame =
+    e.join(maybeBroadcast(s, keep.withColumnRenamed("v", "a")), Seq("a"),
+        "left_semi")
+      .join(maybeBroadcast(s, keep.withColumnRenamed("v", "b")), Seq("b"),
+        "left_semi")
+
+  /** One row `struct(a, b)` per ascending element pair a < b of the sorted
+    * array column `arr`, generated row-locally with HOFs. */
+  private def ascendingPairs(arr: String): Column =
+    explode(expr(
+      s"""flatten(transform($arr, (x, i) ->
+         |  transform(slice($arr, i + 2, size($arr)),
+         |            y -> struct(x AS a, y AS b))))""".stripMargin))
 
   /** Distinct undirected co-purchase edges, canonical as `a < b`.
     *
@@ -69,10 +107,7 @@ object Graph extends graft.QueryModule {
       Tables.lineitem(s, d)
         .groupBy(col("l_orderkey"))
         .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
-        .select(explode(expr(
-          """flatten(transform(ps, (x, i) ->
-            |  transform(slice(ps, i + 2, size(ps)),
-            |            y -> struct(x AS a, y AS b))))""".stripMargin)).as("e"))
+        .select(ascendingPairs("ps").as("e"))
         .select(col("e.a").as("a"), col("e.b").as("b"))
         .distinct()
         .cut())
@@ -90,25 +125,20 @@ object Graph extends graft.QueryModule {
     // aggregation (and, for adj, the two orientation joins above it)
     // from the checkpointed edges; one |V|-row materialization apiece
     // replaces those recomputes with block reads
-    val deg = e.select(col("a").as("v"))
-      .unionAll(e.select(col("b").as("v")))
-      .groupBy(col("v")).agg(count(lit(1)).as("deg"))
-      .cut()
+    val deg = degrees(e).cut()
     // orient each edge low→high by (deg, id): src gets the smaller key.
     // deg has one row per PART (bounded by the part dim, not the fact
     // table) — broadcast both lookups while the conf allows it; with
     // BroadcastConf=false these are plain shuffled equi-joins and the
     // plan survives an unbounded vertex domain
+    val aFirst = struct(col("da"), col("a")) < struct(col("db"), col("b"))
     val oriented = e
       .join(maybeBroadcast(s, deg.withColumnRenamed("v", "a")
         .withColumnRenamed("deg", "da")), "a")
       .join(maybeBroadcast(s, deg.withColumnRenamed("v", "b")
         .withColumnRenamed("deg", "db")), "b")
-      .select(
-        when(struct(col("da"), col("a")) < struct(col("db"), col("b")),
-          col("a")).otherwise(col("b")).as("src"),
-        when(struct(col("da"), col("a")) < struct(col("db"), col("b")),
-          col("b")).otherwise(col("a")).as("dst"))
+      .select(when(aFirst, col("a")).otherwise(col("b")).as("src"),
+        when(aFirst, col("b")).otherwise(col("a")).as("dst"))
     // Count per-EDGE instead of per-wedge: for each oriented edge u→v,
     // triangles through it = |N⁺(u) ∩ N⁺(v)| over sorted out-adjacency
     // arrays, evaluated by the codegen two-pointer SortedIntersectCount.
@@ -118,7 +148,6 @@ object Graph extends graft.QueryModule {
     // adjacency relation is one row per VERTEX (part-dimension-bounded,
     // ~10 MB); with BroadcastConf=false both lookups run as shuffled
     // equi-joins on src/dst — the per-edge identity is unchanged.
-    graft.functions.VectorFunctions.register(s)
     val adj = oriented.groupBy(col("src"))
       .agg(sort_array(collect_list(col("dst"))).as("nbrs"))
       .cut()
@@ -140,54 +169,39 @@ object Graph extends graft.QueryModule {
     * have each degree — the O(1)-output profile that sizes every
     * downstream graph job (and the skew evidence for the orientation
     * trick above). Two hash aggregates, no joins. */
-  private def degreeDistribution(s: SparkSession, d: String): DataFrame = {
-    val e = coPurchaseEdges(s, d)
-    e.select(col("a").as("v")).unionAll(e.select(col("b").as("v")))
-      .groupBy(col("v")).agg(count(lit(1)).as("deg"))
+  private def degreeDistribution(s: SparkSession, d: String): DataFrame =
+    degrees(coPurchaseEdges(s, d))
       .groupBy(col("deg")).agg(count(lit(1)).as("n_vertices"))
       .orderBy("deg")
-  }
 
   private val prIters = 5
 
-  /** PageRank over the co-purchase graph with CROSS-ENGINE-DETERMINISTIC
-    * iterations [N]. The naive formulation can never hash-match an
-    * oracle: per-neighbor contribution sums are double adds whose result
-    * depends on aggregation order. Here each iteration pins the per-edge
-    * contribution to a 12dp decimal (`bround(rank/deg, 12)` ↔
-    * `round_even(...)`) so the neighbor sum is EXACT and
+  /** The pinned rank iteration of [[pageRank]] and
+    * [[personalizedPageRank]] [N]: a random walk with restart whose
+    * teleport mass returns to the vertices where `seed(node)` holds —
+    * every vertex for global PageRank, so restart is uniform. It is
+    * CROSS-ENGINE-DETERMINISTIC. The naive formulation can never
+    * hash-match an oracle: per-neighbor contribution sums are double adds
+    * whose result depends on aggregation order. Here each iteration pins
+    * the per-edge contribution to a 12dp decimal (`bround(rank/deg, 12)`
+    * ↔ `round_even(...)`) so the neighbor sum is EXACT and
     * order-invariant, converts the sum to double once per vertex, and
     * re-pins the damped rank at 12dp — bit-identical on any partitioning
     * and in any engine. Plan shape per iteration: one equi-join rank×
-    * edges (both hash-partitioned on the same key) + one hash agg;
-    * `localCheckpoint` cuts the growing lineage exactly like
-    * [[Dedup.connectedComponents]]. Fixed 5 iterations (deterministic
-    * work, no convergence action); undirected co-purchase edges mean no
-    * dangling mass. */
-  private def pageRank(s: SparkSession, d: String): DataFrame = {
-    val bcast = vertexBroadcast(s)
-    val e = coPurchaseEdges(s, d)
-    val dirRaw = e.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(e.select(col("b").as("src"), col("a").as("dst")))
-    // Two iteration layouts, same pinned arithmetic (hash-identical —
-    // GraphSpec proves it):
-    //  * broadcast mode (vertex domain dimension-bounded): the |V|-row
-    //    rank table broadcasts each round, so the edge table never
-    //    re-shuffles (localCheckpoint erases size stats, so the
-    //    auto-broadcast heuristic can't see how small it is — force it).
-    //  * shuffle mode (BroadcastConf=false, |V| outgrows broadcast):
-    //    pre-partition the EDGE table on src ONCE — localCheckpoint
-    //    preserves the hash partitioning — and each round shuffles only
-    //    the rank table to meet it; the |E|-row side never moves again.
-    val dir =
-      if (bcast) dirRaw.cut()
-      else dirRaw.repartition(col("src")).cut()
+    * edges (both layouts of [[edgePrep]]) + one hash agg; `.cut()` bounds
+    * the lineage exactly like [[Dedup.connectedComponents]]. Fixed
+    * `prIters` iterations (deterministic work, no convergence action);
+    * undirected co-purchase edges mean no dangling mass. Returns
+    * (node, deg, rank). */
+  private def pinnedRank(s: SparkSession, d: String,
+                         seed: Column => Column): DataFrame = {
+    val dir = edgePrep(s, bothWays(coPurchaseEdges(s, d), "src", "dst"), "src")
     val deg = dir.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("deg")).cut()
-    val nD = deg.count().toDouble
+    val nS = deg.filter(seed(col("node"))).count().toDouble
     var r = deg.select(col("node"), col("deg"),
-      bround(lit(1.0) / nD, 12).as("rank"))
-    // one pinned iteration, lazily — identical arithmetic to the oracle.
+      when(seed(col("node")), bround(lit(1.0) / nS, 12))
+        .otherwise(lit(0.0)).as("rank"))
     // UNION-form round (r15, guide §2.4 — the shape that fixed the CC
     // fixpoint): the per-edge contributions and deg's own row per node
     // ride ONE groupBy instead of `groupBy + deg LEFT JOIN broadcast(sums)`
@@ -197,20 +211,20 @@ object Graph extends graft.QueryModule {
     // sc = NULL → coalesce 0.0, bit-identical to the join-miss path).
     // Saves one broadcast-build job + one join per checkpointed round.
     def round(prev: DataFrame): DataFrame = {
-      val contrib =
-        (if (bcast) broadcast(prev) else prev)
-          .join(dir, col("node") === col("src"))
-          .select(col("dst"),
-            bround(col("rank") / col("deg"), 12).cast("decimal(24,12)").as("c"),
-            lit(null).cast("long").as("dg"))
+      val contrib = maybeBroadcast(s, prev)
+        .join(dir, col("node") === col("src"))
+        .select(col("dst"),
+          bround(col("rank") / col("deg"), 12).cast("decimal(24,12)").as("c"),
+          lit(null).cast("long").as("dg"))
       val own = deg.select(col("node").as("dst"),
         lit(null).cast("decimal(24,12)").as("c"), col("deg").as("dg"))
       contrib.unionAll(own)
         .groupBy(col("dst"))
         .agg(sum(col("c")).as("sc"), max(col("dg")).as("dg"))
         .select(col("dst").as("node"), col("dg").as("deg"),
-          bround(lit(0.15) / nD +
-            lit(0.85) * coalesce(col("sc").cast("double"), lit(0.0)), 12)
+          bround(
+            when(seed(col("dst")), lit(0.15) / nS).otherwise(lit(0.0)) +
+              lit(0.85) * coalesce(col("sc").cast("double"), lit(0.0)), 12)
             .as("rank"))
     }
     // ONE pinned iteration per checkpoint (r15: the r14 two-per-cut
@@ -221,8 +235,13 @@ object Graph extends graft.QueryModule {
     // With <=5 iterations per key the saved barriers never paid for the
     // duplicated subplan.)
     for (_ <- 1 to prIters) r = round(r).cut()
-    r.select(col("node"), bround(col("rank"), 8).as("rank")).orderBy("node")
+    r
   }
+
+  /** Global PageRank: [[pinnedRank]] with every vertex a seed. */
+  private def pageRank(s: SparkSession, d: String): DataFrame =
+    pinnedRank(s, d, _ => lit(true))
+      .select(col("node"), bround(col("rank"), 8).as("rank")).orderBy("node")
 
   /** The oracle unrolls the same pinned iteration `prIters` times as
     * chained CTEs (generated — the md5-twin discipline): every
@@ -260,61 +279,19 @@ object Graph extends graft.QueryModule {
        |FROM r$prIters ORDER BY node""".stripMargin
   }
 
-  private val pprIters = 5
-
   /** Personalized PageRank [N] (the topic-sensitive variant, Haveliwala
     * 2002): random-walk-with-restart where ALL teleport mass returns to
     * a seed set (here parts with key ≡ 0 mod 10 — a deterministic 10%
     * "catalog section") instead of spreading uniformly — the
     * recommendation / related-items primitive global PageRank cannot
     * express (global PR ranks hubs; PPR ranks proximity TO THE SEEDS).
-    * Same cross-engine-deterministic iteration as [[pageRank]]: each
-    * per-edge contribution pins at 12dp so the neighbor sum is an exact
-    * decimal, the damped rank re-pins at 12dp, `localCheckpoint` cuts
-    * lineage per round. Non-seed restart mass is exactly 0.0, so seed
-    * proximity decays visibly with distance (Round9bSpec asserts the
-    * seed mass dominates). Plan shape per iteration: one equi-join rank×
-    * edges + one hash agg — broadcast and shuffle layouts both
-    * hash-exact, exactly like [[pageRank]]. */
-  private def personalizedPageRank(s: SparkSession, d: String): DataFrame = {
-    val bcast = vertexBroadcast(s)
-    val e = coPurchaseEdges(s, d)
-    val dirRaw = e.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(e.select(col("b").as("src"), col("a").as("dst")))
-    val dir =
-      if (bcast) dirRaw.cut()
-      else dirRaw.repartition(col("src")).cut()
-    val deg = dir.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("deg")).cut()
-    val nS = deg.filter(col("node") % 10 === 0).count().toDouble
-    var r = deg.select(col("node"), col("deg"),
-      when(col("node") % 10 === 0, bround(lit(1.0) / nS, 12))
-        .otherwise(lit(0.0)).as("rank"))
-    // union-form round (r15) — see [[pageRank]]; identical mechanics,
-    // only the restart term differs (seed-gated instead of uniform)
-    def round(prev: DataFrame): DataFrame = {
-      val contrib =
-        (if (bcast) broadcast(prev) else prev)
-          .join(dir, col("node") === col("src"))
-          .select(col("dst"),
-            bround(col("rank") / col("deg"), 12).cast("decimal(24,12)").as("c"),
-            lit(null).cast("long").as("dg"))
-      val own = deg.select(col("node").as("dst"),
-        lit(null).cast("decimal(24,12)").as("c"), col("deg").as("dg"))
-      contrib.unionAll(own)
-        .groupBy(col("dst"))
-        .agg(sum(col("c")).as("sc"), max(col("dg")).as("dg"))
-        .select(col("dst").as("node"), col("dg").as("deg"),
-          bround(
-            when(col("dst") % 10 === 0, lit(0.15) / nS).otherwise(lit(0.0)) +
-              lit(0.85) * coalesce(col("sc").cast("double"), lit(0.0)), 12)
-            .as("rank"))
-    }
-    // one pinned iteration per checkpoint (r15 revert — see pageRank)
-    for (_ <- 1 to pprIters) r = round(r).cut()
-    r.select(col("node"), (col("node") % 10 === 0).as("is_seed"),
-      bround(col("rank"), 8).as("rank")).orderBy("node")
-  }
+    * The iteration is [[pinnedRank]]'s. Non-seed restart mass is exactly
+    * 0.0, so seed proximity decays visibly with distance (Round9bSpec
+    * asserts the seed mass dominates). */
+  private def personalizedPageRank(s: SparkSession, d: String): DataFrame =
+    pinnedRank(s, d, _ % 10 === 0)
+      .select(col("node"), (col("node") % 10 === 0).as("is_seed"),
+        bround(col("rank"), 8).as("rank")).orderBy("node")
 
   /** Unrolled-CTE oracle, generated like [[pageRankOracle]] — every
     * pin, cast, and float op mirrored token-for-token. */
@@ -335,7 +312,7 @@ object Graph extends graft.QueryModule {
         |         CASE WHEN node % 10 = 0 THEN round_even(1.0 / ns.ns, 12)
         |              ELSE 0.0 END AS rank
         |  FROM deg, ns)""".stripMargin
-    val iters = (1 to pprIters).map { i =>
+    val iters = (1 to prIters).map { i =>
       s"""r$i AS MATERIALIZED (
          |  SELECT d.node, d.deg,
          |         round_even(CASE WHEN d.node % 10 = 0 THEN 0.15 / ns.ns
@@ -352,7 +329,7 @@ object Graph extends graft.QueryModule {
     s"""$base,
        |$iters
        |SELECT node, node % 10 = 0 AS is_seed, round_even(rank, 8) AS rank
-       |FROM r$pprIters ORDER BY node""".stripMargin
+       |FROM r$prIters ORDER BY node""".stripMargin
   }
 
   private val walkLen = 4
@@ -375,9 +352,7 @@ object Graph extends graft.QueryModule {
     * frontier stays seed-set-sized, the |E|-row side is checkpointed
     * once. No per-walk driver work, no quadratic stage. */
   private def randomWalks(s: SparkSession, d: String): DataFrame = {
-    val e = coPurchaseEdges(s, d)
-    val dir = e.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(e.select(col("b").as("src"), col("a").as("dst")))
+    val dir = bothWays(coPurchaseEdges(s, d), "src", "dst")
     val wAdj = Window.partitionBy(col("src")).orderBy(col("dst"))
     val adj = dir.select(col("src").as("a_src"), col("dst").as("a_dst"),
         (row_number().over(wAdj) - 1).cast("long").as("a_rn"))
@@ -471,10 +446,7 @@ object Graph extends graft.QueryModule {
     * shared checkpointed relation. No quadratic stage, no driver-side
     * walk state. */
   private def node2vecWalks(s: SparkSession, d: String): DataFrame = {
-    val e = coPurchaseEdges(s, d)
-    val dir = e.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(e.select(col("b").as("src"), col("a").as("dst")))
-      .cut()
+    val dir = bothWays(coPurchaseEdges(s, d), "src", "dst").cut()
     val deg = dir.groupBy(col("src").as("d_src"))
       .agg(count(lit(1)).as("deg")).cut()
     val edgeFlag = dir.select(col("src").as("e_src"), col("dst").as("e_dst"),
@@ -593,22 +565,6 @@ object Graph extends graft.QueryModule {
 
   private val lpIters = 3
 
-  /** Label-propagation community detection [N] (Raghavan et al. 2007),
-    * made DETERMINISTIC: synchronous rounds, every vertex adopts the
-    * MODE of its neighbors' current labels with ties broken by the
-    * smallest label (the original's random tie-break and asynchronous
-    * order are the known nondeterminism sources — fixing both gives a
-    * cross-engine hash-exact algorithm with no float in sight). Fixed
-    * `lpIters` rounds; output is the community profile (size + min
-    * member per label).
-    *
-    * Plan shape per round: one equi-join labels×edges + one hash agg +
-    * one per-vertex row_number — integer-only, so both layouts are
-    * trivially hash-exact: broadcast mode ships the |V|-row label table
-    * to the pre-checkpointed edge table; shuffle mode
-    * (BroadcastConf=false) pre-partitions the edges on `u` once and
-    * each round shuffles only the labels — the |E| side never moves,
-    * the 100 TB posture shared with [[pageRank]] and [[bfs]]. */
   /** Hubs (parts in many orders) weld everything into one giant
     * community — label prop is only informative on the sparse part of
     * the graph, so restrict to vertices of degree ≤ cap, exactly like
@@ -616,28 +572,20 @@ object Graph extends graft.QueryModule {
   private val LpDegCap = 100
 
   /** The label-prop fixpoint state: (capped edge set, per-vertex final
-    * labels) — shared by [[labelProp]] and [[modularity]]. */
+    * labels) — shared by [[labelProp]] and [[modularity]]. Plan shape per
+    * round: one equi-join labels×edges + two hash aggs — integer-only, so
+    * both layouts of [[edgePrep]] (here keyed on `u`, the label side) are
+    * trivially hash-exact. */
   private def labelPropState(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val bcast = vertexBroadcast(s)
     val e0 = coPurchaseEdges(s, d)
-    val keep = e0.select(col("a").as("x")).unionAll(e0.select(col("b").as("x")))
-      .groupBy(col("x")).agg(count(lit(1)).as("dg"))
-      .filter(col("dg") <= LpDegCap).select(col("x"))
-    val e = e0
-      .join(maybeBroadcast(s, keep.withColumnRenamed("x", "a")), Seq("a"),
-        "left_semi")
-      .join(maybeBroadcast(s, keep.withColumnRenamed("x", "b")), Seq("b"),
-        "left_semi")
+    val e = induced(s, e0,
+      degrees(e0).filter(col("deg") <= LpDegCap).select(col("v")))
     // (v, u): u ranges over v's neighbors; join key is u (the label side)
-    val undRaw = e.select(col("a").as("v"), col("b").as("u"))
-      .unionAll(e.select(col("b").as("v"), col("a").as("u")))
-    val und =
-      if (bcast) undRaw.cut()
-      else undRaw.repartition(col("u")).cut()
+    val und = edgePrep(s, bothWays(e, "v", "u"), "u")
     var lab = und.select(col("v")).distinct()
       .select(col("v"), col("v").as("lbl")).cut()
     def lpRound(prev: DataFrame): DataFrame = {
-      val nbr = (if (bcast) broadcast(prev) else prev)
+      val nbr = maybeBroadcast(s, prev)
         .withColumnRenamed("v", "u")
         .join(und, "u")
       // mode with smallest-label tie-break as ONE hash agg:
@@ -649,11 +597,19 @@ object Graph extends graft.QueryModule {
         .agg(max(struct(col("cnt"), (-col("lbl")).as("neg"))).as("m"))
         .select(col("v"), (-col("m.neg")).as("lbl"))
     }
-    // one round per checkpoint (r15 revert — see pageRank)
+    // one round per checkpoint (r15 revert — see pinnedRank)
     for (_ <- 1 to lpIters) lab = lpRound(lab).cut()
     (e, lab)
   }
 
+  /** Label-propagation community detection [N] (Raghavan et al. 2007),
+    * made DETERMINISTIC: synchronous rounds, every vertex adopts the
+    * MODE of its neighbors' current labels with ties broken by the
+    * smallest label (the original's random tie-break and asynchronous
+    * order are the known nondeterminism sources — fixing both gives a
+    * cross-engine hash-exact algorithm with no float in sight). Fixed
+    * `lpIters` rounds; output is the community profile (size + min
+    * member per label). */
   private def labelProp(s: SparkSession, d: String): DataFrame = {
     val (_, lab) = labelPropState(s, d)
     lab.groupBy(col("lbl").as("community"))
@@ -680,13 +636,11 @@ object Graph extends graft.QueryModule {
   private def modularity(s: SparkSession, d: String): DataFrame = {
     val (eRaw, lab) = labelPropState(s, d)
     val e = eRaw.cut()
-    def dec(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      c.cast("decimal(19,0)")
+    def dec(c: Column): Column = c.cast("decimal(19,0)")
     val labFor = (k: String) => maybeBroadcast(s,
       lab.select(col("v").as(k), col("lbl").as(s"lbl_$k")))
     val mRow = e.agg(count(lit(1)).as("m"))
-    val deg = e.select(col("a").as("v")).unionAll(e.select(col("b").as("v")))
-      .groupBy(col("v")).agg(count(lit(1)).as("deg"))
+    val deg = degrees(e)
     val ein = e.join(labFor("a"), "a").join(labFor("b"), "b")
       .filter(col("lbl_a") === col("lbl_b"))
       .groupBy(col("lbl_a").as("community"))
@@ -777,47 +731,83 @@ object Graph extends graft.QueryModule {
 
   private val bfsRounds = 4
 
-  /** Multi-source BFS [N]: shortest hop-distance (≤ `bfsRounds`) from a
-    * deterministic seed set (node ≡ 0 mod 101) over the co-purchase
-    * graph. Pure INTEGER iteration — min-distance propagation needs no
-    * float pinning at all, so both layouts are trivially hash-exact:
-    * broadcast mode ships the ≤|V|-row frontier to the pre-checkpointed
-    * edge table; shuffle mode (BroadcastConf=false) pre-partitions the
-    * edges on `src` once and each round shuffles only the frontier —
-    * the |E| side never moves, the 100 TB posture shared with
-    * [[pageRank]]. Each round is one equi-join + one min-agg; the
-    * frontier stays ≤|V| rows because min-dist collapses paths. */
-  /** Closeness centrality [N] for the sampled source set (the same
-    * `node % 101 = 0` sources [[bfs]] expands), DEFINED within
-    * `bfsRounds` hops — the bounded-frontier contract that makes the
-    * measure computable in fixed rounds at any scale: per round one
-    * equi-join + one (src, node) min-aggregate, state ≤ sources×|V|.
-    * Unlike [[bfs]] the frontier keys on (source, node), so each
-    * source's distance field stays separate; closeness is the exact
-    * integer ratio (reached−1)/Σdist per source, one IEEE division —
-    * the harmonic variant would sum double reciprocals (partition-
-    * order-dependent), so the classic definition is the deterministic
-    * one. */
-  private def closeness(s: SparkSession, d: String): DataFrame = {
-    val bcast = vertexBroadcast(s)
-    val e = coPurchaseEdges(s, d)
-    val dirRaw = e.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(e.select(col("b").as("src"), col("a").as("dst")))
-    val dir =
-      if (bcast) dirRaw.cut()
-      else dirRaw.repartition(col("src")).cut()
-    var reach = dir.select(col("src").as("s0")).distinct()
-      .filter(pmod(col("s0"), lit(101)) === 0)
-      .select(col("s0"), col("s0").as("node"), lit(0).as("dist"))
+  /** The traversal seeds: vertices ≡ 0 mod 101 of the directed edge list
+    * `dir`, as one column `name`. */
+  private def sources(dir: DataFrame, name: String): DataFrame =
+    dir.select(col("src").as(name)).distinct()
+      .filter(pmod(col(name), lit(101)) === 0)
+
+  /** The bounded min-relaxation of [[bfs]], [[closeness]] and [[sssp]]:
+    * `bfsRounds` rounds from `init` (`carry` columns, node, dist) over the
+    * [[edgePrep]]'d edges `dir`, each hop adding `step` to dist. Pure
+    * INTEGER iteration — min-distance propagation needs no float pinning,
+    * so both layouts are trivially hash-exact. Each round is one
+    * equi-join + one (carry, node) min-aggregate with the lineage cut;
+    * the state stays ≤ (distinct carry values)×|V| rows because the min
+    * collapses paths. */
+  private def minRelax(s: SparkSession, dir: DataFrame, init: DataFrame,
+                       carry: Seq[String], step: Column): DataFrame = {
+    var reach = init
+    // one relaxation per checkpoint (r15 revert — the round references
+    // `reach` twice (the |E|-join AND the unionAll), so a nested
+    // round(round(reach)) recomputed the inner edge join per action;
+    // measured sssp 2.19 -> 2.56 s at sf0.1)
     for (_ <- 1 to bfsRounds) {
-      val next = (if (bcast) broadcast(reach) else reach)
+      val next = maybeBroadcast(s, reach)
         .join(dir, col("node") === col("src"))
-        .select(col("s0"), col("dst").as("node"), (col("dist") + 1).as("dist"))
+        .select(carry.map(col) :+ col("dst").as("node") :+
+          (col("dist") + step).as("dist"): _*)
       reach = reach.unionAll(next)
-        .groupBy(col("s0"), col("node")).agg(min(col("dist")).as("dist"))
+        .groupBy((carry :+ "node").map(col): _*)
+        .agg(min(col("dist")).as("dist"))
         .cut()
     }
-    reach.groupBy(col("s0").as("source"))
+    reach
+  }
+
+  /** Multi-source BFS [N]: shortest hop-distance (≤ `bfsRounds`) from the
+    * [[sources]] over the co-purchase graph, by [[minRelax]]. */
+  private def bfs(s: SparkSession, d: String): DataFrame = {
+    val dir = edgePrep(s, bothWays(coPurchaseEdges(s, d), "src", "dst"), "src")
+    minRelax(s, dir, sources(dir, "node").withColumn("dist", lit(0)), Nil,
+      lit(1)).orderBy("node")
+  }
+
+  /** Bounded-depth recursive CTE: `UNION` (not ALL) keeps each level's
+    * working set to distinct (node, dist) pairs — ≤|V| per level, never
+    * the path-combinatorial blowup — and min(dist) at the end is
+    * exactly the BFS distance. */
+  private def bfsOracle: String =
+    s"""WITH RECURSIVE edges AS (
+       |  SELECT DISTINCT l1.l_partkey AS a, l2.l_partkey AS b
+       |  FROM lineitem l1 JOIN lineitem l2
+       |    ON l1.l_orderkey = l2.l_orderkey AND l1.l_partkey < l2.l_partkey),
+       |dir AS (SELECT a AS src, b AS dst FROM edges
+       |        UNION ALL SELECT b, a FROM edges),
+       |walk(node, dist) AS (
+       |  SELECT DISTINCT src, 0 FROM dir WHERE src % 101 = 0
+       |  UNION
+       |  SELECT dir.dst, w.dist + 1
+       |  FROM walk w JOIN dir ON w.node = dir.src
+       |  WHERE w.dist < $bfsRounds)
+       |SELECT node, CAST(min(dist) AS INTEGER) AS dist
+       |FROM walk GROUP BY node ORDER BY node""".stripMargin
+
+  /** Closeness centrality [N] for the sampled source set (the same
+    * [[sources]] [[bfs]] expands), DEFINED within `bfsRounds` hops — the
+    * bounded-frontier contract that makes the measure computable in
+    * fixed rounds at any scale. Unlike [[bfs]] the [[minRelax]] state
+    * keys on (source, node), so each source's distance field stays
+    * separate; closeness is the exact integer ratio (reached−1)/Σdist per
+    * source, one IEEE division — the harmonic variant would sum double
+    * reciprocals (partition-order-dependent), so the classic definition
+    * is the deterministic one. */
+  private def closeness(s: SparkSession, d: String): DataFrame = {
+    val dir = edgePrep(s, bothWays(coPurchaseEdges(s, d), "src", "dst"), "src")
+    val init = sources(dir, "s0")
+      .select(col("s0"), col("s0").as("node"), lit(0).as("dist"))
+    minRelax(s, dir, init, Seq("s0"), lit(1))
+      .groupBy(col("s0").as("source"))
       .agg(count(lit(1)).as("n_reached"), sum(col("dist")).as("total_dist"))
       .selectExpr("source", "cast(n_reached as bigint) as n_reached",
         "cast(total_dist as bigint) as total_dist",
@@ -847,85 +837,21 @@ object Graph extends graft.QueryModule {
        |         AS closeness
        |FROM md GROUP BY s0 ORDER BY source""".stripMargin
 
-  private def bfs(s: SparkSession, d: String): DataFrame = {
-    val bcast = vertexBroadcast(s)
-    val e = coPurchaseEdges(s, d)
-    val dirRaw = e.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(e.select(col("b").as("src"), col("a").as("dst")))
-    val dir =
-      if (bcast) dirRaw.cut()
-      else dirRaw.repartition(col("src")).cut()
-    var reach = dir.select(col("src").as("node")).distinct()
-      .filter(pmod(col("node"), lit(101)) === 0)
-      .withColumn("dist", lit(0))
-    for (_ <- 1 to bfsRounds) {
-      val next = (if (bcast) broadcast(reach) else reach)
-        .join(dir, col("node") === col("src"))
-        .select(col("dst").as("node"), (col("dist") + 1).as("dist"))
-      reach = reach.unionAll(next)
-        .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-        .cut()
-    }
-    reach.orderBy("node")
-  }
-
-  /** Bounded-depth recursive CTE: `UNION` (not ALL) keeps each level's
-    * working set to distinct (node, dist) pairs — ≤|V| per level, never
-    * the path-combinatorial blowup — and min(dist) at the end is
-    * exactly the BFS distance. */
-  private def bfsOracle: String =
-    s"""WITH RECURSIVE edges AS (
-       |  SELECT DISTINCT l1.l_partkey AS a, l2.l_partkey AS b
-       |  FROM lineitem l1 JOIN lineitem l2
-       |    ON l1.l_orderkey = l2.l_orderkey AND l1.l_partkey < l2.l_partkey),
-       |dir AS (SELECT a AS src, b AS dst FROM edges
-       |        UNION ALL SELECT b, a FROM edges),
-       |walk(node, dist) AS (
-       |  SELECT DISTINCT src, 0 FROM dir WHERE src % 101 = 0
-       |  UNION
-       |  SELECT dir.dst, w.dist + 1
-       |  FROM walk w JOIN dir ON w.node = dir.src
-       |  WHERE w.dist < $bfsRounds)
-       |SELECT node, CAST(min(dist) AS INTEGER) AS dist
-       |FROM walk GROUP BY node ORDER BY node""".stripMargin
-
   /** Bounded multi-source single-source-shortest-path [N] — the
     * weighted twin of [[bfs]]: min-PLUS relaxation instead of min-hop,
     * with a pure-integer edge weight derived from the endpoint keys
     * (`(a + b) mod 7 + 1`, so both engines agree on every weight
-    * without a stored column). `bfsRounds` relaxation rounds give the
-    * exact shortest distance over paths of ≤ that many edges — the
-    * bounded-frontier contract that keeps each round one equi-join +
-    * one min-aggregate, `|V|`-bounded state, lineage cut per round.
-    * All-integer arithmetic, so broadcast and shuffle layouts are
-    * hash-identical (GraphSpec) and the recursive-CTE oracle can
-    * enumerate the same bounded path space exactly: distances are
-    * ≤ 7·rounds, so the UNION-dedup'd working set stays tiny. */
+    * without a stored column). `bfsRounds` [[minRelax]] rounds give the
+    * exact shortest distance over paths of ≤ that many edges. All-integer
+    * arithmetic, so broadcast and shuffle layouts are hash-identical
+    * (GraphSpec) and the recursive-CTE oracle can enumerate the same
+    * bounded path space exactly: distances are ≤ 7·rounds, so the
+    * UNION-dedup'd working set stays tiny. */
   private def sssp(s: SparkSession, d: String): DataFrame = {
-    val bcast = vertexBroadcast(s)
-    val e = coPurchaseEdges(s, d)
-    val dirRaw = e.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(e.select(col("b").as("src"), col("a").as("dst")))
-      .withColumn("w", pmod(col("src") + col("dst"), lit(7)) + 1)
-    val dir =
-      if (bcast) dirRaw.cut()
-      else dirRaw.repartition(col("src")).cut()
-    var reach = dir.select(col("src").as("node")).distinct()
-      .filter(pmod(col("node"), lit(101)) === 0)
-      .withColumn("dist", lit(0L))
-    def relax(prev: DataFrame): DataFrame = {
-      val next = (if (bcast) broadcast(prev) else prev)
-        .join(dir, col("node") === col("src"))
-        .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
-      prev.unionAll(next)
-        .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-    }
-    // one relaxation per checkpoint (r15 revert — `relax` references
-    // `prev` twice (the |E|-join AND the unionAll), so the nested
-    // relax(relax(reach)) recomputed the inner relaxation's edge join
-    // per action; driver measured sssp 2.19 -> 2.56 s)
-    for (_ <- 1 to bfsRounds) reach = relax(reach).cut()
-    reach.orderBy("node")
+    val dir = edgePrep(s, bothWays(coPurchaseEdges(s, d), "src", "dst")
+      .withColumn("w", pmod(col("src") + col("dst"), lit(7)) + 1), "src")
+    minRelax(s, dir, sources(dir, "node").withColumn("dist", lit(0L)), Nil,
+      col("w")).orderBy("node")
   }
 
   private def ssspOracle: String =
@@ -944,43 +870,54 @@ object Graph extends graft.QueryModule {
        |SELECT node, CAST(min(dist) AS BIGINT) AS dist
        |FROM walk GROUP BY node ORDER BY node""".stripMargin
 
+  /** Keeps the low-degree fringe of the (dense) co-purchase graph:
+    * the synthetic graph's median degree is ~115 at every SF, so 80
+    * retains ~5% of vertices with a hard |V|·C(cap,2) wedge bound —
+    * measured 227 candidate pairs at sf0.01, 2032 at sf0.1. */
+  private val JaccardDegCap = 80
+
+  /** The capped neighbour relation (v, n) of the link-prediction keys:
+    * both directions of every edge whose endpoints both have degree ≤
+    * [[JaccardDegCap]]. */
+  private def cappedNeighbours(s: SparkSession, e: DataFrame): DataFrame = {
+    val keep = degrees(e).filter(col("deg") <= JaccardDegCap).select(col("v"))
+    bothWays(e, "v", "n")
+      .join(maybeBroadcast(s, keep), "v")
+      .join(maybeBroadcast(s, keep.withColumnRenamed("v", "n")), "n")
+      .select(col("v"), col("n"))
+  }
+
+  /** Per vertex of the neighbour relation `nbrs`, its sorted list `ns`. */
+  private def neighbourLists(nbrs: DataFrame): DataFrame =
+    nbrs.groupBy(col("v")).agg(sort_array(collect_set(col("n"))).as("ns"))
+
+  /** The candidate pairs (x, y) that are not already edges of `e`. */
+  private def nonEdges(pairs: DataFrame, e: DataFrame): DataFrame =
+    pairs.join(e, pairs("x") === e("a") && pairs("y") === e("b"), "left_anti")
+
   /** Common-neighbor Jaccard link prediction [N]: for every 2-hop
     * vertex pair that is NOT already an edge, |N(x)∩N(y)| / |N(x)∪N(y)|,
     * top-K by score. The wedge expansion is the quadratic hazard here
     * (Σ deg² blows up on hubs), so the operator is DEFINED over the
-    * super-node-filtered subgraph — vertices above [[JaccardDegCap]]
-    * drop before anything fans out, the standard production guard
-    * (hub-mediated candidates are low-signal anyway: a part in every
-    * order "links" everything). That bounds the wedge stage at
-    * |V|·cap² rows regardless of data scale; everything else is hash
-    * aggs and equi-joins on vertex keys, with the vertex-domain degree
-    * lookups behind the same [[maybeBroadcast]] conf as the rest of
-    * the graph family. Scoring is one exact long/long IEEE division
-    * per pair — no rounding needed — and the top-K order is fully
-    * tie-broken (score desc, x, y), so the emitted set is
-    * deterministic at any partitioning. */
+    * super-node-filtered subgraph ([[cappedNeighbours]]) — vertices
+    * above [[JaccardDegCap]] drop before anything fans out, the standard
+    * production guard (hub-mediated candidates are low-signal anyway: a
+    * part in every order "links" everything). That bounds the wedge
+    * stage at |V|·cap² rows regardless of data scale; everything else is
+    * hash aggs and equi-joins on vertex keys, with the vertex-domain
+    * degree lookups behind [[maybeBroadcast]]. Scoring is one exact
+    * long/long IEEE division per pair — no rounding needed — and the
+    * top-K order is fully tie-broken (score desc, x, y), so the emitted
+    * set is deterministic at any partitioning. */
   private def jaccardNeighbors(s: SparkSession, d: String): DataFrame = {
     val e = coPurchaseEdges(s, d)
-    val und = e.select(col("a").as("v"), col("b").as("n"))
-      .unionAll(e.select(col("b").as("v"), col("a").as("n")))
-    val deg = und.groupBy(col("v")).agg(count(lit(1)).as("deg"))
-    val keep = deg.filter(col("deg") <= JaccardDegCap).select(col("v"))
-    val undF = und
-      .join(maybeBroadcast(s, keep), "v")
-      .join(maybeBroadcast(s, keep.withColumnRenamed("v", "n")), "n")
-      .select(col("v"), col("n"))
+    val undF = cappedNeighbours(s, e)
     val degF = undF.groupBy(col("v")).agg(count(lit(1)).as("degf"))
-    val pairs = undF
-      .groupBy(col("v"))
-      .agg(sort_array(collect_set(col("n"))).as("ns"))
-      .select(explode(expr(
-        """flatten(transform(ns, (x, i) ->
-          |  transform(slice(ns, i + 2, size(ns)),
-          |            y -> struct(x AS a, y AS b))))""".stripMargin)).as("p"))
+    val pairs = neighbourLists(undF)
+      .select(ascendingPairs("ns").as("p"))
       .select(col("p.a").as("x"), col("p.b").as("y"))
       .groupBy(col("x"), col("y")).agg(count(lit(1)).as("common"))
-    pairs
-      .join(e, pairs("x") === e("a") && pairs("y") === e("b"), "left_anti")
+    nonEdges(pairs, e)
       .join(maybeBroadcast(s,
         degF.select(col("v").as("x"), col("degf").as("dx"))), "x")
       .join(maybeBroadcast(s,
@@ -1004,41 +941,21 @@ object Graph extends graft.QueryModule {
     * by |V|·C(cap,2), never by part popularity. */
   private def adamicAdar(s: SparkSession, d: String): DataFrame = {
     val e = coPurchaseEdges(s, d)
-    val und = e.select(col("a").as("v"), col("b").as("n"))
-      .unionAll(e.select(col("b").as("v"), col("a").as("n")))
-    val deg = und.groupBy(col("v")).agg(count(lit(1)).as("deg"))
-    val keep = deg.filter(col("deg") <= JaccardDegCap).select(col("v"))
-    val undF = und
-      .join(maybeBroadcast(s, keep), "v")
-      .join(maybeBroadcast(s, keep.withColumnRenamed("v", "n")), "n")
-      .select(col("v"), col("n"))
-    val pairs = undF
-      .groupBy(col("v"))
-      .agg(sort_array(collect_set(col("n"))).as("ns"))
+    val pairs = neighbourLists(cappedNeighbours(s, e))
       .filter(size(col("ns")) >= 2)
       .select(
         bround(lit(1.0) / log(size(col("ns")).cast("double")), 6)
           .cast("decimal(16,6)").as("w"),
-        explode(expr(
-          """flatten(transform(ns, (x, i) ->
-            |  transform(slice(ns, i + 2, size(ns)),
-            |            y -> struct(x AS a, y AS b))))""".stripMargin)).as("p"))
+        ascendingPairs("ns").as("p"))
       .select(col("p.a").as("x"), col("p.b").as("y"), col("w"))
       .groupBy(col("x"), col("y"))
       .agg(count(lit(1)).as("common"), sum(col("w")).as("aa"))
-    pairs
-      .join(e, pairs("x") === e("a") && pairs("y") === e("b"), "left_anti")
+    nonEdges(pairs, e)
       .select(col("x"), col("y"), col("common"),
         col("aa").cast("double").as("adamic_adar"))
       .orderBy(desc("adamic_adar"), col("x"), col("y"))
       .limit(100)
   }
-
-  /** Keeps the low-degree fringe of the (dense) co-purchase graph:
-    * the synthetic graph's median degree is ~115 at every SF, so 80
-    * retains ~5% of vertices with a hard |V|·C(cap,2) wedge bound —
-    * measured 227 candidate pairs at sf0.01, 2032 at sf0.1. */
-  private val JaccardDegCap = 80
 
   private val KCoreK = 60
   private val KCoreRounds = 4
@@ -1063,21 +980,10 @@ object Graph extends graft.QueryModule {
     * plan survives an unbounded vertex domain. */
   private def kcore(s: SparkSession, d: String): DataFrame = {
     var edges = coPurchaseEdges(s, d)
-    for (_ <- 1 to KCoreRounds) {
-      val deg = edges.select(col("a").as("v"))
-        .unionAll(edges.select(col("b").as("v")))
-        .groupBy(col("v")).agg(count(lit(1)).as("deg"))
-      val keep = deg.filter(col("deg") >= KCoreK).select(col("v"))
-      edges = edges
-        .join(maybeBroadcast(s, keep.withColumnRenamed("v", "a")), Seq("a"),
-          "left_semi")
-        .join(maybeBroadcast(s, keep.withColumnRenamed("v", "b")), Seq("b"),
-          "left_semi")
-        .cut()
-    }
-    edges.select(col("a").as("v")).unionAll(edges.select(col("b").as("v")))
-      .groupBy(col("v")).agg(count(lit(1)).as("deg"))
-      .orderBy("v")
+    for (_ <- 1 to KCoreRounds)
+      edges = induced(s, edges,
+        degrees(edges).filter(col("deg") >= KCoreK).select(col("v"))).cut()
+    degrees(edges).orderBy("v")
   }
 
   /** Oracle: the identical peel unrolled — degree, threshold, restrict,
@@ -1112,7 +1018,7 @@ object Graph extends graft.QueryModule {
     * to the degree vector), and the orientation is a pure function of
     * the data — no RNG, no tie-break ambiguity.
     *
-    * Pinning (the [[pageRank]]/[[EmbPca]] discipline): scores live as
+    * Pinning (the [[pinnedRank]]/[[EmbPca]] discipline): scores live as
     * decimal(13,12) in [0,1]; each half-round's neighbor sum is EXACT
     * decimal arithmetic, re-pins via the decimal-native `round(sum, 8)`
     * (half-away-from-zero in BOTH engines — Spark's bare decimal
@@ -1126,7 +1032,7 @@ object Graph extends graft.QueryModule {
     * the |V|-row score table each half-round; with [[BroadcastConf]]
     * off, the edge relation is pre-partitioned ONCE per join side (src
     * copy + dst copy, both checkpointed) and only the score table
-    * moves — the [[pageRank]] posture, doubled for the two directions. */
+    * moves — the [[edgePrep]] posture, doubled for the two directions. */
   private[graft] def hitsIterate(s: SparkSession, edges: DataFrame)
       : DataFrame = {
     val bcast = vertexBroadcast(s)
@@ -1165,8 +1071,7 @@ object Graph extends graft.QueryModule {
     val wAll = Window.partitionBy()
     def halfRound(edgeSide: DataFrame, scores: DataFrame, joinKey: String,
                   groupKey: String, outCol: String): DataFrame = {
-      val raw = edgeSide.join(
-          if (bcast) broadcast(scores) else scores,
+      val raw = edgeSide.join(maybeBroadcast(s, scores),
           col(joinKey) === col("node"))
         .groupBy(col(groupKey))
         .agg(round(sum(scores.columns.last), 8).cast("decimal(18,8)").as("r_"))
@@ -1199,8 +1104,8 @@ object Graph extends graft.QueryModule {
     // scan avoids the SortMergeJoin (two exchanges + two sorts) that
     // joining two independently-expanded |V|-row tables would cost.
     nodes
-      .join(if (bcast) broadcast(h) else h, Seq("node"), "left")
-      .join(if (bcast) broadcast(a) else a, Seq("node"), "left")
+      .join(maybeBroadcast(s, h), Seq("node"), "left")
+      .join(maybeBroadcast(s, a), Seq("node"), "left")
       .select(col("node"),
         bround(coalesce(col("hs"), lit(0).cast("decimal(13,12)"))
           .cast("double"), 8).as("hub"),
@@ -1268,12 +1173,9 @@ object Graph extends graft.QueryModule {
     * family), one global agg. */
   private def assortativity(s: SparkSession, d: String): DataFrame = {
     val e0 = coPurchaseEdges(s, d)
-    def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(19,0)")
-    val deg = e0.select(col("a").as("v")).unionAll(e0.select(col("b").as("v")))
-      .groupBy(col("v")).agg(count(lit(1)).as("deg"))
-    val pairs = e0.select(col("a").as("x"), col("b").as("y"))
-      .unionAll(e0.select(col("b").as("x"), col("a").as("y")))
-    val sums = pairs
+    def dec(c: Column) = c.cast("decimal(19,0)")
+    val deg = degrees(e0)
+    val sums = bothWays(e0, "x", "y")
       .join(maybeBroadcast(s, deg.select(col("v").as("x"), col("deg").as("j"))),
         "x")
       .join(maybeBroadcast(s, deg.select(col("v").as("y"), col("deg").as("k"))),
@@ -1304,8 +1206,8 @@ object Graph extends graft.QueryModule {
       s"ELSE 0 END)"
 
   /** Betweenness centrality [N] — truncated Brandes (2001) from the
-    * sampled source set (`node % 101 = 0`, the [[bfs]]/[[closeness]]
-    * seeds), paths bounded at `bfsRounds` hops: the standard
+    * sampled source set (the [[sources]] [[minRelax]] expands), paths
+    * bounded at `bfsRounds` hops: the standard
     * sampled+bounded estimator used at scale (exact betweenness is
     * all-pairs). Forward pass: level-synchronous BFS carrying EXACT
     * integer shortest-path counts σ (decimal(38,0) — σ is a pure sum
@@ -1320,19 +1222,13 @@ object Graph extends graft.QueryModule {
     *
     * Scale shape: per level one frontier⋈edges equi-join + one
     * (source, node) hash agg — frontier ≤ sources×|V|, the edge side
-    * never re-shuffles in shuffle mode (same dual layout as
-    * [[pageRank]]/[[closeness]] behind [[BroadcastConf]]). Levels are
-    * bounded (4), sources are a fixed 1/101 sample: the whole pass is
+    * never re-shuffles in shuffle mode (the dual layout of
+    * [[edgePrep]]). Levels are bounded (4), sources are a fixed 1/101
+    * sample: the whole pass is
     * 7 bounded rounds of joins at any corpus size. */
   private def betweenness(s: SparkSession, d: String): DataFrame = {
-    val bcast = vertexBroadcast(s)
-    val e = coPurchaseEdges(s, d)
-    val dirRaw = e.select(col("a").as("src"), col("b").as("dst"))
-      .unionAll(e.select(col("b").as("src"), col("a").as("dst")))
-    val dir = if (bcast) dirRaw.cut()
-              else dirRaw.repartition(col("src")).cut()
-    val lev0 = dir.select(col("src").as("s0")).distinct()
-      .filter(pmod(col("s0"), lit(101)) === 0)
+    val dir = edgePrep(s, bothWays(coPurchaseEdges(s, d), "src", "dst"), "src")
+    val lev0 = sources(dir, "s0")
       .select(col("s0"), col("s0").as("node"), lit(1).cast("decimal(38,0)").as("sigma"))
       .cut()
     // forward: byDist(l) = nodes first reached at hop l, with exact σ
@@ -1340,7 +1236,7 @@ object Graph extends graft.QueryModule {
     var settled = lev0.select(col("s0"), col("node"))
     for (_ <- 1 to bfsRounds) {
       val frontier = byDist.last
-      val cand = (if (bcast) broadcast(frontier) else frontier)
+      val cand = maybeBroadcast(s, frontier)
         .join(dir, col("node") === col("src"))
         .groupBy(col("s0"), col("dst"))
         .agg(sum(col("sigma")).cast("decimal(38,0)").as("sigma"))

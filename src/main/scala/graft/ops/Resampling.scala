@@ -47,8 +47,8 @@ object Resampling extends graft.QueryModule {
 
   /** Spark: uniform 32-bit draw from md5 hex chars [lo, lo+8).
     * r14: `graft_hex_long` (codegen byte-window parse, HexToLongSpec
-    * pins equality with the previous conv form) — callers must have
-    * run [[graft.functions.VectorFunctions.register]]. */
+    * pins equality with the previous conv form), registered per session
+    * by [[graft.SparkEntry.queries]]. */
   private def sparkHex8(key: String, lo: Int): String =
     s"graft_hex_long(md5($key), $lo, 8)"
 
@@ -105,7 +105,6 @@ object Resampling extends graft.QueryModule {
     // byte-window parse (HexToLongSpec pins value equality with conv).
     // Probe A/B at sf0.1: the unpack stage 5.3 s -> ~2 s; same rows,
     // same draws, hash-identical output.
-    graft.functions.VectorFunctions.register(s)
     val base = Tables.orders(s, d)
       .repartition(s.sparkContext.defaultParallelism, col("o_orderkey"))
       .select(col("o_orderkey"), col("o_orderpriority").as("g"),
@@ -205,7 +204,6 @@ object Resampling extends graft.QueryModule {
   private val randB = 128
 
   private def randomization(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val base = Tables.orders(s, d)
       .select(col("o_orderkey"),
         expr("case when o_orderstatus = 'F' then 1 else 0 end").as("grp"),
@@ -293,7 +291,6 @@ object Resampling extends graft.QueryModule {
     * at the tiny documented cost of the u-mod-3 bias (2^-32) and the
     * magnitude cap at 8 (mass 0.4%). */
   private def dpCounts(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val u = sparkHex8("concat(event_type, ':dp')", 1)
     val v = sparkHex8("concat(event_type, ':dp')", 9)
     val g = geomCase("uv")
@@ -341,7 +338,6 @@ object Resampling extends graft.QueryModule {
     * rank cumsum windows run per (replicate × score-bin) — bounded —
     * and the final selection ranks B rows. */
   private def aucCi(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val u = sparkHex8(
       s"concat(cast(o_orderkey as string), '#', cast(b as string), ':auc')",
       1)

@@ -38,14 +38,7 @@ object Probe {
     val s = spark
     val d = sfDir
 
-    // NOTE (ADVICE r14): the filter constants below mirror
-    // Corpus.cleanPipeline's quality gate — if the pipeline's thresholds
-    // change, update these with them or the decomposition silently
-    // measures a different plan.
-    def docs = graft.Tables.documents(s, d)
-      .filter(col("n_chars") >= 100 &&
-        size(split(col("text"), " ")) >= 20 &&
-        col("lang").isin("en", "fr", "de"))
+    def docs = graft.ext.Corpus.gatedDocs(s, d)
     def exact() = docs
       .withColumn("h", md5(col("text")))
       .groupBy(col("h"))
@@ -139,10 +132,10 @@ object Probe {
         ", nodes = " + nodes.count())
       locally {
         val t0 = System.nanoTime()
-        val (lab, conv) = graft.ext.Dedup.connectedComponentsWithStatus(
+        val (lab, conv, rounds) = graft.ext.Dedup.connectedComponentsWithStatus(
           nodes, pairs, "doc_id", maxIter = 50)
         lab.write.format("noop").mode("overwrite").save()
-        println(f"[probe] cc_minlabel conv=$conv ${(System.nanoTime() - t0) / 1e9}%.2f s")
+        println(f"[probe] cc_minlabel rounds=$rounds conv=$conv ${(System.nanoTime() - t0) / 1e9}%.2f s")
       }
       locally {
         val t0 = System.nanoTime()

@@ -167,10 +167,7 @@ class CorpusSpec extends AnyFunSuite {
     // then show stage 4's cluster collapse drops docs whose text is NOT
     // byte-identical to their representative's — reworded near-dups the
     // md5 exact pass is blind to
-    val docs = graft.Tables.documents(spark, TestSpark.sf001)
-      .filter(col("n_chars") >= 100 &&
-        size(split(col("text"), " ")) >= 20 &&
-        col("lang").isin("en", "fr", "de"))
+    val docs = graft.ext.Corpus.gatedDocs(spark, TestSpark.sf001)
     val exact = docs
       .withColumn("h", md5(col("text")))
       .groupBy(col("h"))

@@ -155,9 +155,10 @@ class DedupSpec extends AnyFunSuite {
     val nodes = (1L to 4L).toDF("id")
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("i", "j")
     // one round cannot push label 1 three hops down the path
-    val (labels, converged) = Dedup.connectedComponentsWithStatus(
+    val (labels, converged, rounds) = Dedup.connectedComponentsWithStatus(
       nodes, edges, maxIter = 1)
     assert(!converged)
+    assert(rounds == 1)
     val got = labels.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     // partial but usable: one propagation round happened
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 2L, 4L -> 3L))
