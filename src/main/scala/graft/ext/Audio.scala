@@ -274,7 +274,7 @@ object Audio extends graft.QueryModule {
       .filter(col("votes") >= FpMinVotes)
 
   /** One micro-batch of incremental audio content-ID — the per-epoch
-    * core [[graft.streaming.Streams.audioFpDeltas]] runs inside
+    * core [[graft.streaming.Streams.epochDeltas]] runs inside
     * `foreachBatch` (the audio twin of `Dedup.dedupDelta` /
     * `SimSearch.knnGraphDelta`, completing the streaming index lifecycle
     * for the fingerprint family): the batch's documents are
@@ -294,34 +294,23 @@ object Audio extends graft.QueryModule {
     * nor double-counts votes. Returns the full match store as of this
     * epoch. */
   def audioFpDelta(batchIn: DataFrame, storeDir: String, epoch: Long): DataFrame = {
-    // fail loudly if a compaction swap is in flight (r14 lease contract)
-    graft.pipeline.StoreCompact.assertNotCompacting(storeDir)
     import graft.Ckpt.CutOps
-    val s = batchIn.sparkSession
+    val st = graft.pipeline.EpochStore(batchIn.sparkSession, storeDir)
+      .append(epoch)
     val batch = batchIn.select(col("doc_id"), col("text")).cut()
-    def writeEpoch(df: DataFrame, sub: String): Unit =
-      df.write.mode("overwrite").parquet(s"$storeDir/$sub/epoch=$epoch")
     // CROSS-epoch idempotence (ADVICE r11): a doc re-delivered under a
-    // DIFFERENT epoch (same-epoch replays are covered by the partition
-    // overwrite) would store its fingerprints twice and double-count
-    // votes — anti-join the batch against doc_ids already fingerprinted
-    // in PRIOR epochs, so only genuinely new docs extend the store.
-    val priorIds =
-      if (graft.Hfs.exists(s"$storeDir/fps"))
-        s.read.parquet(s"$storeDir/fps").filter(col("epoch") =!= epoch)
-          .select("doc_id").distinct()
-      else batch.select("doc_id").limit(0)
-    val newDocs = batch.join(priorIds, Seq("doc_id"), "left_anti").cut()
+    // DIFFERENT epoch would store its fingerprints twice and double-count
+    // votes — only docs no prior epoch fingerprinted extend the store
+    val newDocs = st.unseen(batch, "fps", "doc_id").cut()
     // the epoch's fingerprints land FIRST; the match join then reads the
     // delta back from its own partition and the full store as two
     // independent scans (a self-join of one in-memory plan here tripped
     // Catalyst's Union constraint rewrite over the checkpointed
     // fingerprint plan's stale origin constraints). On a replay the
     // overwrite lays down identical rows, so the store is unchanged.
-    writeEpoch(audioFingerprints(newDocs), "fps")
-    val deltaFps = s.read.parquet(s"$storeDir/fps/epoch=$epoch")
-    val allFps = s.read.parquet(s"$storeDir/fps")
-      .select("doc_id", "anchor", "fp")
+    st.write("fps", audioFingerprints(newDocs))
+    val deltaFps = st.written("fps")
+    val allFps = st.read("fps").select("doc_id", "anchor", "fp")
     // match identity (i, j, t_offset, ai, fp) — aj = ai − t_offset, so
     // the distinct() collapses the doubled within-delta orientation
     // without losing genuine vote multiplicity
@@ -341,9 +330,8 @@ object Audio extends graft.QueryModule {
       .agg(count(lit(1)).as("votes"))
       .filter(col("votes") >= FpMinVotes)
       .cut() // materialize before the matches overwrite below
-    writeEpoch(matches, "matches")
-    s.read.parquet(s"$storeDir/matches")
-      .select("i", "j", "t_offset", "votes")
+    st.write("matches", matches)
+    st.read("matches").select("i", "j", "t_offset", "votes")
       .orderBy("i", "j", "t_offset")
   }
 

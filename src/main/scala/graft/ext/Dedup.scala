@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Ckpt.CutOps
 import graft.Tables
+import graft.pipeline.EpochStore
 
 /** SURVEY.md §2.K — deduplication operators for LLM training-data
   * pipelines: exact (hash-groupBy), word-set Jaccard (oracle-checked),
@@ -369,7 +370,6 @@ object Dedup extends graft.QueryModule {
     * hash-fails the driver gate instead of hiding behind `no_oracle`. */
   private def minhash(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.VectorFunctions.register(s)
     val docsDf = docs(s, d)
     // r15 (guide §2.4): the cluster assignment feeds BOTH output legs
     // (the per-doc invariants and the 1-row band gate), and its tail —
@@ -599,7 +599,7 @@ object Dedup extends graft.QueryModule {
   }
 
   /** One STREAMING micro-batch of incremental near-dup dedup — the
-    * per-epoch core [[graft.streaming.Streams.dedupDeltas]] runs inside
+    * per-epoch core [[graft.streaming.Streams.epochDeltas]] runs inside
     * `foreachBatch` (r10, VERDICT #3's streaming twin). Same soundness
     * argument as [[minhashIncremental]] (corpus-independent band keys →
     * delta-bands × (saved ∪ delta-bands) candidates decompose exactly),
@@ -613,25 +613,11 @@ object Dedup extends graft.QueryModule {
     * cluster assignment over the store as of this epoch (components
     * over all saved pairs), which the sink publishes. */
   def dedupDelta(batchIn: DataFrame, storeDir: String, epoch: Long): DataFrame = {
-    // a delta landing during a compaction swap races the listing and
-    // silently loses rows — fail loudly instead (r14 lease contract)
-    graft.pipeline.StoreCompact.assertNotCompacting(storeDir)
-    val s = batchIn.sparkSession
+    val st = EpochStore(batchIn.sparkSession, storeDir).append(epoch)
     val batch = batchIn.select(col("doc_id"), col("text")).cut()
-    // existence through Hadoop's FileSystem, not java.io.File: storeDir is
-    // public streaming-lifecycle API and may be an HDFS/S3 URI at 100 TB —
-    // a local-FS check would read "absent" there and silently band every
-    // batch against an EMPTY history (cross-epoch near-dup pairs dropped
-    // with no error). Resolved per path scheme (r11 ADVICE; shared helper
-    // [[graft.Hfs]] since r12).
-    def readOrEmpty(sub: String, schema: String): DataFrame =
-      if (graft.Hfs.exists(s"$storeDir/$sub"))
-        s.read.parquet(s"$storeDir/$sub")
-      else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(schema))
-    val savedDocs = readOrEmpty("docs", "doc_id BIGINT, text STRING, epoch BIGINT")
-    val savedBands = readOrEmpty("bands", "doc_id BIGINT, band INT, h STRING, epoch BIGINT")
+    val savedDocs = st.saved("docs", batch)
     val deltaBands = md5BandRows(batch).cut()
+    val savedBands = st.saved("bands", deltaBands)
     val cand = deltaBands.as("x")
       .join(savedBands.select("doc_id", "band", "h").union(deltaBands).as("y"),
         col("x.band") === col("y.band") && col("x.h") === col("y.h") &&
@@ -648,17 +634,18 @@ object Dedup extends graft.QueryModule {
     // overwrite below deletes — cut the lineage first
     val fresh = verifyExactJaccard(cand, allDocs, 0.8)
       .select(col("i"), col("j")).cut()
-    // write straight into the epoch's own partition directory: a replay
-    // overwrites exactly these files and nothing else (no reliance on
-    // dynamic-partition-overwrite conf scoping)
-    def writeEpoch(df: DataFrame, sub: String): Unit =
-      df.write.mode("overwrite").parquet(s"$storeDir/$sub/epoch=$epoch")
-    writeEpoch(batch, "docs")
-    writeEpoch(deltaBands, "bands")
-    writeEpoch(fresh, "pairs")
-    val docsAll = s.read.parquet(s"$storeDir/docs").select("doc_id")
-    val pairsAll = s.read.parquet(s"$storeDir/pairs").select("i", "j")
-    connectedComponents(docsAll, pairsAll, "doc_id").orderBy("doc_id")
+    st.write("docs", batch)
+    st.write("bands", deltaBands)
+    st.write("pairs", fresh)
+    dedupServeFromStore(st.spark, storeDir)
+  }
+
+  /** Serve the cluster assignment from a [[dedupDelta]] store:
+    * components over every saved pair. */
+  def dedupServeFromStore(s: SparkSession, storeDir: String): DataFrame = {
+    val st = EpochStore(s, storeDir)
+    connectedComponents(st.read("docs").select("doc_id"),
+      st.read("pairs").select("i", "j"), "doc_id").orderBy("doc_id")
   }
 
   /** Connected components as UNROLLED alternating large-star/small-star
@@ -761,9 +748,7 @@ object Dedup extends graft.QueryModule {
       dir, 1L): Unit
     graft.pipeline.StoreCompact.compactDedupStore(s, dir)
     // the reader's serve, now over single-baseline sub-tables
-    val docsAll = s.read.parquet(s"$dir/docs").select("doc_id")
-    val pairsAll = s.read.parquet(s"$dir/pairs").select("i", "j")
-    connectedComponents(docsAll, pairsAll, "doc_id").orderBy("doc_id")
+    dedupServeFromStore(s, dir)
   }
 
   /** Oracle for [[minhashIncremental]]: the FULL-UNION recompute (16
@@ -1357,7 +1342,6 @@ object Dedup extends graft.QueryModule {
     *    spuriously fail the gate (recalibration note at the
     *    `dedup_minhash` band). */
   private def simhash(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val docsDf = docs(s, d)
     val xx = simhashPairs64(docsDf)
     val keyed = docsDf.select(col("doc_id"), wordSetKey.as("wk"),
@@ -1528,7 +1512,6 @@ object Dedup extends graft.QueryModule {
     * matching, block first ([[editDistance1Pairs]] / the LSH paths) and
     * use JW only as the verifier inside buckets. */
   private def jaroWinklerBest(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val parts = Tables.part(s, d).select(col("p_partkey"), col("p_name"))
     val probes = parts.filter(col("p_partkey") < 50)
       .select(col("p_partkey").as("probe_key"), col("p_name").as("probe_name"))
@@ -1554,7 +1537,6 @@ object Dedup extends graft.QueryModule {
     * still describes the full table. Pairwise cost is quadratic in
     * DISTINCT names per block — independent of table size. */
   private def jwBlocked(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val reps = Tables.part(s, d).groupBy(col("p_name"))
       .agg(count(lit(1)).as("n_members"))
       .select(col("p_name"), col("n_members"),

@@ -75,7 +75,6 @@ object Multimodal extends graft.QueryModule {
   /** Arrays (list<float>) surviving filter → broadcast join → projection —
     * the multimodal-metadata path (oracle via DuckDB list functions). */
   private def mmMeta(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     import s.implicits._
     val labels = broadcast(labelDim.toDF("label_id", "label_name"))
     Tables.embeddings(s, d)
@@ -907,33 +906,23 @@ object Multimodal extends graft.QueryModule {
     * `epoch=N` partitions with deterministically identical rows. */
   def corpusCleanMultimodalDelta(batchIn: DataFrame, storeDir: String,
                                  epoch: Long): DataFrame = {
-    // fail loudly if a compaction swap is in flight (r14 lease contract)
-    graft.pipeline.StoreCompact.assertNotCompacting(storeDir)
     import graft.Ckpt.CutOps
-    val s = batchIn.sparkSession
+    val st = graft.pipeline.EpochStore(batchIn.sparkSession, storeDir)
+      .append(epoch)
     val gated = mmGate(batchIn)
-    // cross-epoch re-delivery guard (prior epochs only: a SAME-epoch
-    // replay rewrites its own partitions, which is the idempotence rule)
-    val seen =
-      if (graft.Hfs.exists(s"$storeDir/docs"))
-        s.read.parquet(s"$storeDir/docs")
-          .filter(col("epoch").cast("long") =!= epoch).select("doc_id")
-      else gated.select("doc_id").limit(0)
-    val fresh = gated.join(seen, Seq("doc_id"), "left_anti").cut()
+    val fresh = st.unseen(gated, "docs", "doc_id").cut()
     val bandRows = Dedup.md5SlotBandRows(fresh.select("doc_id", "text")).cut()
     val hashedFresh = mmPhash(fresh).cut()
-    def writeEpoch(df: DataFrame, sub: String): Unit =
-      df.write.mode("overwrite").parquet(s"$storeDir/$sub/epoch=$epoch")
-    writeEpoch(fresh, "docs")
-    writeEpoch(bandRows, "bands")
-    writeEpoch(bandRows.select("band", "h").distinct(), "bmark")
-    writeEpoch(hashedFresh, "phash")
+    st.write("docs", fresh)
+    st.write("bands", bandRows)
+    st.write("bmark", bandRows.select("band", "h").distinct())
+    st.write("phash", hashedFresh)
     // TEXT: recompute candidates for the touched buckets over their FULL
     // accumulated membership, verify, store with the bucket key
     val touched = bandRows.select("band", "h").distinct()
-    val allBands = s.read.parquet(s"$storeDir/bands")
+    val allBands = st.read("bands")
       .drop("epoch").dropDuplicates(Seq("doc_id", "band"))
-    val allDocs = s.read.parquet(s"$storeDir/docs")
+    val allDocs = st.read("docs")
       .select("doc_id", "text").dropDuplicates("doc_id")
     val cand = Dedup.starChainCandidates(
       allBands.join(touched, Seq("band", "h")))
@@ -946,20 +935,13 @@ object Multimodal extends graft.QueryModule {
         cand.select("i", "j").distinct(),
         allDocs.join(candDocs, Seq("doc_id"), "left_semi"), 0.8)
       .select("i", "j")
-    writeEpoch(cand.join(verified, Seq("i", "j"))
-      .select("band", "h", "i", "j").cut(), "tpairs")
-    // latest-wins per bucket: only the rows of a bucket's most recent
-    // recomputation count (older epochs' pairs for that bucket are
-    // superseded, including buckets whose latest set is empty)
-    val latest = s.read.parquet(s"$storeDir/bmark")
-      .withColumn("ep", col("epoch").cast("long")).drop("epoch")
-      .groupBy(col("band"), col("h")).agg(max(col("ep")).as("ep"))
-    val validT = s.read.parquet(s"$storeDir/tpairs")
-      .withColumn("ep", col("epoch").cast("long")).drop("epoch")
-      .join(latest, Seq("band", "h", "ep"))
+    st.write("tpairs", cand.join(verified, Seq("i", "j"))
+      .select("band", "h", "i", "j").cut())
+    val validT = graft.pipeline.StoreCompact
+      .latestTextPairs(st.read("tpairs"), st.read("bmark"))
       .select("i", "j").distinct()
     // IMAGE: delta bands x full store (band equi-join, Hamming verify)
-    val allPh = s.read.parquet(s"$storeDir/phash")
+    val allPh = st.read("phash")
       .select("doc_id", "phash").dropDuplicates("doc_id")
     val xd = col("x.doc_id"); val yd = col("y.doc_id")
     val ipFresh = mmPhashBands(hashedFresh).as("x")
@@ -972,11 +954,10 @@ object Multimodal extends graft.QueryModule {
       .distinct()
       .filter(mmHam <= 2)
       .select("i", "j").cut()
-    writeEpoch(ipFresh, "ipairs")
-    val validI = s.read.parquet(s"$storeDir/ipairs")
-      .select("i", "j").distinct()
+    st.write("ipairs", ipFresh)
+    val validI = st.read("ipairs").select("i", "j").distinct()
     // OUTPUT: both CC fixpoints over the accumulated graphs + survivors
-    val gatedAll = s.read.parquet(s"$storeDir/docs")
+    val gatedAll = st.read("docs")
       .select("doc_id", "lang", "n_chars").dropDuplicates("doc_id")
     val trep = Dedup.connectedComponentsStar(
         allDocs.select(col("doc_id").as("id")), validT)._1

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Ckpt.CutOps
 import graft.Tables
+import graft.pipeline.EpochStore
 import graft.functions.VectorFunctions
 
 /** SURVEY.md §2.K — similarity search over `embeddings.embedding`
@@ -46,7 +47,6 @@ object SimSearch extends graft.QueryModule {
     * product per pair instead of three; the cosine formula stays
     * `dot/(sqrt(na)*sqrt(nb))` so doubles still match the oracle bitwise. */
   private def embCosinePairs(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
     val e = Tables.embeddings(s, d).select(col("vec_id"), col("label"),
       col("embedding"), dot(col("embedding"), col("embedding")).as("nsq"))
     val cos = dot(col("a.embedding"), col("b.embedding")) /
@@ -69,7 +69,6 @@ object SimSearch extends graft.QueryModule {
     * block (TakeOrdered class). Cosine doubles are bit-identical to
     * the oracle (`cosine = dot/(√na·√nb)`, mirrored shape). */
   private def knnGraph(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
     import org.apache.spark.sql.expressions.Window
     val e = Tables.embeddings(s, d).select(col("vec_id"), col("label"),
       col("embedding"), dot(col("embedding"), col("embedding")).as("nsq"))
@@ -242,7 +241,6 @@ object SimSearch extends graft.QueryModule {
   }
 
   private def knnGraphSearch(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
     val e = Tables.embeddings(s, d)
     graphBeamSearch(
       e.filter(col("vec_id") =!= 0),
@@ -357,7 +355,6 @@ object SimSearch extends graft.QueryModule {
     * delta nodes — the price of not rebuilding), so the oracle mirrors
     * the DECOMPOSED construction, not a full rebuild. */
   private def knnGraphAppend(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
     val e = withNsq(Tables.embeddings(s, d).filter(col("vec_id") =!= 0))
       .cut()
     val base = e.filter(col("vec_id") % 2 === 0)
@@ -410,15 +407,15 @@ object SimSearch extends graft.QueryModule {
     * directed k-NN edge lists land under `epoch=-1` partitions, the
     * "day-0 backfill" the streaming deltas then append to. */
   def knnGraphStoreSeed(vecsIn: DataFrame, storeDir: String): Unit = {
+    val st = EpochStore(vecsIn.sparkSession, storeDir)
     val vecs = vecsIn.select(col("vec_id"), col("label"), col("embedding"))
-    vecs.write.mode("overwrite").parquet(s"$storeDir/vecs/epoch=-1")
+    st.seed("vecs", vecs)
     val e = withNsq(vecs).cut()
-    knnEdges(e, e, GraphAnnDegree)
-      .write.mode("overwrite").parquet(s"$storeDir/edges/epoch=-1")
+    st.seed("edges", knnEdges(e, e, GraphAnnDegree))
   }
 
   /** One STREAMING micro-batch of graph-ANN index append — the per-epoch
-    * core [[graft.streaming.Streams.knnGraphDeltas]] runs inside
+    * core [[graft.streaming.Streams.epochDeltas]] runs inside
     * `foreachBatch` (r11, VERDICT #4). Mirrors the batch
     * `sim_search_knn_graph_append` legs exactly: the delta's nodes rank
     * against saved ∪ delta (the HNSW insertion rule), saved nodes' lists
@@ -433,25 +430,21 @@ object SimSearch extends graft.QueryModule {
     * servable edge list (symmetrized, capped) as of this epoch. */
   def knnGraphDelta(batchIn: DataFrame, storeDir: String,
                     epoch: Long): DataFrame = {
-    // fail loudly if a compaction swap is in flight (r14 lease contract)
-    graft.pipeline.StoreCompact.assertNotCompacting(storeDir)
-    val s = batchIn.sparkSession
+    val st = EpochStore(batchIn.sparkSession, storeDir).append(epoch)
     val batch = batchIn.select(col("vec_id"), col("label"), col("embedding"))
       .cut()
-    val savedVecs =
-      if (graft.Hfs.exists(s"$storeDir/vecs")) s.read.parquet(s"$storeDir/vecs")
-        .select(col("vec_id"), col("label"), col("embedding"))
-      else batch.limit(0)
+    val savedVecs = st.saved("vecs", batch)
+      .select(col("vec_id"), col("label"), col("embedding"))
     val allVecs = savedVecs.union(batch).dropDuplicates("vec_id")
     // materialize BEFORE the store writes: on a replayed epoch the
     // saved side still references this epoch's previous files, which
     // the overwrite below deletes — cut the lineage first
     val fresh = knnEdges(withNsq(batch), withNsq(allVecs).cut(),
       GraphAnnDegree).cut()
-    batch.write.mode("overwrite").parquet(s"$storeDir/vecs/epoch=$epoch")
-    fresh.write.mode("overwrite").parquet(s"$storeDir/edges/epoch=$epoch")
-    symCap(s.read.parquet(s"$storeDir/edges")
-        .select(col("i"), col("j"), col("cosine")), GraphAnnDegree)
+    st.write("vecs", batch)
+    st.write("edges", fresh)
+    symCap(st.read("edges").select(col("i"), col("j"), col("cosine")),
+        GraphAnnDegree)
       .orderBy("i", "j")
   }
 
@@ -462,11 +455,12 @@ object SimSearch extends graft.QueryModule {
     * delta). */
   def serveFromGraphStore(s: SparkSession, storeDir: String,
                           probeIn: DataFrame): DataFrame = {
-    val corpus = withNsq(s.read.parquet(s"$storeDir/vecs")
+    val st = EpochStore(s, storeDir)
+    val corpus = withNsq(st.read("vecs")
         .select(col("vec_id"), col("label"), col("embedding"))
         .dropDuplicates("vec_id"))
       .cut()
-    val edges = s.read.parquet(s"$storeDir/edges")
+    val edges = st.read("edges")
       .select(col("i"), col("j"), col("cosine"))
     beamWalk(corpus, symCap(edges, GraphAnnDegree), labelEntries(corpus),
       probeIn, GraphAnnBeam, GraphAnnSteps, k = 10)
@@ -667,7 +661,6 @@ object SimSearch extends graft.QueryModule {
   }
 
   private def knnGraphBucketedSearch(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
     val e = Tables.embeddings(s, d)
     graphBeamSearchBucketed(
       e.filter(col("vec_id") =!= 0),
@@ -879,7 +872,6 @@ object SimSearch extends graft.QueryModule {
   }
 
   private def hnswServe(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
     val e = Tables.embeddings(s, d)
     hnswSearch(
       e.filter(col("vec_id") =!= 0),
@@ -972,11 +964,11 @@ object SimSearch extends graft.QueryModule {
                          levels: Int = HnswMultiLevels,
                          degree: Int = GraphAnnDegree,
                          rounds: Int = NnDescentRounds): Unit = {
+    val st = EpochStore(vecsIn.sparkSession, storeDir)
     val raw = vecsIn.select(col("vec_id"), col("embedding"))
-    raw.write.mode("overwrite").parquet(s"$storeDir/vecs/epoch=-1")
+    st.seed("vecs", raw)
     (0 to levels).foreach { l =>
-      knnGraphBucketed(hnswLayerSlice(raw, l), degree, rounds)
-        .write.mode("overwrite").parquet(s"$storeDir/l$l/epoch=-1")
+      st.seed(s"l$l", knnGraphBucketed(hnswLayerSlice(raw, l), degree, rounds))
     }
   }
 
@@ -990,16 +982,16 @@ object SimSearch extends graft.QueryModule {
                               k: Int = 10,
                               beamW: Int = GraphAnnBeam,
                               steps: Int = GraphAnnSteps): DataFrame = {
-    val raw = s.read.parquet(s"$storeDir/vecs").select("vec_id", "embedding")
+    val st = EpochStore(s, storeDir)
+    val raw = st.read("vecs").select("vec_id", "embedding")
       .dropDuplicates("vec_id")
     hnswMultiDescend(raw, probe, levels, GraphAnnDegree, beamW,
       steps, k,
-      l => s.read.parquet(s"$storeDir/l$l")
+      l => st.read(s"l$l")
         .select(col("i"), col("j"), col("cosine")))
   }
 
   private def hnswMultiServe(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
     val e = Tables.embeddings(s, d)
     hnswMultiSearch(
       e.filter(col("vec_id") =!= 0),
@@ -1052,7 +1044,6 @@ object SimSearch extends graft.QueryModule {
   }
 
   private def hnswServedKey(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
     val e = Tables.embeddings(s, d)
     val dir = graft.Scratch.dir(
       "hnsw_store_" + d.replaceAll("[^A-Za-z0-9.]", "_"))
@@ -1061,7 +1052,7 @@ object SimSearch extends graft.QueryModule {
     // creates the output dir before the job commits, so a seed crashed
     // mid-write of l1 leaves a partial dir that would read as fully
     // seeded and serve incomplete data (ADVICE r12 + r13)
-    if (!graft.Hfs.exists(s"$dir/l1/epoch=-1/_SUCCESS"))
+    if (!EpochStore(s, dir).seeded("l1"))
       hnswStoreSeed(e.filter(col("vec_id") =!= 0), dir)
     // serving-time quality knobs (r13): defaults match the oracle's
     // unrolled rounds; a user widens the beam per session for recall
@@ -1079,12 +1070,11 @@ object SimSearch extends graft.QueryModule {
   def hnswStoreSeed(vecsIn: DataFrame, storeDir: String,
                     degree: Int = GraphAnnDegree,
                     rounds: Int = NnDescentRounds): Unit = {
+    val st = EpochStore(vecsIn.sparkSession, storeDir)
     val raw = vecsIn.select(col("vec_id"), col("embedding"))
-    raw.write.mode("overwrite").parquet(s"$storeDir/vecs/epoch=-1")
-    knnGraphBucketed(raw, degree, rounds)
-      .write.mode("overwrite").parquet(s"$storeDir/l0/epoch=-1")
-    knnGraphBucketed(raw.filter(hnswCoin === 0), degree, rounds)
-      .write.mode("overwrite").parquet(s"$storeDir/l1/epoch=-1")
+    st.seed("vecs", raw)
+    st.seed("l0", knnGraphBucketed(raw, degree, rounds))
+    st.seed("l1", knnGraphBucketed(raw.filter(hnswCoin === 0), degree, rounds))
   }
 
   /** Serve a probe from the persisted hierarchical store — the same
@@ -1095,18 +1085,19 @@ object SimSearch extends graft.QueryModule {
                          probe: DataFrame, k: Int = 10,
                          beamW: Int = GraphAnnBeam,
                          steps: Int = GraphAnnSteps): DataFrame = {
+    val st = EpochStore(s, storeDir)
     // dropDuplicates: a doc re-delivered under a DIFFERENT epoch (the
     // at-least-once contract only pins same-epoch replays) leaves the
     // same vec_id in two epoch partitions; duplicate corpus rows would
     // enter beamWalk's visited set and eat beam slots (ADVICE r11)
-    val vecs = s.read.parquet(s"$storeDir/vecs").select("vec_id", "embedding")
+    val vecs = st.read("vecs").select("vec_id", "embedding")
       .dropDuplicates("vec_id")
     val full = vecs.select(col("vec_id"), col("embedding"),
       dot(col("embedding"), col("embedding")).as("nsq")).cut()
     val upperRaw = vecs.filter(hnswCoin === 0)
-    val g1 = symCap(s.read.parquet(s"$storeDir/l1")
+    val g1 = symCap(st.read("l1")
       .select(col("i"), col("j"), col("cosine")), GraphAnnDegree)
-    val g0 = symCap(s.read.parquet(s"$storeDir/l0")
+    val g0 = symCap(st.read("l0")
       .select(col("i"), col("j"), col("cosine")), GraphAnnDegree)
     val entry0 = beamWalk(full.filter(hnswCoin === 0).cut(), g1,
         bucketEntries(upperRaw), probe, beamW, HnswUpperSteps, k = 1)
@@ -1143,7 +1134,7 @@ object SimSearch extends graft.QueryModule {
   def serveHnswAuto(s: SparkSession, storeDir: String, probe: DataFrame,
                     k: Int = 10): DataFrame = {
     val beam = s.conf.getOption(BeamWidthConf).map(_.toInt).getOrElse(
-      autoBeam(s.read.parquet(s"$storeDir/vecs")
+      autoBeam(EpochStore(s, storeDir).read("vecs")
         .dropDuplicates("vec_id").count()))
     serveHnswFromStore(s, storeDir, probe, k, beamW = beam,
       steps = servingSteps(s))
@@ -1159,14 +1150,15 @@ object SimSearch extends graft.QueryModule {
                            probe: DataFrame,
                            beamW: Int = GraphAnnBeam,
                            steps: Int = GraphAnnSteps): Long = {
-    val vecs = s.read.parquet(s"$storeDir/vecs").select("vec_id", "embedding")
+    val st = EpochStore(s, storeDir)
+    val vecs = st.read("vecs").select("vec_id", "embedding")
       .dropDuplicates("vec_id")
     val full = vecs.select(col("vec_id"), col("embedding"),
       dot(col("embedding"), col("embedding")).as("nsq")).cut()
     val upperRaw = vecs.filter(hnswCoin === 0)
-    val g1 = symCap(s.read.parquet(s"$storeDir/l1")
+    val g1 = symCap(st.read("l1")
       .select(col("i"), col("j"), col("cosine")), GraphAnnDegree)
-    val g0 = symCap(s.read.parquet(s"$storeDir/l0")
+    val g0 = symCap(st.read("l0")
       .select(col("i"), col("j"), col("cosine")), GraphAnnDegree)
     val upperVisited = beamWalkVisited(full.filter(hnswCoin === 0).cut(), g1,
       bucketEntries(upperRaw), probe, beamW, HnswUpperSteps)
@@ -1250,25 +1242,20 @@ object SimSearch extends graft.QueryModule {
     * side replay-safe). Returns the merged servable layer-0 edge list
     * as of this epoch. */
   def hnswDelta(batchIn: DataFrame, storeDir: String, epoch: Long): DataFrame = {
-    // fail loudly if a compaction swap is in flight (r14 lease contract)
-    graft.pipeline.StoreCompact.assertNotCompacting(storeDir)
-    val s = batchIn.sparkSession
+    val st = EpochStore(batchIn.sparkSession, storeDir).append(epoch)
     val batch = batchIn.select(col("vec_id"), col("embedding")).cut()
-    val savedVecs = s.read.parquet(s"$storeDir/vecs")
-      .select(col("vec_id"), col("embedding"))
+    val savedVecs = st.read("vecs").select(col("vec_id"), col("embedding"))
     val allVecs = savedVecs.union(batch).dropDuplicates("vec_id")
     // materialize BEFORE the store writes (a replayed epoch's saved side
     // still references the files the overwrite below replaces)
     val fresh0 = bucketedDeltaEdges(batch, allVecs, GraphAnnDegree).cut()
     val fresh1 = bucketedDeltaEdges(batch.filter(hnswCoin === 0),
       allVecs.filter(hnswCoin === 0), GraphAnnDegree).cut()
-    def writeEpoch(df: DataFrame, sub: String): Unit =
-      df.write.mode("overwrite").parquet(s"$storeDir/$sub/epoch=$epoch")
-    writeEpoch(batch, "vecs")
-    writeEpoch(fresh0, "l0")
-    writeEpoch(fresh1, "l1")
-    symCap(s.read.parquet(s"$storeDir/l0")
-        .select(col("i"), col("j"), col("cosine")), GraphAnnDegree)
+    st.write("vecs", batch)
+    st.write("l0", fresh0)
+    st.write("l1", fresh1)
+    symCap(st.read("l0").select(col("i"), col("j"), col("cosine")),
+        GraphAnnDegree)
       .orderBy("i", "j")
   }
 
@@ -1281,24 +1268,19 @@ object SimSearch extends graft.QueryModule {
     * twin). Returns the merged servable layer-0 edge list. */
   def hnswMultiDelta(batchIn: DataFrame, storeDir: String, epoch: Long,
                      levels: Int = HnswMultiLevels): DataFrame = {
-    // fail loudly if a compaction swap is in flight (r14 lease contract)
-    graft.pipeline.StoreCompact.assertNotCompacting(storeDir)
-    val s = batchIn.sparkSession
+    val st = EpochStore(batchIn.sparkSession, storeDir).append(epoch)
     val batch = batchIn.select(col("vec_id"), col("embedding")).cut()
-    val savedVecs = s.read.parquet(s"$storeDir/vecs")
-      .select(col("vec_id"), col("embedding"))
+    val savedVecs = st.read("vecs").select(col("vec_id"), col("embedding"))
     val allVecs = savedVecs.union(batch).dropDuplicates("vec_id")
     // materialize every layer BEFORE the store writes (replay safety)
     val fresh = (0 to levels).map { l =>
       l -> bucketedDeltaEdges(hnswLayerSlice(batch, l),
         hnswLayerSlice(allVecs, l), GraphAnnDegree).cut()
     }
-    def writeEpoch(df: DataFrame, sub: String): Unit =
-      df.write.mode("overwrite").parquet(s"$storeDir/$sub/epoch=$epoch")
-    writeEpoch(batch, "vecs")
-    fresh.foreach { case (l, df) => writeEpoch(df, s"l$l") }
-    symCap(s.read.parquet(s"$storeDir/l0")
-        .select(col("i"), col("j"), col("cosine")), GraphAnnDegree)
+    st.write("vecs", batch)
+    fresh.foreach { case (l, df) => st.write(s"l$l", df) }
+    symCap(st.read("l0").select(col("i"), col("j"), col("cosine")),
+        GraphAnnDegree)
       .orderBy("i", "j")
   }
 
@@ -1354,7 +1336,6 @@ object SimSearch extends graft.QueryModule {
   }
 
   private def graphBatch(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
     val e = Tables.embeddings(s, d)
     graphBatchSearch(
       e.filter(col("vec_id") >= 20),
@@ -1418,7 +1399,6 @@ object SimSearch extends graft.QueryModule {
   /** Brute-force top-k cosine neighbors of a probe vector (vec_id = 0):
     * broadcast single-row probe, TakeOrderedAndProject for the top-k. */
   private def cosineTopK(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
     val e = Tables.embeddings(s, d)
     val probe = e.filter(col("vec_id") === 0).select(col("embedding").as("probe"))
     e.filter(col("vec_id") =!= 0)
@@ -1435,7 +1415,6 @@ object SimSearch extends graft.QueryModule {
     * Exact over the truncated space → fully oracle-checked; the
     * recall-vs-full-space tradeoff is SimSearchRecallSpec's concern. */
   private def truncatedTopK(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), expr("slice(embedding, 1, 16)").as("emb16"))
     val probe = e.filter(col("vec_id") === 0).select(col("emb16").as("probe"))
@@ -1522,7 +1501,6 @@ object SimSearch extends graft.QueryModule {
   }
 
   private def ivfTopK(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
     val e = Tables.embeddings(s, d)
     val pMax = ivfPlanes - 1
     val bMax = (1 << ivfPlanes) - 1
@@ -2294,7 +2272,6 @@ object SimSearch extends graft.QueryModule {
   }
 
   private def ivfSaved(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
     val e = Tables.embeddings(s, d)
     val dir = graft.Scratch.dir("ivf_index_pinned")
     buildIvfIndexPinned(e, dir)
@@ -2315,7 +2292,6 @@ object SimSearch extends graft.QueryModule {
     * machinery as the rest of the family → hash-checked. */
   private def ivfMulti(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    VectorFunctions.register(s)
     val assign = 2
     val nprobe = 6
     val vecs = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
@@ -2393,7 +2369,6 @@ object SimSearch extends graft.QueryModule {
     * scan, bounded `graft_topk_by` partials on the wire; the vote is a
     * (probes × 10)-row hash agg. Fully exact → hash-checked. */
   private def knnClassify(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
     val e = Tables.embeddings(s, d)
     val probes = e.filter(col("vec_id") < 20)
       .select(col("vec_id").as("probe_id"), col("embedding").as("probe"))
@@ -2456,7 +2431,6 @@ object SimSearch extends graft.QueryModule {
     * (The even-id seed slice yields 8 of the 16 requested seeds —
     * the mirror applies the identical filter.) */
   private def ivfAppend(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
     val e = Tables.embeddings(s, d)
     val dir = graft.Scratch.dir("ivf_index_append")
     buildIvfIndexPinned(e.filter(col("vec_id") % 2 === 0), dir)
@@ -2533,7 +2507,6 @@ object SimSearch extends graft.QueryModule {
       .select(col("vec_id").as("probe_id"), col("embedding").as("probe"))
 
   private def batch(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
     val e = Tables.embeddings(s, d)
     batchTopK(e, probeTable(e))
   }
@@ -2555,7 +2528,6 @@ object SimSearch extends graft.QueryModule {
     * τ boundary is a comparison of bit-identical doubles, so the key
     * hash-matches the oracle exactly. */
   private def radiusSearch(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
     val e = Tables.embeddings(s, d)
     e.join(broadcast(probeTable(e)), col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id"),
@@ -2573,7 +2545,6 @@ object SimSearch extends graft.QueryModule {
     * wire. The dot fold is the bit-identical sequential double
     * accumulation, so the key hash-matches the oracle. */
   private def mipsBatch(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
     val e = Tables.embeddings(s, d)
     val scored = e.join(broadcast(probeTable(e)),
         col("vec_id") =!= col("probe_id"))
@@ -2601,7 +2572,6 @@ object SimSearch extends graft.QueryModule {
     * hash-matches the oracle, and its per-probe ranking provably
     * equals `sim_search_mips`'s (asserted in Round9Spec). */
   private def mipsAugmented(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
     val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"),
       dot(col("embedding"), col("embedding")).as("nsq"))
     val maxn = e.agg(max(col("nsq")).as("maxnsq"))
@@ -2630,7 +2600,6 @@ object SimSearch extends graft.QueryModule {
     * disequality rides the join condition, so same-label rows never
     * reach scoring. */
   private def hardNegatives(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
     val e = Tables.embeddings(s, d)
     val probes = e.filter(col("vec_id") < 20)
       .select(col("vec_id").as("probe_id"), col("embedding").as("probe"),
@@ -2645,7 +2614,6 @@ object SimSearch extends graft.QueryModule {
   /** Query key [r9]: batch IVF serving on the PINNED trainer —
     * hash-checked. */
   private def ivfBatch(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
     val e = Tables.embeddings(s, d)
     val vecs = e.select(col("vec_id"), col("embedding"))
     val centroids = trainKmeansPinned(vecs, pinnedK, pinnedIters)
@@ -2684,7 +2652,6 @@ object SimSearch extends graft.QueryModule {
     * so since r8 the key is hash-checked against a token-mirrored
     * DuckDB oracle (no longer rows-only). */
   private def quantizedTopK(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
     val e = Tables.embeddings(s, d)
     val mx = array_max(transform(col("embedding"), x => abs(x)))
     val scale = when(mx > 0, lit(127.0) / mx.cast("double")).otherwise(lit(0.0))
@@ -2865,7 +2832,6 @@ object SimSearch extends graft.QueryModule {
       m, rerank, topK)
 
   private def pq(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
     pqTopKPinned(Tables.embeddings(s, d))
   }
 
@@ -2922,7 +2888,6 @@ object SimSearch extends graft.QueryModule {
   }
 
   private def pqBatch(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
     val e = Tables.embeddings(s, d)
     pqBatchTopK(e, probeTable(e))
   }
@@ -2935,7 +2900,6 @@ object SimSearch extends graft.QueryModule {
     * (build); steady state is ADC lookup + rerank only. Same oracle as
     * the in-query key — store serving is bit-equal by construction. */
   private def pqServed(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
     val dir = graft.Scratch.dir(
       "pq_store_" + d.replaceAll("[^A-Za-z0-9.]", "_"))
     // _SUCCESS, not the dir: a seed crashed mid-write of codes (the
@@ -3036,7 +3000,6 @@ object SimSearch extends graft.QueryModule {
   }
 
   private def ivfPq(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
     ivfPqTopKPinned(Tables.embeddings(s, d))
   }
 
@@ -3078,25 +3041,17 @@ object SimSearch extends graft.QueryModule {
     * its full-corpus recompute, so hash equality proves fold ≡ full. */
   def centroidDelta(batchIn: DataFrame, storeDir: String,
                     epoch: Long): DataFrame = {
-    graft.pipeline.StoreCompact.assertNotCompacting(storeDir)
-    val s = batchIn.sparkSession
+    val st = EpochStore(batchIn.sparkSession, storeDir).append(epoch)
     val batch = batchIn.select(col("vec_id"), col("label"), col("embedding"))
       .cut()
-    val seen =
-      if (graft.Hfs.exists(s"$storeDir/ids"))
-        s.read.parquet(s"$storeDir/ids")
-          .filter(col("epoch").cast("long") =!= epoch).select("vec_id")
-      else batch.select("vec_id").limit(0)
-    val fresh = batch.join(seen, Seq("vec_id"), "left_anti").cut()
-    def writeEpoch(df: DataFrame, sub: String): Unit =
-      df.write.mode("overwrite").parquet(s"$storeDir/$sub/epoch=$epoch")
-    writeEpoch(fresh.select("vec_id"), "ids")
-    writeEpoch(fresh
+    val fresh = st.unseen(batch, "ids", "vec_id").cut()
+    st.write("ids", fresh.select("vec_id"))
+    st.write("parts", fresh
       .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "v")))
       .withColumn("vd", floor(col("v").cast("double") * 1e6).cast("long"))
       .groupBy(col("label"), col("pos"))
-      .agg(sum(col("vd")).as("s"), count(lit(1)).as("n")), "parts")
-    s.read.parquet(s"$storeDir/parts")
+      .agg(sum(col("vd")).as("s"), count(lit(1)).as("n")))
+    st.read("parts")
       .groupBy(col("label"), col("pos"))
       .agg(sum(col("s")).as("s"), sum(col("n")).as("n"))
       .groupBy(col("label"))
@@ -3293,7 +3248,6 @@ object SimSearch extends graft.QueryModule {
     * cluster), and large-star/small-star converges in O(log n) rounds
     * regardless of diameter — exactly the SCALE.md guidance. */
   private def semanticClustersBucketed(s: SparkSession, d: String): DataFrame = {
-    VectorFunctions.register(s)
     import graft.Ckpt.CutOps
     val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
     val edges = knnGraphBucketed(e, GraphAnnDegree, NnDescentRounds)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.pipeline.{EpochStore, StoreCompact}
 
 /** Exact duplicated-substring removal [N] — the ExactSubstr discipline of
   * Lee et al. 2022 ("Deduplicating Training Data Makes Language Models
@@ -173,32 +174,18 @@ object SubstrDedup extends graft.QueryModule {
     * rewrite their own partitions with identical rows. */
   def substrDedupDelta(batchIn: DataFrame, storeDir: String, epoch: Long,
                        k: Int = K): DataFrame = {
-    graft.pipeline.StoreCompact.assertNotCompacting(storeDir)
     import graft.Ckpt.CutOps
-    val s = batchIn.sparkSession
+    val st = EpochStore(batchIn.sparkSession, storeDir).append(epoch)
     val batch = batchIn.select(col("doc_id"), col("text")).cut()
-    def readOrEmpty(sub: String, schema: String): DataFrame =
-      if (graft.Hfs.exists(s"$storeDir/$sub"))
-        s.read.parquet(s"$storeDir/$sub")
-      else s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(schema))
-    // cross-epoch re-delivery guard (prior epochs only; same-epoch
-    // replays rewrite their own partitions)
-    val seen = readOrEmpty("docs", "doc_id BIGINT, text STRING, epoch BIGINT")
-      .filter(col("epoch").cast("long") =!= epoch).select("doc_id")
-    val fresh = batch.join(seen, Seq("doc_id"), "left_anti").cut()
+    val fresh = st.unseen(batch, "docs", "doc_id").cut()
     val freshOcc = gramOcc(fresh, k).cut()
-    def writeEpoch(df: DataFrame, sub: String): Unit =
-      df.write.mode("overwrite").parquet(s"$storeDir/$sub/epoch=$epoch")
-    writeEpoch(fresh, "docs")
-    writeEpoch(freshOcc, "occ")
-    writeEpoch(freshOcc.groupBy(col("g")).agg(count(lit(1)).as("n")), "cnt")
+    st.write("docs", fresh)
+    st.write("occ", freshOcc)
+    st.write("cnt", freshOcc.groupBy(col("g")).agg(count(lit(1)).as("n")))
     // prior vs total counts: one scan of the cnt table (distinct-gram
     // scale); prior = epochs != E so a same-epoch replay recomputes
     // identically
-    val cntAll = s.read.parquet(s"$storeDir/cnt")
-      .withColumn("ep", col("epoch").cast("long"))
+    val cntAll = st.read("cnt").withColumn("ep", col("epoch").cast("long"))
     val prevC = cntAll.filter(col("ep") =!= epoch)
       .groupBy(col("g")).agg(sum(col("n")).as("p"))
     val totals = cntAll.groupBy(col("g")).agg(sum(col("n")).as("total")).cut()
@@ -206,8 +193,7 @@ object SubstrDedup extends graft.QueryModule {
     // holder — that holder's clean text changes
     val crossing = totals.join(prevC, Seq("g"))
       .filter(col("p") === 1 && col("total") >= 2).select(col("g"))
-    val occAll = s.read.parquet(s"$storeDir/occ")
-      .select(col("doc_id"), col("st"), col("g"))
+    val occAll = st.read("occ").select(col("doc_id"), col("st"), col("g"))
     val affectedOld = occAll.join(crossing, "g").select(col("doc_id"))
     val reclean = fresh.select(col("doc_id")).union(affectedOld)
       .distinct().cut()
@@ -215,17 +201,12 @@ object SubstrDedup extends graft.QueryModule {
     val dupG = totals.filter(col("total") >= 2).select(col("g"))
     val ivl = occAll.join(reclean, Seq("doc_id")).join(dupG, "g")
       .select(col("doc_id"), col("st"), (col("st") + (k - 1)).as("en"))
-    val docsAll = s.read.parquet(s"$storeDir/docs")
+    val docsAll = st.read("docs")
       .select("doc_id", "text").dropDuplicates("doc_id")
     val resRows = mergeAndStitch(docsAll.join(reclean, Seq("doc_id")), ivl)
       .cut() // materialize BEFORE the res write replaces this epoch's files
-    writeEpoch(resRows, "res")
-    // serve: latest res row per doc
-    val res = s.read.parquet(s"$storeDir/res")
-      .withColumn("ep", col("epoch").cast("long"))
-    val wLatest = Window.partitionBy(col("doc_id"))
-      .orderBy(col("ep").desc)
-    res.withColumn("rn", row_number().over(wLatest)).filter(col("rn") === 1)
+    st.write("res", resRows)
+    StoreCompact.latestRes(st.read("res"))
       .select(col("doc_id"), col("n_tokens"), col("n_removed"),
         col("clean_md5"))
       .orderBy("doc_id")
@@ -446,49 +427,33 @@ object SubstrDedup extends graft.QueryModule {
     * .compactSubstrStore]]-compatible (same sub-table semantics). */
   def substrCharsDelta(batchIn: DataFrame, storeDir: String, epoch: Long,
                        c: Int = CChars, segChars: Int = -1): DataFrame = {
-    graft.pipeline.StoreCompact.assertNotCompacting(storeDir)
     import graft.Ckpt.CutOps
-    val s = batchIn.sparkSession
+    val st = EpochStore(batchIn.sparkSession, storeDir).append(epoch)
     val batch = batchIn.select(col("doc_id"), col("text")).cut()
-    def readOrEmpty(sub: String, schema: String): DataFrame =
-      if (graft.Hfs.exists(s"$storeDir/$sub"))
-        s.read.parquet(s"$storeDir/$sub")
-      else s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(schema))
-    val seen = readOrEmpty("docs", "doc_id BIGINT, text STRING, epoch BIGINT")
-      .filter(col("epoch").cast("long") =!= epoch).select("doc_id")
-    val fresh = batch.join(seen, Seq("doc_id"), "left_anti").cut()
+    val fresh = st.unseen(batch, "docs", "doc_id").cut()
     val freshOcc = charEligRanks(fresh, c, segChars).cut()
-    def writeEpoch(df: DataFrame, sub: String): Unit =
-      df.write.mode("overwrite").parquet(s"$storeDir/$sub/epoch=$epoch")
-    writeEpoch(fresh, "docs")
-    writeEpoch(freshOcc, "occ")
-    writeEpoch(freshOcc.groupBy(col("r")).agg(count(lit(1)).as("n")), "cnt")
-    val cntAll = s.read.parquet(s"$storeDir/cnt")
-      .withColumn("ep", col("epoch").cast("long"))
+    st.write("docs", fresh)
+    st.write("occ", freshOcc)
+    st.write("cnt", freshOcc.groupBy(col("r")).agg(count(lit(1)).as("n")))
+    val cntAll = st.read("cnt").withColumn("ep", col("epoch").cast("long"))
     val prevC = cntAll.filter(col("ep") =!= epoch)
       .groupBy(col("r")).agg(sum(col("n")).as("pn"))
     val totals = cntAll.groupBy(col("r")).agg(sum(col("n")).as("total")).cut()
     val crossing = totals.join(prevC, Seq("r"))
       .filter(col("pn") === 1 && col("total") >= 2).select(col("r"))
-    val occAll = s.read.parquet(s"$storeDir/occ")
-      .select(col("doc_id"), col("p"), col("r"))
+    val occAll = st.read("occ").select(col("doc_id"), col("p"), col("r"))
     val affectedOld = occAll.join(crossing, "r").select(col("doc_id"))
     val reclean = fresh.select(col("doc_id")).union(affectedOld)
       .distinct().cut()
     val dupR = totals.filter(col("total") >= 2).select(col("r"))
     val ivl = occAll.join(reclean, Seq("doc_id")).join(dupR, "r")
       .select(col("doc_id"), col("p").as("st"), (col("p") + (c - 1)).as("en"))
-    val docsAll = s.read.parquet(s"$storeDir/docs")
+    val docsAll = st.read("docs")
       .select("doc_id", "text").dropDuplicates("doc_id")
     val resRows = mergeAndStitchChars(docsAll.join(reclean, Seq("doc_id")), ivl)
       .cut() // materialize BEFORE the res write replaces this epoch's files
-    writeEpoch(resRows, "res")
-    val res = s.read.parquet(s"$storeDir/res")
-      .withColumn("ep", col("epoch").cast("long"))
-    val wLatest = Window.partitionBy(col("doc_id")).orderBy(col("ep").desc)
-    res.withColumn("rn", row_number().over(wLatest)).filter(col("rn") === 1)
+    st.write("res", resRows)
+    StoreCompact.latestRes(st.read("res"))
       .select(col("doc_id"), col("n_chars"), col("n_removed"),
         col("clean_md5"))
       .orderBy("doc_id")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.pipeline.EpochStore
 
 /** Second evaluation/semantics batch [N]: average precision (PR-AUC),
   * true null-aware NOT IN anti-join semantics, a corpus bigram
@@ -331,32 +332,25 @@ object EvalExtra extends graft.QueryModule {
     * batch by construction and the full-recompute oracle certifies it
     * by hash. */
   def bm25Delta(batchIn: DataFrame, storeDir: String, epoch: Long): DataFrame = {
-    graft.pipeline.StoreCompact.assertNotCompacting(storeDir)
     import graft.Ckpt.CutOps
-    val s = batchIn.sparkSession
+    val st = EpochStore(batchIn.sparkSession, storeDir).append(epoch)
     val batch = batchIn.select(col("doc_id"), col("text")).cut()
-    val seen =
-      if (graft.Hfs.exists(s"$storeDir/dl"))
-        s.read.parquet(s"$storeDir/dl")
-          .filter(col("epoch").cast("long") =!= epoch).select("doc_id")
-      else batch.select("doc_id").limit(0)
-    val fresh = batch.join(seen, Seq("doc_id"), "left_anti").cut()
+    val fresh = st.unseen(batch, "dl", "doc_id").cut()
     val toks = fresh
       .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-    def writeEpoch(df: DataFrame, sub: String): Unit =
-      df.write.mode("overwrite").parquet(s"$storeDir/$sub/epoch=$epoch")
-    writeEpoch(toks.groupBy(col("doc_id")).agg(count(lit(1)).as("dl")), "dl")
-    writeEpoch(toks.groupBy(col("doc_id"), col("w"))
-      .agg(count(lit(1)).as("tf")), "tf")
-    bm25ServeFromStore(s, storeDir)
+    st.write("dl", toks.groupBy(col("doc_id")).agg(count(lit(1)).as("dl")))
+    st.write("tf", toks.groupBy(col("doc_id"), col("w"))
+      .agg(count(lit(1)).as("tf")))
+    bm25ServeFromStore(st.spark, storeDir)
   }
 
   /** Serve the pinned query terms from a [[bm25Delta]] store. */
-  def bm25ServeFromStore(s: SparkSession, storeDir: String): DataFrame =
-    bm25Score(
-      s.read.parquet(s"$storeDir/dl").select("doc_id", "dl"),
-      s.read.parquet(s"$storeDir/tf").select("doc_id", "w", "tf")
+  def bm25ServeFromStore(s: SparkSession, storeDir: String): DataFrame = {
+    val st = EpochStore(s, storeDir)
+    bm25Score(st.read("dl").select("doc_id", "dl"),
+      st.read("tf").select("doc_id", "w", "tf")
         .filter(col("w").isin(bm25Terms: _*)))
+  }
 
   /** Registered lifecycle key: two delta epochs (80/20 doc-id split),
     * served after the second; oracle = the batch `text_bm25` SQL, so

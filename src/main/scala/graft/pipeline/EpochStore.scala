@@ -1,11 +1,20 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Hfs
 
-/** Epoch-store COMPACTION [N] (r13) — the maintenance leg of the
+/** One persisted incremental store, and the only code that knows its
+  * layout: each sub-table `<storeDir>/<sub>` holds one parquet
+  * partition `epoch=N` per delta micro-batch, which a replayed epoch
+  * overwrites with identical rows, and `epoch=-1` is the seeded or
+  * compacted baseline, so it reads as the oldest epoch. Delta writers
+  * open the store with [[append]], which probes the lease below before
+  * the writer's first read.
+  *
+  * Epoch-store COMPACTION [N] (r13) — the maintenance leg of the
   * persisted incremental lifecycles (dedup band stores, HNSW layer
   * stores, audio fingerprints, the multimodal corpus-clean store):
   * every delta micro-batch appends one `epoch=N` partition, so a
@@ -14,16 +23,7 @@ import graft.Hfs
   * the classic lakehouse small-files problem, solved the classic way:
   * periodically fold every epoch of a sub-table into a single
   * `epoch=-1` baseline (the exact shape the day-0 seeds write) and
-  * swap it in.
-  *
-  * Row semantics are preserved per store: sub-tables whose READERS
-  * deduplicate get the same dropDuplicates/distinct applied at
-  * compaction; sub-tables read as plain unions compact by identity
-  * (files coalesce, rows don't change); the multimodal text-pair store
-  * resolves its latest-wins-per-bucket rule at compaction so only the
-  * surviving rows are rewritten. StoreCompactSpec pins
-  * serve-before == serve-after and that post-compaction deltas keep
-  * appending correctly (the baseline reads as a prior epoch).
+  * swap it in ([[compact]], one fold rule per sub-table).
   *
   * COMMIT PROTOCOL (r14 — VERDICT #2 + ADVICE r13): a compaction run
   * is stage-everything-then-commit with two markers, both through
@@ -61,15 +61,108 @@ import graft.Hfs
   * lease write itself can still slip through on a store with no
   * coordination at all, but every orderly overlap now fails loudly
   * instead of corrupting silently. */
-object StoreCompact {
+class EpochStore(val spark: SparkSession, val storeDir: String) {
+  import EpochStore._
+
+  protected def partition(sub: String, epoch: Long) = s"$storeDir/$sub/epoch=$epoch"
+  protected def put(sub: String, epoch: Long, df: DataFrame): Unit =
+    df.write.mode("overwrite").parquet(partition(sub, epoch))
+
+  /** Whether any epoch of `sub` exists — probed through Hadoop's
+    * FileSystem, so an HDFS/S3 store never reads as absent. */
+  protected def has(sub: String): Boolean = Hfs.exists(s"$storeDir/$sub")
+
+  /** Whether `sub`'s baseline job committed (`epoch=-1/_SUCCESS`): Spark
+    * creates the output dir before the job commits, so a seed that
+    * crashed mid-write leaves a partial dir that must not read as
+    * seeded. */
+  def seeded(sub: String): Boolean = Hfs.exists(s"${partition(sub, -1L)}/_SUCCESS")
+
+  /** Every epoch of `sub`, with its `epoch` partition column. */
+  def read(sub: String): DataFrame = spark.read.parquet(s"$storeDir/$sub")
+
+  /** Every epoch of `sub`, or — before its first epoch — an empty
+    * relation with the schema of `like`, the frame the saved rows are
+    * combined with. */
+  def saved(sub: String, like: DataFrame): DataFrame =
+    if (has(sub)) read(sub) else empty(like)
+
+  /** An empty LocalRelation, so the optimizer prunes the joins over it. */
+  protected def empty(like: DataFrame): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[Row], like.schema)
+
+  /** Write `sub`'s `epoch=-1` baseline (the day-0 seed). */
+  def seed(sub: String, df: DataFrame): Unit = put(sub, -1L, df)
+
+  /** Open the store to append `epoch`; fails while a compaction holds
+    * (or a crashed one left) the lease. */
+  def append(epoch: Long): Append = {
+    assertNotCompacting(storeDir)
+    new Append(spark, storeDir, epoch)
+  }
+
+  /** Fold each present sub into a single `epoch=-1` baseline by its
+    * rule, all under one lease and one commit marker. Absent sub-tables
+    * no-op. Every parquet write fully commits here — before any rename
+    * anywhere. */
+  def compact(folds: Fold*): Unit =
+    withLease(storeDir) {
+      val staged = folds.filter(f => has(f.sub))
+      staged.foreach(f => assertNoInflightWriter(storeDir, f.sub))
+      staged.foreach { f =>
+        Hfs.deleteRecursive(s"$storeDir/.compact_${f.sub}")
+        put(s".compact_${f.sub}", -1L, f.rows(this))
+      }
+      staged.map(_.sub)
+    }
+}
+
+object EpochStore {
+
+  def apply(spark: SparkSession, storeDir: String): EpochStore =
+    new EpochStore(spark, storeDir)
+
+  /** The store opened for one epoch's append (see [[EpochStore.append]]). */
+  final class Append private[EpochStore] (s: SparkSession, dir: String,
+                                          val epoch: Long)
+      extends EpochStore(s, dir) {
+
+    /** Replace this epoch's partition of `sub` with `df`. */
+    def write(sub: String, df: DataFrame): Unit = put(sub, epoch, df)
+
+    /** This epoch's partition of `sub` as written (no `epoch` column). */
+    def written(sub: String): DataFrame =
+      spark.read.parquet(partition(sub, epoch))
+
+    /** The cross-epoch re-delivery guard: the rows of `batch` whose `key`
+      * no PRIOR epoch of `sub` holds. A same-epoch replay is not
+      * filtered — it rewrites its own partition instead. */
+    def unseen(batch: DataFrame, sub: String, key: String): DataFrame = {
+      val seen =
+        if (has(sub))
+          read(sub).filter(col("epoch").cast("long") =!= epoch).select(key)
+        else empty(batch.select(key))
+      batch.join(seen, Seq(key), "left_anti")
+    }
+  }
+
+  /** One sub's compaction rule: the rows of its `epoch=-1` baseline. */
+  final case class Fold(sub: String, rows: EpochStore => DataFrame)
+
+  object Fold {
+    /** A rule over the sub's own rows, `epoch` dropped — the collapse its
+      * readers apply (`identity` = files coalesce, rows don't change). */
+    def of(sub: String)(f: DataFrame => DataFrame): Fold =
+      Fold(sub, _.read(sub).drop("epoch").transform(f))
+  }
 
   private def leasePath(storeDir: String) = s"$storeDir/_compacting"
   private def commitPath(storeDir: String) = s"$storeDir/_compact_commit"
 
-  /** Writer-side lease probe — every delta writer calls this before
-    * reading or appending to a persisted store and fails loudly while
+  /** Writer-side lease probe — every delta writer runs it ([[append]])
+    * before reading or appending to a persisted store and fails loudly while
     * a compaction is in flight (or died mid-run and must be re-run). */
-  def assertNotCompacting(storeDir: String): Unit =
+  private def assertNotCompacting(storeDir: String): Unit =
     if (Hfs.exists(leasePath(storeDir)))
       sys.error(s"store $storeDir is under compaction (_compacting lease " +
         "present): a delta landing mid-swap races the listing and loses " +
@@ -135,49 +228,64 @@ object StoreCompact {
     Hfs.deleteRecursive(commitPath(storeDir))
     Hfs.deleteRecursive(leasePath(storeDir)): Unit
   }
+}
 
-  /** Stage one epoch-partitioned sub-table as a single `epoch=-1`
-    * baseline; `resolve` applies the SAME collapse its readers apply
-    * (identity = coalesce files only). Absent sub-tables no-op. The
-    * parquet write fully commits here — before any rename anywhere. */
-  private def stageSub(spark: SparkSession, storeDir: String, sub: String,
-                       resolve: DataFrame => DataFrame = identity)
-      : Option[String] =
-    if (!Hfs.exists(s"$storeDir/$sub")) None
-    else {
-      assertNoInflightWriter(storeDir, sub)
-      val tmp = s"$storeDir/.compact_$sub"
-      Hfs.deleteRecursive(tmp)
-      resolve(spark.read.parquet(s"$storeDir/$sub").drop("epoch"))
-        .write.mode("overwrite").parquet(s"$tmp/epoch=-1")
-      Some(sub)
-    }
+/** The compaction rules of the seven stores: each `compact*Store` lists
+  * one [[EpochStore.Fold]] per sub-table.
+  *
+  * Row semantics are preserved per store: sub-tables whose READERS
+  * deduplicate get the same dropDuplicates/distinct applied at
+  * compaction; sub-tables read as plain unions compact by identity
+  * (files coalesce, rows don't change); the multimodal text-pair store
+  * resolves its latest-wins-per-bucket rule at compaction so only the
+  * surviving rows are rewritten (and the substr `res` store its
+  * latest-per-doc rule) — with the very functions the readers call,
+  * [[latestTextPairs]] and [[latestRes]]. StoreCompactSpec pins
+  * serve-before == serve-after and that post-compaction deltas keep
+  * appending correctly (the baseline reads as a prior epoch). */
+object StoreCompact {
+  import EpochStore.Fold
+
+  private def keep(sub: String): Fold = Fold.of(sub)(identity)
+
+  /** The substr `res` read: each doc's row from its latest epoch. */
+  def latestRes(res: DataFrame): DataFrame =
+    res.withColumn("rn", row_number().over(Window.partitionBy(col("doc_id"))
+        .orderBy(col("epoch").cast("long").desc)))
+      .filter(col("rn") === 1).drop("rn", "epoch")
+
+  /** The corpus-clean text-pair read: only the rows of each bucket's most
+    * recent recomputation count (older epochs' pairs for that bucket are
+    * superseded, including buckets whose latest set is empty), as the
+    * bucket marks `bmark` record it. */
+  def latestTextPairs(tpairs: DataFrame, bmark: DataFrame): DataFrame = {
+    val latest = bmark.withColumn("ep", col("epoch").cast("long"))
+      .drop("epoch").groupBy(col("band"), col("h"))
+      .agg(max(col("ep")).as("ep"))
+    tpairs.withColumn("ep", col("epoch").cast("long")).drop("epoch")
+      .join(latest, Seq("band", "h", "ep")).drop("ep")
+  }
 
   /** The HNSW stores (2-layer and level-stack alike — layer sub-tables
     * are discovered from the layout): vectors dedup on vec_id (the
     * serve-time rule), layer edges collapse exact-duplicate rows (the
     * symCap distinct). */
   def compactHnswStore(spark: SparkSession, storeDir: String): Unit =
-    withLease(storeDir) {
-      (stageSub(spark, storeDir, "vecs", _.dropDuplicates("vec_id")) ++
+    EpochStore(spark, storeDir).compact(
+      Fold.of("vecs")(_.dropDuplicates("vec_id")) +:
         Hfs.childDirNames(storeDir).filter(_.matches("l\\d+")).sorted
-          .flatMap(l => stageSub(spark, storeDir, l, _.distinct()))).toSeq
-    }
+          .map(l => Fold.of(l)(_.distinct())): _*)
 
   /** The incremental-dedup band store (docs/bands/pairs): readers take
     * plain unions, so compaction is identity — files coalesce, the row
     * multiset is untouched. */
   def compactDedupStore(spark: SparkSession, storeDir: String): Unit =
-    withLease(storeDir) {
-      Seq("docs", "bands", "pairs").flatMap(stageSub(spark, storeDir, _))
-    }
+    EpochStore(spark, storeDir).compact(keep("docs"), keep("bands"), keep("pairs"))
 
   /** The audio fingerprint/content-ID store (fps/matches): plain-union
     * readers → identity compaction. */
   def compactAudioStore(spark: SparkSession, storeDir: String): Unit =
-    withLease(storeDir) {
-      Seq("fps", "matches").flatMap(stageSub(spark, storeDir, _))
-    }
+    EpochStore(spark, storeDir).compact(keep("fps"), keep("matches"))
 
   /** The incremental-ExactSubstr store (r14): docs dedup on doc_id (the
     * serve-time rule), occ/cnt are plain unions, and `res` resolves its
@@ -185,44 +293,21 @@ object StoreCompact {
     * cleaned row survives into the baseline (which reads as the oldest
     * epoch, so later re-cleans still win). */
   def compactSubstrStore(spark: SparkSession, storeDir: String): Unit =
-    withLease(storeDir) {
-      import org.apache.spark.sql.expressions.Window
-      val simple = Seq(
-        stageSub(spark, storeDir, "docs", _.dropDuplicates("doc_id")),
-        stageSub(spark, storeDir, "occ"),
-        stageSub(spark, storeDir, "cnt")).flatten
-      val res =
-        if (!Hfs.exists(s"$storeDir/res")) None
-        else {
-          assertNoInflightWriter(storeDir, "res")
-          Hfs.deleteRecursive(s"$storeDir/.compact_res")
-          val w = Window.partitionBy(col("doc_id"))
-            .orderBy(col("epoch").cast("long").desc)
-          spark.read.parquet(s"$storeDir/res")
-            .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-            .drop("rn", "epoch")
-            .write.mode("overwrite")
-            .parquet(s"$storeDir/.compact_res/epoch=-1")
-          Some("res")
-        }
-      simple ++ res
-    }
+    EpochStore(spark, storeDir).compact(
+      Fold.of("docs")(_.dropDuplicates("doc_id")), keep("occ"), keep("cnt"),
+      Fold("res", st => latestRes(st.read("res"))))
 
   /** The incremental-BM25 index store (dl/tf): serve folds aggregates
     * over plain unions → identity compaction. */
   def compactBm25Store(spark: SparkSession, storeDir: String): Unit =
-    withLease(storeDir) {
-      Seq("dl", "tf").flatMap(stageSub(spark, storeDir, _))
-    }
+    EpochStore(spark, storeDir).compact(keep("dl"), keep("tf"))
 
   /** The incremental-centroid store: `parts` partial sums fold at
     * serve (plain union), `ids` dedups on vec_id (the re-delivery
     * guard's read rule). */
   def compactCentroidStore(spark: SparkSession, storeDir: String): Unit =
-    withLease(storeDir) {
-      (stageSub(spark, storeDir, "ids", _.dropDuplicates("vec_id")) ++
-        stageSub(spark, storeDir, "parts")).toSeq
-    }
+    EpochStore(spark, storeDir).compact(
+      Fold.of("ids")(_.dropDuplicates("vec_id")), keep("parts"))
 
   /** The multimodal corpus-clean store: docs/bands/phash dedup exactly
     * as their readers do, image pairs collapse to the distinct set, and
@@ -233,33 +318,11 @@ object StoreCompact {
     * parquet jobs finish before the marker, both publish under it), so
     * no failure can leave one folded and the other not. */
   def compactCorpusCleanStore(spark: SparkSession, storeDir: String): Unit =
-    withLease(storeDir) {
-      val simple = Seq(
-        stageSub(spark, storeDir, "docs", _.dropDuplicates("doc_id")),
-        stageSub(spark, storeDir, "bands",
-          _.dropDuplicates(Seq("doc_id", "band"))),
-        stageSub(spark, storeDir, "phash", _.dropDuplicates("doc_id")),
-        stageSub(spark, storeDir, "ipairs", _.distinct())).flatten
-      val pair =
-        if (Hfs.exists(s"$storeDir/tpairs") && Hfs.exists(s"$storeDir/bmark")) {
-          assertNoInflightWriter(storeDir, "tpairs")
-          assertNoInflightWriter(storeDir, "bmark")
-          val marks = spark.read.parquet(s"$storeDir/bmark")
-            .withColumn("ep", col("epoch").cast("long")).drop("epoch")
-          val latest = marks.groupBy(col("band"), col("h"))
-            .agg(max(col("ep")).as("ep"))
-          val valid = spark.read.parquet(s"$storeDir/tpairs")
-            .withColumn("ep", col("epoch").cast("long")).drop("epoch")
-            .join(latest, Seq("band", "h", "ep")).drop("ep")
-          Seq("tpairs", "bmark").foreach(sub =>
-            Hfs.deleteRecursive(s"$storeDir/.compact_$sub"))
-          valid.write.mode("overwrite")
-            .parquet(s"$storeDir/.compact_tpairs/epoch=-1")
-          marks.select(col("band"), col("h")).distinct()
-            .write.mode("overwrite")
-            .parquet(s"$storeDir/.compact_bmark/epoch=-1")
-          Seq("tpairs", "bmark")
-        } else Seq.empty
-      simple ++ pair
-    }
+    EpochStore(spark, storeDir).compact(
+      Fold.of("docs")(_.dropDuplicates("doc_id")),
+      Fold.of("bands")(_.dropDuplicates(Seq("doc_id", "band"))),
+      Fold.of("phash")(_.dropDuplicates("doc_id")),
+      Fold.of("ipairs")(_.distinct()),
+      Fold.of("bmark")(_.distinct()),
+      Fold("tpairs", st => latestTextPairs(st.read("tpairs"), st.read("bmark"))))
 }

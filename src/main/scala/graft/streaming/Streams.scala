@@ -452,202 +452,26 @@ object Streams {
       }
       .start()
 
-  /** Streaming INCREMENTAL near-dup dedup (r10) — the dedup analogue of
-    * [[serveProbes]]'s index lifecycle, over a DOCUMENT DELTA STREAM:
-    * each micro-batch of `(doc_id, text)` rows is banded with the
-    * corpus-independent md5 signature keys, bucket-joined against the
-    * SAVED band store (never rescanning the historical corpus),
-    * exact-verified, and folded into the epoch-partitioned store by
-    * [[graft.ext.Dedup.dedupDelta]]; the sink receives the full updated
-    * cluster assignment after each batch. Replays are idempotent: a
-    * re-delivered epoch rewrites its own `epoch=N` store partitions with
-    * deterministically identical rows (StreamingSpec pins both the
-    * full-recompute equivalence and the replay). */
-  def dedupDeltas(deltaDocs: DataFrame, storeDir: String, checkpointDir: String)
+  /** Streaming incremental maintenance of one epoch store (see
+    * [[graft.pipeline.EpochStore]]): each micro-batch of `stream` runs
+    * `delta(batch, epoch)` — one of the stores' delta writers, e.g.
+    * `Dedup.dedupDelta(_, storeDir, _)`, `SubstrDedup.substrDedupDelta`,
+    * `substrCharsDelta`, `EvalExtra.bm25Delta`, `SimSearch.centroidDelta`,
+    * `knnGraphDelta`, `hnswDelta`, `hnswMultiDelta`,
+    * `Multimodal.corpusCleanMultimodalDelta` or `Audio.audioFpDelta` — and
+    * the sink receives what the writer serves as of that epoch. Every
+    * writer reads only the saved store plus the batch (the historical
+    * corpus is never reprocessed) and replaces only its own `epoch=N`
+    * partitions, so a re-delivered epoch rewrites identical rows
+    * (StreamingSpec pins streamed ≡ the batch keys and the replay). */
+  def epochDeltas(stream: DataFrame, checkpointDir: String)
+                 (delta: (DataFrame, Long) => DataFrame)
                  (sink: DataFrame => Unit): StreamingQuery =
-    deltaDocs.writeStream
+    stream.writeStream
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        sink(graft.ext.Dedup.dedupDelta(batch, storeDir, epoch))
-      }
-      .start()
-
-  /** Streaming INCREMENTAL ExactSubstr (r14) — span dedup's streaming
-    * twin of [[dedupDeltas]]: each micro-batch of documents is grammed
-    * against the persisted positional-gram store
-    * ([[graft.ext.SubstrDedup.substrDedupDelta]]), duplication REACHES
-    * BACK (a batch doc repeating a span that until now occurred once
-    * re-cleans the span's single prior holder), and the sink receives
-    * the full latest-per-doc cleaned rows after each batch. Replays are
-    * idempotent: a re-delivered epoch rewrites its own `epoch=N`
-    * partitions with deterministically identical rows (SubstrDedupSpec
-    * + StreamingSpec pin serve ≡ the batch pass over everything
-    * streamed, and the replay). */
-  def substrDedupDeltas(deltaDocs: DataFrame, storeDir: String,
-                        checkpointDir: String)
-                       (sink: DataFrame => Unit): StreamingQuery =
-    deltaDocs.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        sink(graft.ext.SubstrDedup.substrDedupDelta(batch, storeDir, epoch))
-      }
-      .start()
-
-  /** Streaming incremental CHAR-level ExactSubstr (r14) — the character
-    * twin of [[substrDedupDeltas]], same store discipline over suffix
-    * RANK classes (per-doc-local, so delta docs rank once and only the
-    * global class counts evolve; crossing classes reach back). */
-  def substrCharsDeltas(deltaDocs: DataFrame, storeDir: String,
-                        checkpointDir: String)
-                       (sink: DataFrame => Unit): StreamingQuery =
-    deltaDocs.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        sink(graft.ext.SubstrDedup.substrCharsDelta(batch, storeDir, epoch))
-      }
-      .start()
-
-  /** Streaming incremental BM25 index maintenance (r14) — the
-    * lexical-retrieval twin of [[dedupDeltas]]: each micro-batch
-    * tokenizes ONCE into per-epoch doc-length and posting tables
-    * ([[graft.ops.EvalExtra.bm25Delta]]); the sink receives the pinned
-    * query's scores over the corpus as of the epoch (collection stats
-    * folded at serve, so no reach-back rewrite exists by
-    * construction). */
-  def bm25Deltas(deltaDocs: DataFrame, storeDir: String,
-                 checkpointDir: String)
-                (sink: DataFrame => Unit): StreamingQuery =
-    deltaDocs.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        sink(graft.ops.EvalExtra.bm25Delta(batch, storeDir, epoch))
-      }
-      .start()
-
-  /** Streaming incremental centroid maintenance (r14) — the mergeable
-    * exact-sum lifecycle ([[graft.ext.SimSearch.centroidDelta]]) under
-    * foreachBatch; the sink receives the per-label centroids as of the
-    * epoch. */
-  def centroidDeltas(deltaVecs: DataFrame, storeDir: String,
-                     checkpointDir: String)
-                    (sink: DataFrame => Unit): StreamingQuery =
-    deltaVecs.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        sink(graft.ext.SimSearch.centroidDelta(batch, storeDir, epoch))
-      }
-      .start()
-
-  /** Streaming graph-ANN index APPEND (r11, VERDICT #4) — the graph twin
-    * of [[dedupDeltas]]'s incremental lifecycle, over an EMBEDDING DELTA
-    * STREAM: each micro-batch of `(vec_id, label, embedding)` rows ranks
-    * against the SAVED vector store ∪ the batch (the HNSW insertion rule
-    * in batch form — saved nodes' lists never re-rank) and folds its
-    * edges into the epoch-partitioned store via
-    * [[graft.ext.SimSearch.knnGraphDelta]]; the sink receives the merged
-    * servable (symmetrized, degree-capped) edge list after each batch.
-    * Seed the store first with [[graft.ext.SimSearch.knnGraphStoreSeed]].
-    * Replays are idempotent: a re-delivered epoch rewrites its own
-    * `epoch=N` partitions with deterministically identical rows
-    * (StreamingSpec pins streamed ≡ batch `sim_search_knn_graph_append`
-    * and the replay). */
-  def knnGraphDeltas(deltaVecs: DataFrame, storeDir: String,
-                     checkpointDir: String)
-                    (sink: DataFrame => Unit): StreamingQuery =
-    deltaVecs.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        sink(graft.ext.SimSearch.knnGraphDelta(batch, storeDir, epoch))
-      }
-      .start()
-
-  /** Streaming HIERARCHICAL (HNSW) index append (r11) — the 2-layer
-    * twin of [[knnGraphDeltas]]: each micro-batch of `(vec_id,
-    * embedding)` rows ranks LABEL-FREE against saved ∪ delta on both
-    * layers (upper membership is the stateless md5 coin) and folds into
-    * the epoch-partitioned store via [[graft.ext.SimSearch.hnswDelta]];
-    * the sink receives the merged servable layer-0 edge list. Seed with
-    * [[graft.ext.SimSearch.hnswStoreSeed]], serve with
-    * [[graft.ext.SimSearch.serveHnswFromStore]]. Replays are idempotent
-    * (StreamingSpec pins streamed ≡ batch `hnswDelta` and the replay). */
-  def hnswDeltas(deltaVecs: DataFrame, storeDir: String,
-                 checkpointDir: String)
-                (sink: DataFrame => Unit): StreamingQuery =
-    deltaVecs.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        sink(graft.ext.SimSearch.hnswDelta(batch, storeDir, epoch))
-      }
-      .start()
-
-  /** Streaming LEVEL-STACK (multi-layer HNSW) index append (r12) — the
-    * L-layer twin of [[hnswDeltas]]: each micro-batch ranks label-free
-    * on EVERY layer its md5 coins admit and folds into the
-    * [[graft.ext.SimSearch.hnswMultiStoreSeed]] store via
-    * [[graft.ext.SimSearch.hnswMultiDelta]]; the sink receives the
-    * merged servable layer-0 edge list. Serve with
-    * [[graft.ext.SimSearch.serveHnswMultiFromStore]]. Replays are
-    * idempotent (per-epoch partition rewrites, as the 2-layer twin). */
-  def hnswMultiDeltas(deltaVecs: DataFrame, storeDir: String,
-                      checkpointDir: String)
-                     (sink: DataFrame => Unit): StreamingQuery =
-    deltaVecs.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        sink(graft.ext.SimSearch.hnswMultiDelta(batch, storeDir, epoch))
-      }
-      .start()
-
-  /** Streaming MULTIMODAL training-set assembly (r13, VERDICT r12 #7
-    * stretch) — the composed `corpus_clean_multimodal` pipeline run
-    * incrementally over a DOCUMENT DELTA STREAM: each micro-batch of
-    * `(doc_id, lang, n_chars, text)` rows flows gate → md5 text banding
-    * (touched-bucket recompute) → paired-image pHash (codec work paid
-    * once per doc) against the epoch-partitioned store via
-    * [[graft.ext.Multimodal.corpusCleanMultimodalDelta]]; the sink
-    * receives the full updated survivor set (docs that pass the gate
-    * AND rep both their text and image near-dup clusters) after each
-    * batch. Replays are idempotent and the union of epochs is
-    * batch-equivalent (StreamingSpec pins streamed ≡ the batch
-    * `corpus_clean_multimodal` key and the replay). */
-  def corpusCleanDeltas(deltaDocs: DataFrame, storeDir: String,
-                        checkpointDir: String)
-                       (sink: DataFrame => Unit): StreamingQuery =
-    deltaDocs.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        sink(graft.ext.Multimodal.corpusCleanMultimodalDelta(
-          batch, storeDir, epoch))
-      }
-      .start()
-
-  /** Streaming audio CONTENT-ID (r11) — the fingerprint-index twin of
-    * [[dedupDeltas]]/[[knnGraphDeltas]], over a DOCUMENT DELTA STREAM:
-    * each micro-batch of `(doc_id, text)` rows is landmark-fingerprinted
-    * (`mm_audio_fingerprint`'s kernel), matched against the SAVED
-    * fingerprint store ∪ the batch with the offset-consistent vote rule,
-    * and folded into the epoch-partitioned store by
-    * [[graft.ext.Audio.audioFpDelta]]; the sink receives the full match
-    * table after each batch. Replays are idempotent (a re-delivered
-    * epoch rewrites its own partitions; StreamingSpec pins streamed ≡
-    * batch `mm_audio_dedup` and the replay). */
-  def audioFpDeltas(deltaDocs: DataFrame, storeDir: String,
-                    checkpointDir: String)
-                   (sink: DataFrame => Unit): StreamingQuery =
-    deltaDocs.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        sink(graft.ext.Audio.audioFpDelta(batch, storeDir, epoch))
+        sink(delta(batch, epoch))
       }
       .start()
 

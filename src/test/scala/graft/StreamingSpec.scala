@@ -576,10 +576,12 @@ class StreamingSpec extends AnyFunSuite {
     val sink = (assigned: org.apache.spark.sql.DataFrame) =>
       last = assigned.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     ms.addData(first)
-    Streams.dedupDeltas(ms.toDF().toDF("doc_id", "text"), store, ckp)(sink)
+    Streams.epochDeltas(ms.toDF().toDF("doc_id", "text"), ckp)(
+      graft.ext.Dedup.dedupDelta(_, store, _))(sink)
       .awaitTermination()
     ms.addData(second)
-    Streams.dedupDeltas(ms.toDF().toDF("doc_id", "text"), store, ckp)(sink)
+    Streams.epochDeltas(ms.toDF().toDF("doc_id", "text"), ckp)(
+      graft.ext.Dedup.dedupDelta(_, store, _))(sink)
       .awaitTermination()
     // contract: delta-computed clusters ≡ the full plain-bucket-pair
     // recompute over everything streamed so far (same comparator as the
@@ -622,10 +624,12 @@ class StreamingSpec extends AnyFunSuite {
     // two separate AvailableNow drains over one checkpoint (the cron
     // shape) so the second batch really grams against a SAVED store
     ms.addData(first)
-    Streams.substrDedupDeltas(ms.toDF().toDF("doc_id", "text"), store, ckp)(sink)
+    Streams.epochDeltas(ms.toDF().toDF("doc_id", "text"), ckp)(
+      graft.ext.SubstrDedup.substrDedupDelta(_, store, _))(sink)
       .awaitTermination()
     ms.addData(second)
-    Streams.substrDedupDeltas(ms.toDF().toDF("doc_id", "text"), store, ckp)(sink)
+    Streams.epochDeltas(ms.toDF().toDF("doc_id", "text"), ckp)(
+      graft.ext.SubstrDedup.substrDedupDelta(_, store, _))(sink)
       .awaitTermination()
     val full = graft.ext.SubstrDedup
       .removeDuplicatedSpans(docsDf, "doc_id", "text")
@@ -665,10 +669,12 @@ class StreamingSpec extends AnyFunSuite {
     val bSink = (df: org.apache.spark.sql.DataFrame) =>
       bLast = df.collect().map(_.toSeq).toSeq
     bms.addData(d1)
-    Streams.bm25Deltas(bms.toDF().toDF("doc_id", "text"), bStore, bCkp)(bSink)
+    Streams.epochDeltas(bms.toDF().toDF("doc_id", "text"), bCkp)(
+      graft.ops.EvalExtra.bm25Delta(_, bStore, _))(bSink)
       .awaitTermination()
     bms.addData(d2)
-    Streams.bm25Deltas(bms.toDF().toDF("doc_id", "text"), bStore, bCkp)(bSink)
+    Streams.epochDeltas(bms.toDF().toDF("doc_id", "text"), bCkp)(
+      graft.ops.EvalExtra.bm25Delta(_, bStore, _))(bSink)
       .awaitTermination()
     val bBatch = SparkEntry.queries("text_bm25")(spark, sf)
       .collect().map(_.toSeq).toSeq
@@ -687,12 +693,12 @@ class StreamingSpec extends AnyFunSuite {
     val cSink = (df: org.apache.spark.sql.DataFrame) =>
       cLast = df.collect().map(_.toSeq).toSeq
     ems.addData(e1)
-    Streams.centroidDeltas(
-      ems.toDF().toDF("vec_id", "label", "embedding"), cStore, cCkp)(cSink)
+    Streams.epochDeltas(ems.toDF().toDF("vec_id", "label", "embedding"), cCkp)(
+      graft.ext.SimSearch.centroidDelta(_, cStore, _))(cSink)
       .awaitTermination()
     ems.addData(e2)
-    Streams.centroidDeltas(
-      ems.toDF().toDF("vec_id", "label", "embedding"), cStore, cCkp)(cSink)
+    Streams.epochDeltas(ems.toDF().toDF("vec_id", "label", "embedding"), cCkp)(
+      graft.ext.SimSearch.centroidDelta(_, cStore, _))(cSink)
       .awaitTermination()
     val cBatch = SparkEntry.queries("emb_centroid_by_label")(spark, sf)
       .collect().map(_.toSeq).toSeq
@@ -717,10 +723,12 @@ class StreamingSpec extends AnyFunSuite {
     // two SEPARATE AvailableNow drains over one checkpoint (the cron
     // shape) so the second batch really matches against a SAVED store
     ms.addData(first)
-    Streams.audioFpDeltas(ms.toDF().toDF("doc_id", "text"), store, ckp)(sink)
+    Streams.epochDeltas(ms.toDF().toDF("doc_id", "text"), ckp)(
+      graft.ext.Audio.audioFpDelta(_, store, _))(sink)
       .awaitTermination()
     ms.addData(second)
-    Streams.audioFpDeltas(ms.toDF().toDF("doc_id", "text"), store, ckp)(sink)
+    Streams.epochDeltas(ms.toDF().toDF("doc_id", "text"), ckp)(
+      graft.ext.Audio.audioFpDelta(_, store, _))(sink)
       .awaitTermination()
     // contract: the union of per-epoch delta-involving match rows ≡ the
     // batch mm_audio_dedup over everything streamed so far
@@ -778,8 +786,8 @@ class StreamingSpec extends AnyFunSuite {
     val sink = (g: org.apache.spark.sql.DataFrame) =>
       merged = g.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     ms.addData(odd)
-    Streams.knnGraphDeltas(ms.toDF().toDF("vec_id", "label", "embedding"),
-      store, ckp)(sink).awaitTermination()
+    Streams.epochDeltas(ms.toDF().toDF("vec_id", "label", "embedding"), ckp)(
+      graft.ext.SimSearch.knnGraphDelta(_, store, _))(sink).awaitTermination()
     assert(merged.nonEmpty, "the sink never received a merged edge list")
     val probe = e.filter("vec_id = 0").select("embedding")
     val served = graft.ext.SimSearch.serveFromGraphStore(spark, store, probe)
@@ -823,8 +831,8 @@ class StreamingSpec extends AnyFunSuite {
     val sink = (g: org.apache.spark.sql.DataFrame) =>
       merged = g.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     ms.addData(odd)
-    Streams.hnswDeltas(ms.toDF().toDF("vec_id", "embedding"),
-      store, ckp)(sink).awaitTermination()
+    Streams.epochDeltas(ms.toDF().toDF("vec_id", "embedding"), ckp)(
+      graft.ext.SimSearch.hnswDelta(_, store, _))(sink).awaitTermination()
     assert(merged.nonEmpty, "the sink never received a merged edge list")
     // both layers took the epoch's append (the upper slice is the md5
     // coin's ~25% of the delta — nonempty at this corpus size)
@@ -874,8 +882,8 @@ class StreamingSpec extends AnyFunSuite {
     var out: Seq[(Long, String, Long, String)] = Nil
     val sink = (g: org.apache.spark.sql.DataFrame) => out = rows(g)
     ms.addData(even)
-    Streams.corpusCleanDeltas(
-      ms.toDF().toDF("doc_id", "lang", "n_chars", "text"), store, ckp)(sink)
+    Streams.epochDeltas(ms.toDF().toDF("doc_id", "lang", "n_chars", "text"), ckp)(
+      graft.ext.Multimodal.corpusCleanMultimodalDelta(_, store, _))(sink)
       .awaitTermination()
     assert(out.nonEmpty, "the sink never received a survivor set")
     val odd = docs.filter("doc_id % 2 = 1").localCheckpoint()
@@ -917,8 +925,8 @@ class StreamingSpec extends AnyFunSuite {
     val sink = (g: org.apache.spark.sql.DataFrame) =>
       merged = g.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     ms.addData(odd)
-    Streams.hnswMultiDeltas(ms.toDF().toDF("vec_id", "embedding"),
-      store, ckp)(sink).awaitTermination()
+    Streams.epochDeltas(ms.toDF().toDF("vec_id", "embedding"), ckp)(
+      graft.ext.SimSearch.hnswMultiDelta(_, store, _))(sink).awaitTermination()
     assert(merged.nonEmpty, "the sink never received a merged edge list")
     // layer 1 took the epoch's append (deeper layers thin geometrically
     // — at 250 seed vectors layer 3 may legitimately receive no delta)
