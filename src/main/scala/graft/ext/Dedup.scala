@@ -252,7 +252,7 @@ object Dedup extends graft.QueryModule {
     * false merges impossible (refinement property, also spec'd). */
   def minhashClusters(docsDf: DataFrame, keyCol: String, textCol: String,
                       numHashes: Int = NumHashes, numBands: Int = NumBands,
-                      minJaccard: Double = 0.8, maxIter: Int = 25): DataFrame = {
+                      minJaccard: Double = 0.8): DataFrame = {
     require(numHashes % numBands == 0,
       s"numHashes ($numHashes) must be divisible by numBands ($numBands)")
     val withSet = docsDf.select(col(keyCol).as("id"),
@@ -309,8 +309,7 @@ object Dedup extends graft.QueryModule {
       .filter(col("inter") / (col("ni") + col("nj") - col("inter")) >= minJaccard)
       .select(col("i"), col("j"))
       .cut()
-    val labels = connectedComponents(
-      reps.select(col("rid")), verified, "rid", maxIter = maxIter)
+    val labels = connectedComponents(reps.select(col("rid")), verified, "rid")
     // rid = min doc key of its fp group and the component label = min rid,
     // so cluster_id is the minimum doc key over the whole component
     membership
@@ -649,8 +648,8 @@ object Dedup extends graft.QueryModule {
   }
 
   /** Connected components as UNROLLED alternating large-star/small-star
-    * contraction rounds — the SQL twin of [[connectedComponentsStar]]
-    * (r12, VERDICT #3). Assumes CTEs `pairs (i, j)` and `nodes (id)`
+    * contraction rounds — the SQL twin of [[connectedComponents]]'s star
+    * phase (r12, VERDICT #3). Assumes CTEs `pairs (i, j)` and `nodes (id)`
     * are in scope; emits `e0..e$rounds` plus `lab (id, cluster_id)`
     * labeling every node with its component minimum. Replaces the
     * recursive-CTE transitive closure that ran >2 h on sf0.1's
@@ -1005,82 +1004,64 @@ object Dedup extends graft.QueryModule {
 
   /** Connected components over a near-dup pair graph — the step BETWEEN
     * pair generation (minhash/simhash/ngram) and representative selection
-    * ([[Corpus.keepBest]]): every document gets a `cluster_id` (the
-    * minimum doc id in its component; isolated docs cluster with
-    * themselves).
-    *
-    * Algorithm: min-label propagation — iterate
-    * `label := min(label, min(neighbor labels))` to fixpoint. Each round
-    * is one join + one hash-agg on the symmetric edge list;
-    * [[graft.Ckpt.cut]] cuts the growing lineage so round N doesn't replan
-    * rounds 1..N-1. Near-dup graphs converge in a few rounds (components
-    * are dense, diameter ~2-3). At 100 TB set `graft.checkpoint.dir` and
-    * the same loop cuts through reliable checkpoints instead
-    * (CheckpointModeSpec: bit-identical); for
-    * adversarially long path graphs, [[connectedComponentsStar]]
-    * implements the alternating large-star/small-star formulation
-    * (O(log n) rounds regardless of diameter) — near-dup graphs are
-    * dense and shallow, so the simpler loop stays the default here.
-    */
+    * ([[Corpus.keepBest]]): every node gets a `cluster_id`, the minimum
+    * node id of its component (isolated nodes label themselves). Every
+    * edge endpoint must be an id of `nodes`. Exact on every graph shape:
+    * see [[connectedComponentsWithRounds]] for how, and for the one
+    * failure it reports instead of a partial answer. */
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
                           idCol: String = "id", iCol: String = "i",
-                          jCol: String = "j", maxIter: Int = 25): DataFrame = {
-    val (labels, converged, _) =
-      connectedComponentsWithStatus(nodes, edges, idCol, iCol, jCol, maxIter)
-    if (!converged)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"connectedComponents did not converge in $maxIter rounds; " +
-          "returning partial labels (components may be split). For graphs " +
-          "with diameter > maxIter use the large-star/small-star formulation.")
-    labels
-  }
+                          jCol: String = "j"): DataFrame =
+    connectedComponentsWithRounds(nodes, edges, idCol, iCol, jCol)._1
 
-  /** [[connectedComponents]] with an explicit convergence flag and the
-    * number of rounds run, so callers that must not consume partial labels
-    * can decide for themselves (ADVICE r3: a require-throw at maxIter
-    * discards all completed work) and measurements can size the fixpoint.
+  /** Min-label round budget. Near-dup graphs are dense and shallow (2-6
+    * rounds at the pinned SFs); a deeper graph is finished by star
+    * contraction rather than by O(diameter) more rounds. */
+  private val LabelRounds = 25
+  /** Star pair-round budget: large-star/small-star needs O(log n) pairs on
+    * any shape (a 64-node path takes a handful). */
+  private val StarRounds = 50
+
+  /** [[connectedComponents]] plus the rounds each phase ran:
+    * `(labels, labelRounds, starRounds)`.
     *
-    * ONE Spark action per round (VERDICT r3 #3): the changed-label count
-    * is an `observe()` metric collected by the same localCheckpoint action
-    * that materializes the round's labels — previously each round ran a
-    * second full join+filter+count job just for convergence, an extra pass
-    * over the label table per round at 100 TB. Falls back to an explicit
-    * count only if the observed metric is not delivered.
-    */
-  def connectedComponentsWithStatus(nodes: DataFrame, edges: DataFrame,
-                                    idCol: String = "id", iCol: String = "i",
-                                    jCol: String = "j",
-                                    maxIter: Int = 25)
-      : (DataFrame, Boolean, Int) = {
+    * Phase 1, min-label propagation: iterate
+    * `label := min(label, min(neighbor labels))` for at most
+    * [[LabelRounds]] rounds. Each round is one equi-join + one hash-agg
+    * on the symmetric edge list, and [[graft.Ckpt.cut]] cuts the growing
+    * lineage (reliable checkpoints under `graft.checkpoint.dir`:
+    * CheckpointModeSpec pins both modes bit-identical). ONE Spark action
+    * per round: the changed-label count is an `observe()` metric collected
+    * by the cut that materializes the round's labels, with an explicit
+    * count only if the metric is not delivered.
+    *
+    * Phase 2, only if phase 1 ran out of rounds: contract the graph by the
+    * current labels — edge (i, j) becomes (L(i), L(j)), self-loops
+    * dropped — and finish it with alternating LARGE-STAR / SMALL-STAR
+    * rounds (Kiveris et al., "Connected Components in MapReduce and
+    * Beyond"), which converge in O(log n) rounds regardless of diameter;
+    * each node is then relabeled by its label's root. This is exact:
+    * every label L(v) ≤ v is the id of a node in v's component, and the
+    * component's minimum keeps its own label, so the root of each
+    * contracted component is the minimum id of the original one.
+    *
+    * @throws IllegalStateException if the star phase is still changing
+    *   after [[StarRounds]] pair-rounds; labels are only ever returned
+    *   from a converged phase. */
+  private[graft] def connectedComponentsWithRounds(nodes: DataFrame,
+      edges: DataFrame, idCol: String = "id", iCol: String = "i",
+      jCol: String = "j"): (DataFrame, Int, Int) = {
     val sym = edges.select(col(iCol).as("src"), col(jCol).as("dst"))
       .union(edges.select(col(jCol).as("src"), col(iCol).as("dst")))
     var labels = nodes.select(col(idCol).as("id"), col(idCol).as("label"))
     var converged = false
     var iter = 0
-    // ONE neighbor-min step per materialized action. (r15: the r14
-    // pair-pass + pointer-jumping layout is reverted — `step` and
-    // `shortcut` each referenced their input DataFrame twice, so the
-    // un-materialized 4-deep composition duplicated the inner subplans
-    // multiplicatively within one action; measured cost at sf0.1 was
-    // 1.3-2.1x on every CC consumer while saving at most half the
-    // passes on these shallow near-dup graphs. The pointer-jump's
-    // label self-join also keys by component representative, which at
-    // 100 TB shuffles a giant component's members to one partition —
-    // the skew the large-star/small-star sibling exists to avoid; deep
-    // graphs should use [[connectedComponentsStar]] instead.)
-    //
-    // r15, guide §2.4 (share one exchange): the round is the UNION form
-    // `min over ({own label} ∪ incoming neighbor labels) per id` — one
-    // equi-join + ONE hash-agg — instead of the join + groupBy +
-    // left-join-back layout, which paid a third exchange (and a second
-    // labels-side shuffle) per round to reattach isolated nodes. The
-    // per-round relation is identical row-for-row: nodes with no
-    // incoming edge keep their own-label row through the union, and the
-    // pre-round label rides the same agg (max over the own-flagged rows
-    // — labels is unique per id) so the change observation is unchanged.
-    // Probe (corpus pair graph, 3127 nodes / 6442 edges, 11+1 rounds):
-    // 6.6-6.8 s -> 3.7-5.0 s for the fixpoint (same box, same run).
-    while (!converged && iter < maxIter) {
+    // The UNION form: `min over ({own label} ∪ incoming neighbor labels)
+    // per id` — one exchange per side instead of join + agg + left-join
+    // back. Nodes with no incoming edge keep their own-label row through
+    // the union, and the pre-round label rides the same agg (max over the
+    // own-flagged rows — labels is unique per id) to observe the change.
+    while (!converged && iter < LabelRounds) {
       val obs = org.apache.spark.sql.Observation()
       val nbr = sym.join(labels, col("dst") === col("id"))
         .select(col("src").as("id"), col("label"), lit(0L).as("own"))
@@ -1117,16 +1098,25 @@ object Dedup extends graft.QueryModule {
       converged = changed == 0
       iter += 1
     }
-    (labels.select(col("id").as(idCol), col("label").as("cluster_id")),
-      converged, iter)
+    val (exact, starRounds) =
+      if (converged) (labels, 0)
+      else {
+        def labelOf(end: String) =
+          labels.select(col("id").as(end), col("label").as(s"l$end"))
+        val contracted = edges.select(col(iCol).as("a"), col(jCol).as("b"))
+          .join(labelOf("a"), "a").join(labelOf("b"), "b")
+        val (roots, rounds) = starForest(contracted, "la", "lb")
+        (labels.join(roots, col("label") === col("n"), "left")
+          .select(col("id"), coalesce(col("root"), col("label")).as("label")),
+          rounds)
+      }
+    (exact.select(col("id").as(idCol), col("label").as("cluster_id")),
+      iter, starRounds)
   }
 
-  /** Connected components by ALTERNATING LARGE-STAR / SMALL-STAR edge
-    * contraction (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond" — public) — the variant for graphs whose diameter defeats
-    * min-label propagation: [[connectedComponents]] needs O(diameter)
-    * rounds (a 1000-hop chain of near-dup drift would take 1000 passes),
-    * this converges in O(log n) rounds on ANY shape.
+  /** Large-star/small-star rounds to a star forest rooted at component
+    * minima: returns `(n, root)` for every node of `edges` that is not a
+    * root, and the pair-rounds run.
     *
     *  - large-star: every edge (a, b), a < b, is rewritten to
     *    (m(a), b) where m(a) = min(Γ(a) ∪ {a}) — big endpoints hook
@@ -1135,26 +1125,21 @@ object Dedup extends graft.QueryModule {
     *    to its minimum smaller neighbor.
     *
     * Both are one groupBy-min + one equi-join over the edge list — the
-    * same shuffle shape as a min-label round, there are just
-    * exponentially fewer of them. Fixpoint = the edge set is a union of
-    * stars rooted at component minima; convergence is detected by edge
-    * count + set-difference emptiness over the localCheckpoint'ed edge
-    * lists (two cheap scans per pair — at O(log n) pairs this costs
-    * less than the observe plumbing saves on the O(diameter) sibling).
-    *
-    * Returns ((id, cluster_id), pairRounds). Cluster label = min node id
-    * of the component; isolated nodes label themselves. */
-  def connectedComponentsStar(nodes: DataFrame, edges: DataFrame,
-                              idCol: String = "id", iCol: String = "i",
-                              jCol: String = "j",
-                              maxIter: Int = 50): (DataFrame, Int) = {
+    * shuffle shape of a min-label round. Fixpoint = the pair left the
+    * edge set unchanged (edge count + set-difference emptiness over the
+    * cut edge lists). */
+  private def starForest(edges: DataFrame, iCol: String, jCol: String)
+      : (DataFrame, Int) = {
     def canon(df: DataFrame, a: String, b: String): DataFrame =
       df.select(least(col(a), col(b)).as("s"), greatest(col(a), col(b)).as("t"))
         .filter(col("s") =!= col("t")).distinct()
     var e = canon(edges, iCol, jCol).cut()
     var rounds = 0
     var done = e.isEmpty
-    while (!done && rounds < maxIter) {
+    while (!done) {
+      if (rounds == StarRounds)
+        throw new IllegalStateException("connectedComponents: star " +
+          s"contraction still changing after $StarRounds pair-rounds")
       // large-star: for each edge (a, b) a < b -> (min(Γ(a) ∪ {a}), b)
       val sym = e.select(col("s").as("u"), col("t").as("v"))
         .union(e.select(col("t").as("u"), col("s").as("v")))
@@ -1175,22 +1160,13 @@ object Dedup extends graft.QueryModule {
             .filter(col("v") =!= col("m"))
             .select(col("v").as("i"), col("m").as("j"))), "i", "j")
         .cut()
-      // fixpoint: the (large+small) pair left the edge set unchanged
       done = small.count() == e.count() && small.except(e).isEmpty
       e = small
       rounds += 1
     }
-    if (!done)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"connectedComponentsStar did not converge in $maxIter rounds")
-    val neighborMin = e.select(col("s").as("n"), col("t").as("nb"))
-      .union(e.select(col("t").as("n"), col("s").as("nb")))
-      .groupBy(col("n")).agg(min(col("nb")).as("mn"))
-    val labels = nodes.select(col(idCol).as("id"))
-      .join(neighborMin, col("id") === col("n"), "left")
-      .select(col("id").as(idCol),
-        least(col("id"), coalesce(col("mn"), col("id"))).as("cluster_id"))
-    (labels, rounds)
+    // in a star forest every edge is (root, leaf): a leaf's one
+    // neighbor is its root
+    (e.select(col("t").as("n"), col("s").as("root")), rounds)
   }
 
   /** Query key: components of the oracle-checked exact ngram-Jaccard pair

@@ -792,8 +792,9 @@ object Multimodal extends graft.QueryModule {
     *  3. IMAGE near-dup collapse over the SAME gated docs — the paired
     *     image (the real PNG round-trip of `mm_phash_dct`) hashes to a
     *     15-bit DCT pHash, pairs band-join at Hamming ≤ 2 (pigeonhole-
-    *     lossless, `mm_phash_pairs`' machinery), components via the
-    *     alternating-star CC, min-id rep per IMAGE cluster survives;
+    *     lossless, `mm_phash_pairs`' machinery), components via
+    *     [[graft.ext.Dedup.connectedComponents]], min-id rep per IMAGE
+    *     cluster survives;
     *  4. SURVIVORS = docs that pass the gate AND rep BOTH their text
     *     and image clusters — a reworded copy dies on leg 2, a re-
     *     encoded/near-identical image dies on leg 3.
@@ -863,8 +864,9 @@ object Multimodal extends graft.QueryModule {
       .distinct()
       .filter(mmHam <= 2)
       .select(col("i"), col("j"))
-    val imgReps = Dedup.connectedComponentsStar(
-        hashed.select(col("doc_id").as("id")), pairs)._1
+      .cut() // the CC rounds join the edge list every round
+    val imgReps = Dedup.connectedComponents(
+        hashed.select(col("doc_id").as("id")), pairs)
       .filter(col("id") === col("cluster_id"))
       .select(col("id").as("doc_id"))
     gated.join(textReps, Seq("doc_id"), "left_semi")
@@ -897,7 +899,7 @@ object Multimodal extends graft.QueryModule {
     *    full phash store at Hamming <= 2 — plain band pairs decompose,
     *    so the epoch union IS the batch pair set (each pair materializes
     *    in its later member's epoch), no supersede needed;
-    *  - OUTPUT: star-CC over both accumulated pair graphs; survivors rep
+    *  - OUTPUT: CC over both accumulated pair graphs; survivors rep
     *    BOTH their text and image clusters — batch-equivalent by
     *    construction (StreamingSpec pins union-of-epochs ≡ the batch
     *    `corpus_clean_multimodal` and replay idempotence).
@@ -937,9 +939,10 @@ object Multimodal extends graft.QueryModule {
       .select("i", "j")
     st.write("tpairs", cand.join(verified, Seq("i", "j"))
       .select("band", "h", "i", "j").cut())
+    // both edge lists are cut: the CC rounds join them every round
     val validT = graft.pipeline.StoreCompact
       .latestTextPairs(st.read("tpairs"), st.read("bmark"))
-      .select("i", "j").distinct()
+      .select("i", "j").distinct().cut()
     // IMAGE: delta bands x full store (band equi-join, Hamming verify)
     val allPh = st.read("phash")
       .select("doc_id", "phash").dropDuplicates("doc_id")
@@ -955,16 +958,16 @@ object Multimodal extends graft.QueryModule {
       .filter(mmHam <= 2)
       .select("i", "j").cut()
     st.write("ipairs", ipFresh)
-    val validI = st.read("ipairs").select("i", "j").distinct()
+    val validI = st.read("ipairs").select("i", "j").distinct().cut()
     // OUTPUT: both CC fixpoints over the accumulated graphs + survivors
     val gatedAll = st.read("docs")
       .select("doc_id", "lang", "n_chars").dropDuplicates("doc_id")
-    val trep = Dedup.connectedComponentsStar(
-        allDocs.select(col("doc_id").as("id")), validT)._1
+    val trep = Dedup.connectedComponents(
+        allDocs.select(col("doc_id").as("id")), validT)
       .filter(col("id") === col("cluster_id"))
       .select(col("id").as("doc_id"))
-    val irep = Dedup.connectedComponentsStar(
-        allPh.select(col("doc_id").as("id")), validI)._1
+    val irep = Dedup.connectedComponents(
+        allPh.select(col("doc_id").as("id")), validI)
       .filter(col("id") === col("cluster_id"))
       .select(col("id").as("doc_id"))
     gatedAll.join(trep, Seq("doc_id"), "left_semi")

@@ -3212,12 +3212,11 @@ object SimSearch extends graft.QueryModule {
     * over the exact k-NN graph): cluster embeddings whose k-NN edges
     * clear a cosine floor (0.35 here — the synthetic corpus has no
     * planted near-dups, so the floor sits in the top tail of the
-    * observed cosine range), via the SAME min-label connected-
-    * components loop the text near-dup family uses
-    * ([[graft.ext.Dedup.connectedComponents]]); report multi-member
-    * clusters with their min-id representative. Scale shape: knn
-    * edges are label-blocked (never all-pairs), CC is the shared
-    * iterative loop, the report is one hash agg. */
+    * observed cosine range), via the connected components the text
+    * near-dup family uses ([[graft.ext.Dedup.connectedComponents]]);
+    * report multi-member clusters with their min-id representative.
+    * Scale shape: knn edges are label-blocked (never all-pairs), CC is
+    * the shared iterative loop, the report is one hash agg. */
   private def semanticClusters(s: SparkSession, d: String): DataFrame = {
     // localCheckpoint: the CC loop joins the edge list EVERY round —
     // without the cut it would replay the blocked pair scan per round
@@ -3241,12 +3240,10 @@ object SimSearch extends graft.QueryModule {
     * label crutch in the one downstream consumer of the blocked build:
     * at 100 TB SemDeDup runs on an unlabeled corpus, so its candidate
     * graph must come from the LSH-seeded NN-Descent machinery, not a
-    * fixture label. CC is the alternating-STAR formulation, not
-    * min-label rounds: unblocked threshold graphs over isotropic
-    * embeddings grow long thin chains (measured at sf0.1: one
-    * component's diameter exceeds 25 min-label rounds, splitting a
-    * cluster), and large-star/small-star converges in O(log n) rounds
-    * regardless of diameter — exactly the SCALE.md guidance. */
+    * fixture label. Unblocked threshold graphs over isotropic
+    * embeddings grow long thin chains: at sf0.1 one component outgrows
+    * the 25 min-label rounds, and [[graft.ext.Dedup.connectedComponents]]
+    * finishes it by star contraction. */
   private def semanticClustersBucketed(s: SparkSession, d: String): DataFrame = {
     import graft.Ckpt.CutOps
     val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
@@ -3257,7 +3254,7 @@ object SimSearch extends graft.QueryModule {
       .distinct()
       .cut()
     val nodes = Tables.embeddings(s, d).select(col("vec_id").as("id"))
-    Dedup.connectedComponentsStar(nodes, edges)._1
+    Dedup.connectedComponents(nodes, edges)
       .groupBy(col("cluster_id"))
       .agg(count(lit(1)).as("cluster_size"),
         concat_ws(",", sort_array(collect_list(col("id")))).as("members"))

@@ -178,16 +178,16 @@ object EntityResolution extends graft.QueryModule {
   /** End-to-end entity resolution [N]: the sorted-neighborhood candidate
     * pairs ([[sortedNeighborhood]], jw ≥ 0.92) become match edges, and
     * transitive closure over them — [[graft.ext.Dedup.connectedComponents]],
-    * the same min-label loop the near-dup family ships — merges records
+    * the same exact CC the near-dup family ships — merges records
     * into ENTITIES. This is the layer the pair generators feed in a real
     * MDM pipeline: pairs alone under-merge (A~B, B~C but A≁C directly).
     * Output is one row per multi-record entity: representative id (min),
     * size, sorted member list.
     *
     * Scale shape: candidate generation is the O(n·w) block-window pass;
-    * closure is the dense-shallow min-label loop (entity clusters have
-    * diameter ~1-2); the final collect_list is bounded by cluster size —
-    * entities are small by construction. */
+    * closure finishes in CC's min-label phase (entity clusters have
+    * diameter ~1-2, so no star contraction); the final collect_list is
+    * bounded by cluster size — entities are small by construction. */
   private def resolutionClusters(s: SparkSession, d: String): DataFrame = {
     val pairs = sortedNeighborhood(s, d)
       .select(col("a_id").as("i"), col("b_id").as("j"))

@@ -124,25 +124,18 @@ object Probe {
     }
 
     if (sections("cc")) {
-      // ---- CC fixpoint census: min-label loop vs star contraction on
-      // the corpus pipeline's real pair graph ----
+      // ---- CC fixpoint census on the corpus pipeline's real pair graph:
+      // rounds per phase and seconds ----
       val pairs = graft.Ckpt.cut(graft.ext.Dedup.md5StarChainPairs(exDocs()))
       val nodes = graft.Ckpt.cut(exDocs().select(col("doc_id")))
       println("[probe] corpus pair edges = " + pairs.count() +
         ", nodes = " + nodes.count())
       locally {
         val t0 = System.nanoTime()
-        val (lab, conv, rounds) = graft.ext.Dedup.connectedComponentsWithStatus(
-          nodes, pairs, "doc_id", maxIter = 50)
+        val (lab, labelRounds, starRounds) =
+          graft.ext.Dedup.connectedComponentsWithRounds(nodes, pairs, "doc_id")
         lab.write.format("noop").mode("overwrite").save()
-        println(f"[probe] cc_minlabel rounds=$rounds conv=$conv ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      }
-      locally {
-        val t0 = System.nanoTime()
-        val (lab, rounds) = graft.ext.Dedup.connectedComponentsStar(
-          nodes, pairs, "doc_id", iCol = "i", jCol = "j")
-        lab.write.format("noop").mode("overwrite").save()
-        println(f"[probe] cc_star rounds=$rounds ${(System.nanoTime() - t0) / 1e9}%.2f s")
+        println(f"[probe] cc label_rounds=$labelRounds star_rounds=$starRounds ${(System.nanoTime() - t0) / 1e9}%.2f s")
       }
       // and on dedup_minhash's verified star-edge graph over word-set reps
       locally {
@@ -151,39 +144,6 @@ object Probe {
         graft.ext.Dedup.minhashClusters(raw, "doc_id", "text")
           .write.format("noop").mode("overwrite").save()
         println(f"[probe] mh_clusters_cc ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      }
-      // UNION-form min-label round prototype: one equi-join + one agg per
-      // round (labels ∪ neighbor-candidates → min per id) instead of
-      // join + agg + left-join-back; change observation rides the same
-      // agg (own-label recovered via max over the flagged union)
-      locally {
-        val sym = pairs.select(col("i").as("src"), col("j").as("dst"))
-          .union(pairs.select(col("j").as("src"), col("i").as("dst")))
-        val t0 = System.nanoTime()
-        var labels = nodes.select(col("doc_id").as("id"), col("doc_id").as("label"))
-        var converged = false
-        var iter = 0
-        while (!converged && iter < 50) {
-          val obs = org.apache.spark.sql.Observation()
-          val nbr = sym.join(labels, col("dst") === col("id"))
-            .select(col("src").as("id"), col("label"), lit(0L).as("own"))
-          val updated = labels.select(col("id"), col("label"), lit(1L).as("own"))
-            .unionAll(nbr)
-            .groupBy(col("id"))
-            .agg(min(col("label")).as("label"),
-              max(when(col("own") === 1L, col("label"))).as("old"))
-            .select(col("id"), col("label"),
-              (col("label") =!= col("old")).cast("long").as("chg"))
-            .observe(obs, sum(col("chg")).as("changed"))
-            .select(col("id"), col("label"))
-          val updatedCut = graft.Ckpt.cut(updated)
-          val changed = scala.concurrent.Await.result(
-            obs.future, scala.concurrent.duration.Duration(30, "s"))
-          labels = updatedCut
-          converged = changed.isNullAt(0) || changed.getLong(0) == 0
-          iter += 1
-        }
-        println(f"[probe] cc_unionform iters=$iter conv=$converged ${(System.nanoTime() - t0) / 1e9}%.2f s")
       }
     }
 

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Reliable-checkpoint mode (r11, VERDICT #3): the iterative fixpoints
@@ -14,14 +15,17 @@ class CheckpointModeSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
 
-  private def runBoth(key: String): Unit = {
+  private def runBoth(key: String): Seq[Row] =
+    runBothOn(key)(SparkEntry.queries(key)(spark, sf))
+
+  private def runBothOn(key: String)(result: => DataFrame): Seq[Row] = {
     val dir = java.nio.file.Files
       .createTempDirectory(s"graft_ckpt_$key").toString
     try {
       spark.conf.unset("graft.checkpoint.dir")
-      val local = SparkEntry.queries(key)(spark, sf).collect().toSeq
+      val local = result.collect().toSeq
       spark.conf.set("graft.checkpoint.dir", dir)
-      val reliable = SparkEntry.queries(key)(spark, sf).collect().toSeq
+      val reliable = result.collect().toSeq
       assert(local == reliable,
         s"$key diverged between localCheckpoint and reliable checkpoint modes")
       // the reliable leg must have actually checkpointed — an empty dir
@@ -29,6 +33,7 @@ class CheckpointModeSpec extends AnyFunSuite {
       val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
         .filter(java.nio.file.Files.isRegularFile(_)).count()
       assert(wrote > 0, s"$key: no checkpoint files written under $dir")
+      local
     } finally {
       spark.conf.unset("graft.checkpoint.dir")
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
@@ -41,6 +46,17 @@ class CheckpointModeSpec extends AnyFunSuite {
 
   test("connected components (dedup_clusters) is hash-identical across modes") {
     runBoth("dedup_clusters")
+  }
+
+  test("connected components past the round budget is hash-identical across modes") {
+    // a 64-node path outgrows the min-label rounds, so the contraction
+    // and the star rounds' cuts run in both modes too
+    import spark.implicits._
+    val rows = runBothOn("cc_deep_path") {
+      graft.ext.Dedup.connectedComponents((1L to 64L).toDF("id"),
+        (1L until 64L).map(i => (i, i + 1)).toDF("i", "j")).orderBy("id")
+    }
+    assert(rows.map(_.getLong(1)).toSet == Set(1L))
   }
 
   test("weighted SSSP is hash-identical across checkpoint modes") {

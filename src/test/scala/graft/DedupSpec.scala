@@ -149,69 +149,126 @@ class DedupSpec extends AnyFunSuite {
     } finally spark.listenerManager.unregister(listener)
   }
 
-  test("connectedComponentsWithStatus: maxIter exhaustion degrades, not throws") {
-    import spark.implicits._
-    import graft.ext.Dedup
-    val nodes = (1L to 4L).toDF("id")
-    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("i", "j")
-    // one round cannot push label 1 three hops down the path
-    val (labels, converged, rounds) = Dedup.connectedComponentsWithStatus(
-      nodes, edges, maxIter = 1)
-    assert(!converged)
-    assert(rounds == 1)
-    val got = labels.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    // partial but usable: one propagation round happened
-    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 2L, 4L -> 3L))
-    // and the lenient wrapper returns the same labels without throwing
-    val lenient = Dedup.connectedComponents(nodes, edges, maxIter = 1)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(lenient == got)
+  /** Brute-force oracle: union-find, each root the minimum of its set. */
+  private def unionFind(nodes: Seq[Long], edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map(nodes.map(n => n -> n): _*)
+    def find(x: Long): Long =
+      if (parent(x) == x) x else { val r = find(parent(x)); parent(x) = r; r }
+    for ((a, b) <- edges) {
+      val (ra, rb) = (find(a), find(b))
+      parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    nodes.map(n => n -> find(n)).toMap
   }
 
-  test("large-star/small-star CC: long path converges in O(log n) rounds") {
+  /** (labels, labelRounds, starRounds) of the one CC entry. */
+  private def cc(nodes: Seq[Long], edges: Seq[(Long, Long)]) = {
     import spark.implicits._
-    import graft.ext.Dedup
-    // a 64-node path has diameter 63 — min-label propagation would need
-    // ~63 rounds; star contraction must do it in ~log2(64) + slack
-    val n = 64
-    val nodes = (1L to n.toLong).toDF("id")
-    val edges = (1L until n.toLong).map(i => (i, i + 1)).toDF("i", "j")
-    val (labels, rounds) = Dedup.connectedComponentsStar(nodes, edges)
-    val got = labels.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(got.values.toSet == Set(1L), s"path not fully merged: $got")
-    info(s"64-node path converged in $rounds star pair-rounds")
-    assert(rounds <= 12, s"star contraction took $rounds rounds")
+    val (labels, labelRounds, starRounds) = graft.ext.Dedup
+      .connectedComponentsWithRounds(nodes.toDF("id"), edges.toDF("i", "j"))
+    (labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap,
+      labelRounds, starRounds)
   }
 
-  test("large-star/small-star CC == min-label CC on a seeded random graph") {
-    import spark.implicits._
-    import graft.ext.Dedup
+  test("connectedComponents: a path past the round budget finishes by star contraction") {
+    // a 64-node path has diameter 63: the 25 min-label rounds leave it
+    // split, and star contraction must finish it in ~log2(64) + slack
+    // pair-rounds; a separate pair and an isolate ride along
+    val nodes = (1L to 64L) ++ Seq(100L, 101L, 200L)
+    val edges = (1L until 64L).map(i => (i, i + 1)) :+ ((100L, 101L))
+    val (got, labelRounds, starRounds) = cc(nodes, edges)
+    assert(got == (1L to 64L).map(_ -> 1L).toMap ++
+      Map(100L -> 100L, 101L -> 100L, 200L -> 200L))
+    info(s"64-node path: $labelRounds min-label rounds, $starRounds star pair-rounds")
+    assert(labelRounds == 25)
+    assert(starRounds >= 1 && starRounds <= 12, s"star contraction took $starRounds rounds")
+  }
+
+  test("connectedComponents == union-find on a seeded random graph, with a deep tail") {
     val rnd = new scala.util.Random(23)
     val n = 300L
-    val nodes = (1L to n).toDF("id")
+    val nodes = 1L to n
     val edges = (1 to 350).map { _ =>
       (rnd.nextLong(n) + 1, rnd.nextLong(n) + 1)
-    }.filter(p => p._1 != p._2).toDF("i", "j")
-    val byStar = Dedup.connectedComponentsStar(nodes, edges)._1
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val byLabel = Dedup.connectedComponents(nodes, edges)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(byStar == byLabel)
+    }.filter(p => p._1 != p._2)
+    val (got, labelRounds, starRounds) = cc(nodes, edges)
+    assert(got == unionFind(nodes, edges))
+    assert(starRounds == 0, s"shallow graph left the min-label phase after $labelRounds rounds")
+    // label 1 cannot walk a 40-hop tail off node 1 in 25 rounds, so
+    // both phases run
+    val tail = 1L +: (n + 1 to n + 40)
+    val tailNodes = nodes ++ tail.tail
+    val tailEdges = edges ++ tail.zip(tail.tail)
+    val (gotTail, tailLabelRounds, tailStarRounds) = cc(tailNodes, tailEdges)
+    assert(gotTail == unionFind(tailNodes, tailEdges))
+    assert(tailLabelRounds == 25 && tailStarRounds >= 1)
   }
 
-  test("large-star/small-star CC: empty edges and self/duplicate edges") {
+  test("connectedComponents: empty edges and self/duplicate edges") {
     import spark.implicits._
     import graft.ext.Dedup
     val nodes = (1L to 4L).toDF("id")
     val empty = Seq.empty[(Long, Long)].toDF("i", "j")
-    val (iso, r0) = Dedup.connectedComponentsStar(nodes, empty)
-    assert(iso.collect().map(r => (r.getLong(0), r.getLong(1))).toMap ==
+    assert(Dedup.connectedComponents(nodes, empty)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap ==
       Map(1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 4L))
-    assert(r0 == 0)
     val messy = Seq((2L, 2L), (3L, 4L), (4L, 3L), (3L, 4L)).toDF("i", "j")
-    val (got, _) = Dedup.connectedComponentsStar(nodes, messy)
-    assert(got.collect().map(r => (r.getLong(0), r.getLong(1))).toMap ==
+    assert(Dedup.connectedComponents(nodes, messy)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap ==
       Map(1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 3L))
+  }
+
+  test("connectedComponents == union-find on generated adversarial graphs") {
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    import org.scalacheck.rng.Seed
+    // every graph holds one giant component (a random spanning tree plus
+    // chords), isolates, self-loops and edges duplicated in both
+    // orientations; a 30-node path (deeper than the min-label budget
+    // when its minimum sits near an end) or a 60-node one (always
+    // deeper) rides along in most. Ids are shuffled, so a component's
+    // minimum sits anywhere in it.
+    val graphs = for {
+      giant <- Gen.choose(5, 30)
+      chords <- Gen.choose(0, 20)
+      pathLen <- Gen.oneOf(0, 30, 60)
+      isolates <- Gen.choose(1, 5)
+      seed <- Gen.long
+    } yield {
+      val rnd = new scala.util.Random(seed)
+      val ids = rnd.shuffle((1L to 200L).toVector).take(giant + pathLen + isolates)
+      val (g, path) = (ids.take(giant), ids.slice(giant, giant + pathLen))
+      val tree = (1 until giant).map(k => (g(rnd.nextInt(k)), g(k)))
+      val chordEdges = Seq.fill(chords)((g(rnd.nextInt(giant)), g(rnd.nextInt(giant))))
+      val pathEdges = path.zip(path.drop(1))
+      val loops = Seq.fill(3)(ids(rnd.nextInt(ids.size))).map(v => (v, v))
+      val dups = (tree ++ pathEdges).take(6).flatMap { case (a, b) => Seq((a, b), (b, a)) }
+      (ids, rnd.shuffle(tree ++ chordEdges ++ pathEdges ++ loops ++ dups))
+    }
+    var starPhase = 0
+    val prop = Prop.forAllNoShrink(graphs) { case (nodes, edges) =>
+      val (got, _, starRounds) = cc(nodes, edges)
+      if (starRounds > 0) starPhase += 1
+      got == unionFind(nodes, edges)
+    }
+    // few samples: a graph past the round budget costs 25 Spark rounds
+    val res = Check.check(Check.Parameters.default
+      .withMinSuccessfulTests(5).withInitialSeed(Seed(6L)), prop)
+    assert(res.passed, res.status)
+    info(s"$starPhase of 5 graphs finished by star contraction")
+    assert(starPhase >= 1 && starPhase < 5, "the seed must cover both phases")
+  }
+
+  test("CC consumers: jobs per warm run stay pinned at sf0.001") {
+    // a barrier gate for the keys that end in connectedComponents: an
+    // extra round, cut or shuffle moves the (jobs, stages) pair (recipe:
+    // JobCensus)
+    val pinned = Map(
+      "dedup_clusters" -> (17, 37), "dedup_minhash" -> (24, 52),
+      "dedup_semantic" -> (9, 17), "corpus_clean_pipeline" -> (13, 34),
+      "dedup_semantic_bucketed" -> (25, 65), "corpus_clean_multimodal" -> (31, 74))
+    val ns = JobCensus.session()
+    val got = pinned.keys.map(k => k -> JobCensus.warmJobs(ns, k)).toMap
+    assert(got == pinned)
   }
 
   test("deletion-neighborhood blocking finds exactly the edit-dist<=1 pairs") {

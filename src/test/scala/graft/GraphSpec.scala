@@ -1,10 +1,6 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** Triangle-counting semantics on hand-built graphs (the oracle proves
@@ -210,61 +206,18 @@ class GraphSpec extends AnyFunSuite {
     }
   }
 
-  /** Spark (jobs, stages) started by one warm run of `key` on sf0.001:
-    * an untimed first run warms the session's edge cache, then a listener
-    * tallies the jobs of the second run's job group (the Probe `jobs`
-    * census). A sentinel job submitted after the run marks the end of its
-    * events: the listener bus delivers them in order, so once the
-    * sentinel's start is seen every job of the run has been counted. */
-  private def warmJobs(ns: org.apache.spark.sql.SparkSession, key: String): (Int, Int) = {
-    def run(): Unit = SparkEntry.queries(key)(ns, TestSpark.sf0001)
-      .write.format("noop").mode("overwrite").save()
-    val (group, sentinel) = (s"graph-jobs-$key", s"graph-jobs-$key-end")
-    val (jobs, stages) = (new AtomicInteger, new AtomicInteger)
-    val done = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        Option(j.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) =>
-            jobs.incrementAndGet(); stages.addAndGet(j.stageInfos.size)
-          case Some(`sentinel`) => done.countDown()
-          case _ =>
-        }
-    }
-    val sc = spark.sparkContext
-    def inGroup(g: String)(body: => Unit): Unit = {
-      sc.setJobGroup(g, g)
-      try body finally sc.clearJobGroup()
-    }
-    run()
-    sc.addSparkListener(listener)
-    try {
-      inGroup(group)(run())
-      inGroup(sentinel)(sc.parallelize(Seq(1), 1).count())
-      assert(done.await(60, TimeUnit.SECONDS), s"$key: sentinel job never seen")
-      (jobs.get, stages.get)
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("graph family: jobs per warm run stay pinned at sf0.001") {
     // a barrier gate for the family's shared edge prep and kernels: an
     // extra cut, a lost broadcast, an extra shuffle or a duplicated subplan
-    // moves the (jobs, stages) pair, which (unlike seconds) does not depend
-    // on machine load. AQE is off in this session: with it on, each shuffle
-    // stage is a job of its own and a runtime join switch can drop one, so
-    // the count hangs on which stage finishes first (betweenness read 39 or
-    // 40 jobs). Without it the plan, and so the count, is fixed.
+    // moves the (jobs, stages) pair (recipe: JobCensus)
     val pinned = Map(
       "graph_pagerank" -> (15, 23), "graph_ppr" -> (15, 23),
       "graph_bfs" -> (11, 18), "graph_closeness" -> (11, 20),
       "graph_sssp" -> (11, 18), "graph_labelprop" -> (14, 28),
       "graph_hits" -> (21, 39), "graph_betweenness" -> (23, 40),
       "graph_random_walks" -> (16, 19), "graph_node2vec" -> (16, 20))
-    // a fresh session, so no other suite's runtime conf leaks in
-    val ns = spark.newSession()
-    ns.conf.set("spark.sql.shuffle.partitions", "4")
-    ns.conf.set("spark.sql.adaptive.enabled", "false")
-    val got = pinned.keys.map(k => k -> warmJobs(ns, k)).toMap
+    val ns = JobCensus.session()
+    val got = pinned.keys.map(k => k -> JobCensus.warmJobs(ns, k)).toMap
     assert(got == pinned)
   }
 
