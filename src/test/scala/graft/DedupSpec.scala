@@ -170,7 +170,24 @@ class DedupSpec extends AnyFunSuite {
       labelRounds, starRounds)
   }
 
-  test("connectedComponents: a path past the round budget finishes by star contraction") {
+  test("connectedComponentsWithStatus: maxIter exhaustion degrades, not throws") {
+    import spark.implicits._
+    // a 30-node path with its minimum at one end has diameter 29: the 25
+    // min-label rounds run out, and the entry must degrade to star
+    // contraction and return exact labels instead of throwing;
+    // connectedComponents returns the same labels
+    val nodes = 1L to 30L
+    val edges = (1L until 30L).map(i => (i, i + 1))
+    val (got, labelRounds, starRounds) = cc(nodes, edges)
+    assert(labelRounds == 25)
+    assert(starRounds >= 1)
+    assert(got == nodes.map(_ -> 1L).toMap)
+    val plain = graft.ext.Dedup.connectedComponents(nodes.toDF("id"), edges.toDF("i", "j"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(plain == got)
+  }
+
+  test("large-star/small-star CC: long path converges in O(log n) rounds") {
     // a 64-node path has diameter 63: the 25 min-label rounds leave it
     // split, and star contraction must finish it in ~log2(64) + slack
     // pair-rounds; a separate pair and an isolate ride along
