@@ -223,14 +223,7 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // local A/B harness: SPARK_GRAFT_CONF=key=value,key=value applies
-    // session confs before the sweep (e.g. the graph broadcast toggle)
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(",").foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) => spark.conf.set(k.trim, v.trim)
-        case _ => ()
-      }
-    })
+    EnvConf(spark)
     // Warmup outside the timed loop: JVM/codegen baseline + parquet
     // footer/file-index reads + the noop write path, so per-query numbers
     // reflect steady state rather than whichever key happens to run first.

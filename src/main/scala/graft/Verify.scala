@@ -14,6 +14,7 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    EnvConf(spark)
     new java.io.File(outDir).mkdirs()
     // local-iteration filter (driver runs unfiltered): dump only these keys
     val only = sys.env.get("SPARK_GRAFT_ONLY")

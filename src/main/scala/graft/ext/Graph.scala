@@ -1,6 +1,7 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -36,12 +37,31 @@ object Graph extends graft.QueryModule {
     * join key once ([[edgePrep]]) so each iteration shuffles only the
     * |V|-row vertex table — the edge relation (the big side) never moves
     * again. Both modes are hash-identical (GraphSpec proves it at 4 and
-    * 32 partitions). Read only by [[maybeBroadcast]], [[edgePrep]] and
-    * [[hitsIterate]]. */
+    * 32 partitions). Read only by [[maybeBroadcast]], [[edgePrep]],
+    * [[hitsIterate]] and the driver-local gate [[fitsDriver]] (off means
+    * the rank fixpoints never collect their edges). */
   val BroadcastConf = "graft.graph.broadcastVertexDomain"
 
   private def vertexBroadcast(s: SparkSession): Boolean =
     s.conf.get(BroadcastConf, "true").toBoolean
+
+  /** The one gate of the driver-local rank fixpoints ([[pinnedRank]],
+    * [[hitsIterate]]): Spark's own broadcast decision, applied to the
+    * canonical edge list. Local when the vertex domain is broadcast
+    * ([[BroadcastConf]]) and the edges' estimated size — their count
+    * times the (a, b) row size, 24 B for two bigints — is at most
+    * `spark.sql.autoBroadcastJoinThreshold`. A negative threshold (or
+    * BroadcastConf off) turns the path off without running anything;
+    * otherwise the gate costs one count job. sf0.01's 115,729 edges
+    * (2.8 MB) go local at the default 10 MB; sf0.1's 1,196,000 (28.7 MB)
+    * stay distributed. */
+  private[graft] def fitsDriver(s: SparkSession, edges: DataFrame): Boolean = {
+    val threshold = s.sessionState.conf.autoBroadcastJoinThreshold
+    vertexBroadcast(s) && threshold >= 0 && {
+      val ab = edges.select(col("a"), col("b")).queryExecution.analyzed.output
+      BigInt(edges.count()) * EstimationUtils.getSizePerRow(ab) <= threshold
+    }
+  }
 
   /** Broadcast hint only while the vertex domain is broadcast-safe. */
   private def maybeBroadcast(s: SparkSession, df: DataFrame): DataFrame =
@@ -177,28 +197,45 @@ object Graph extends graft.QueryModule {
   private val prIters = 5
 
   /** The pinned rank iteration of [[pageRank]] and
-    * [[personalizedPageRank]] [N]: a random walk with restart whose
-    * teleport mass returns to the vertices where `seed(node)` holds —
-    * every vertex for global PageRank, so restart is uniform. It is
-    * CROSS-ENGINE-DETERMINISTIC. The naive formulation can never
-    * hash-match an oracle: per-neighbor contribution sums are double adds
-    * whose result depends on aggregation order. Here each iteration pins
-    * the per-edge contribution to a 12dp decimal (`bround(rank/deg, 12)`
-    * ↔ `round_even(...)`) so the neighbor sum is EXACT and
-    * order-invariant, converts the sum to double once per vertex, and
-    * re-pins the damped rank at 12dp — bit-identical on any partitioning
-    * and in any engine. Plan shape per iteration: one equi-join rank×
-    * edges (both layouts of [[edgePrep]]) + one hash agg; `.cut()` bounds
-    * the lineage exactly like [[Dedup.connectedComponents]]. Fixed
-    * `prIters` iterations (deterministic work, no convergence action);
-    * undirected co-purchase edges mean no dangling mass. Returns
-    * (node, deg, rank). */
-  private def pinnedRank(s: SparkSession, d: String,
+    * [[personalizedPageRank]] [N] over the canonical `a < b` `edges`: a
+    * random walk with restart whose teleport mass returns to the vertices
+    * where `seed(node)` holds — every vertex for global PageRank, so
+    * restart is uniform. It is CROSS-ENGINE-DETERMINISTIC. The naive
+    * formulation can never hash-match an oracle: per-neighbor
+    * contribution sums are double adds whose result depends on
+    * aggregation order. Here each iteration pins the per-edge
+    * contribution to a 12dp decimal (`bround(rank/deg, 12)` ↔
+    * `round_even(...)`) so the neighbor sum is EXACT and order-invariant,
+    * converts the sum to double once per vertex, and re-pins the damped
+    * rank at 12dp — bit-identical on any partitioning and in any engine.
+    * Fixed `prIters` iterations (deterministic work, no convergence
+    * action); undirected edges mean no dangling mass. Returns
+    * (node, deg, rank).
+    *
+    * Two paths, one answer (GraphSpec pins them row-identical). Below
+    * [[fitsDriver]]'s broadcast-sized gate the edges are collected once
+    * (with `seed` evaluated by Spark on both endpoints) and
+    * [[DriverRounds.pinnedRank]] runs the same pinned steps in the JVM,
+    * returning a LocalRelation. Above it, the distributed rounds: per
+    * iteration one equi-join rank×edges (both layouts of [[edgePrep]]) +
+    * one hash agg, and `.cut()` bounds the lineage exactly like
+    * [[Dedup.connectedComponents]]. */
+  private[graft] def pinnedRank(s: SparkSession, edges: DataFrame,
+                                seed: Column => Column): DataFrame =
+    if (fitsDriver(s, edges)) DriverRounds.pinnedRank(s, edges, seed, prIters)
+    else rankRounds(s, edges, seed)
+
+  /** [[pinnedRank]]'s distributed rounds. */
+  private def rankRounds(s: SparkSession, edges: DataFrame,
                          seed: Column => Column): DataFrame = {
-    val dir = edgePrep(s, bothWays(coPurchaseEdges(s, d), "src", "dst"), "src")
+    val dir = edgePrep(s, bothWays(edges, "src", "dst"), "src")
     val deg = dir.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("deg")).cut()
-    val nS = deg.filter(seed(col("node"))).count().toDouble
+    // the seed count, floored at 1: with no seed vertex (no edges, or a
+    // rule no vertex meets) the seed branches are dead, but an
+    // always-true rule would still constant-fold `x / 0.0`, which ANSI
+    // throws
+    val nS = deg.filter(seed(col("node"))).count().toDouble max 1.0
     var r = deg.select(col("node"), col("deg"),
       when(seed(col("node")), bround(lit(1.0) / nS, 12))
         .otherwise(lit(0.0)).as("rank"))
@@ -240,7 +277,7 @@ object Graph extends graft.QueryModule {
 
   /** Global PageRank: [[pinnedRank]] with every vertex a seed. */
   private def pageRank(s: SparkSession, d: String): DataFrame =
-    pinnedRank(s, d, _ => lit(true))
+    pinnedRank(s, coPurchaseEdges(s, d), _ => lit(true))
       .select(col("node"), bround(col("rank"), 8).as("rank")).orderBy("node")
 
   /** The oracle unrolls the same pinned iteration `prIters` times as
@@ -289,7 +326,7 @@ object Graph extends graft.QueryModule {
     * 0.0, so seed proximity decays visibly with distance (Round9bSpec
     * asserts the seed mass dominates). */
   private def personalizedPageRank(s: SparkSession, d: String): DataFrame =
-    pinnedRank(s, d, _ % 10 === 0)
+    pinnedRank(s, coPurchaseEdges(s, d), _ % 10 === 0)
       .select(col("node"), (col("node") % 10 === 0).as("is_seed"),
         bround(col("rank"), 8).as("rank")).orderBy("node")
 
@@ -1032,9 +1069,27 @@ object Graph extends graft.QueryModule {
     * the |V|-row score table each half-round; with [[BroadcastConf]]
     * off, the edge relation is pre-partitioned ONCE per join side (src
     * copy + dst copy, both checkpointed) and only the score table
-    * moves — the [[edgePrep]] posture, doubled for the two directions. */
-  private[graft] def hitsIterate(s: SparkSession, edges: DataFrame)
-      : DataFrame = {
+    * moves — the [[edgePrep]] posture, doubled for the two directions.
+    *
+    * Two paths, one answer (GraphSpec pins them row-identical): below
+    * [[fitsDriver]]'s broadcast-sized gate [[DriverRounds.hits]] runs the
+    * same sparse alternation in the JVM over the collected edges and
+    * returns the dense (node, hs, as_) as a LocalRelation; above it,
+    * [[hitsRounds]] runs the distributed rounds. The final rounding and
+    * ordering run in Spark on either. */
+  private[graft] def hitsIterate(s: SparkSession, edges: DataFrame): DataFrame =
+    (if (fitsDriver(s, edges)) DriverRounds.hits(s, edges, HitsRounds)
+     else hitsRounds(s, edges))
+      .select(col("node"),
+        bround(coalesce(col("hs"), lit(0).cast("decimal(13,12)"))
+          .cast("double"), 8).as("hub"),
+        bround(coalesce(col("as_"), lit(0).cast("decimal(13,12)"))
+          .cast("double"), 8).as("authority"))
+      .orderBy("node")
+
+  /** [[hitsIterate]]'s distributed rounds: the dense (node, hs, as_),
+    * NULL where a sparse score table has no row. */
+  private def hitsRounds(s: SparkSession, edges: DataFrame): DataFrame = {
     val bcast = vertexBroadcast(s)
     val e = edges.select(col("a").as("src"), col("b").as("dst"))
     // r15 (guide §2.4/§5): in broadcast mode the score table moves and
@@ -1106,12 +1161,6 @@ object Graph extends graft.QueryModule {
     nodes
       .join(maybeBroadcast(s, h), Seq("node"), "left")
       .join(maybeBroadcast(s, a), Seq("node"), "left")
-      .select(col("node"),
-        bround(coalesce(col("hs"), lit(0).cast("decimal(13,12)"))
-          .cast("double"), 8).as("hub"),
-        bround(coalesce(col("as_"), lit(0).cast("decimal(13,12)"))
-          .cast("double"), 8).as("authority"))
-      .orderBy("node")
   }
 
   private def hits(s: SparkSession, d: String): DataFrame =

@@ -22,6 +22,7 @@ object Probe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.EnvConf(spark)
     spark.range(1000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
     graft.functions.VectorFunctions.register(spark)
 

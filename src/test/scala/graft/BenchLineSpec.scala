@@ -125,4 +125,9 @@ class BenchLineSpec extends AnyFunSuite {
     assert(Bench.loadPrior(Some(dir.resolve("absent.json").toString)) ==
       ("none", Map.empty))
   }
+
+  test("SPARK_GRAFT_CONF: trimmed key=value pairs; a value may hold '='") {
+    assert(EnvConf.pairs(" spark.sql.autoBroadcastJoinThreshold = -1 ,a=b=c,junk") ==
+      Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1", "a" -> "b=c"))
+  }
 }

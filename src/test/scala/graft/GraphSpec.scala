@@ -1,7 +1,10 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Triangle-counting semantics on hand-built graphs (the oracle proves
   * Spark ≡ DuckDB on the co-purchase graph; this proves the MATH on
@@ -209,14 +212,28 @@ class GraphSpec extends AnyFunSuite {
   test("graph family: jobs per warm run stay pinned at sf0.001") {
     // a barrier gate for the family's shared edge prep and kernels: an
     // extra cut, a lost broadcast, an extra shuffle or a duplicated subplan
-    // moves the (jobs, stages) pair (recipe: JobCensus)
+    // moves the (jobs, stages) pair (recipe: JobCensus). pagerank, ppr and
+    // hits take the driver-local path here: the gate's count, one collect
+    // and the write.
     val pinned = Map(
-      "graph_pagerank" -> (15, 23), "graph_ppr" -> (15, 23),
+      "graph_pagerank" -> (4, 6), "graph_ppr" -> (4, 6),
       "graph_bfs" -> (11, 18), "graph_closeness" -> (11, 20),
       "graph_sssp" -> (11, 18), "graph_labelprop" -> (14, 28),
-      "graph_hits" -> (21, 39), "graph_betweenness" -> (23, 40),
+      "graph_hits" -> (4, 6), "graph_betweenness" -> (23, 40),
       "graph_random_walks" -> (16, 19), "graph_node2vec" -> (16, 20))
     val ns = JobCensus.session()
+    val got = pinned.keys.map(k => k -> JobCensus.warmJobs(ns, k)).toMap
+    assert(got == pinned)
+  }
+
+  test("rank fixpoints' distributed rounds: jobs per warm run stay pinned") {
+    // auto-broadcast off shuts the driver-local gate without running its
+    // count, so these are the distributed loops' own barriers — the 100 TB
+    // path, unchanged by the local one
+    val pinned = Map("graph_pagerank" -> (15, 23), "graph_ppr" -> (15, 23),
+      "graph_hits" -> (21, 39))
+    val ns = JobCensus.session()
+    ns.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val got = pinned.keys.map(k => k -> JobCensus.warmJobs(ns, k)).toMap
     assert(got == pinned)
   }
@@ -260,5 +277,105 @@ class GraphSpec extends AnyFunSuite {
     assert(m(4L)._2 == math.pow(2.0, -4.0), "auth(4) halves each round")
     assert(m(3L)._1 == math.pow(2.0, -4.0), "hub(3) follows auth(4)")
     assert(m(4L)._1 == 0.0 && m(1L)._2 == 0.0, "no out-edges / in-edges")
+  }
+
+  /** The sessions whose rank rows must agree: the default (driver-local),
+    * the broadcast-mode distributed rounds (auto-broadcast off shuts the
+    * gate) and the shuffle-mode distributed rounds. */
+  private lazy val rankModes: Seq[(String, SparkSession)] = {
+    val off = spark.newSession()
+    off.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val shuffle = spark.newSession()
+    shuffle.conf.set(graft.ext.Graph.BroadcastConf, "false")
+    Seq("local" -> spark.newSession(), "broadcast" -> off, "shuffle" -> shuffle)
+  }
+
+  /** pinnedRank under both seed rules, then hitsIterate, over `edges` in
+    * session `ns`: each result's schema, whether it is a driver-local
+    * relation, and its rows by node. */
+  private def rankResults(ns: SparkSession, edges: Seq[(Long, Long)])
+      : Seq[(StructType, Boolean, Seq[Row])] = {
+    import ns.implicits._
+    val e = edges.toDF("a", "b")
+    Seq(ext.Graph.pinnedRank(ns, e, _ => lit(true)),
+      ext.Graph.pinnedRank(ns, e, _ % 10 === 0), ext.Graph.hitsIterate(ns, e))
+      .map { df =>
+        val local = df.queryExecution.optimizedPlan.collectLeaves()
+          .forall(_.isInstanceOf[LocalRelation])
+        (df.schema, local, df.collect().toSeq.sortBy(_.getLong(0)))
+      }
+  }
+
+  test("rank fixpoints: driver-local rows == distributed rows on generated graphs") {
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    import org.scalacheck.rng.Seed
+    // shapes over vertex indexes from 0; a graph is 2-4 of them side by
+    // side, relabeled onto shuffled compact ids or ids spread over the
+    // whole long range, every edge canonical a < b
+    val shapes: Seq[(String, Gen[Seq[(Int, Int)]])] = Seq(
+      "star" -> Gen.choose(2, 40).map(k => (1 to k).map(0 -> _)),
+      "path" -> Gen.const((0 until 59).map(i => i -> (i + 1))),
+      "clique" -> Gen.choose(3, 12).map(k =>
+        for (i <- 0 until k; j <- i + 1 until k) yield i -> j),
+      "pairs" -> Gen.choose(1, 30).map(k => (0 until k).map(i => 2 * i -> (2 * i + 1))),
+      // hubs of very unequal degree sharing leaves, plus a hub-hub edge
+      "hubs" -> Gen.choose(20, 60).map(k =>
+        (3 to k + 2).map(0 -> _) ++ (3 to 7).map(1 -> _) ++ Seq(0 -> 1, 1 -> 2)))
+    val graphs = for {
+      picked <- Gen.choose(2, 4).flatMap(Gen.pick(_, shapes))
+      parts <- Gen.sequence[Seq[Seq[(Int, Int)]], Seq[(Int, Int)]](picked.map(_._2))
+      wide <- Gen.oneOf(false, true)
+      seed <- Gen.long
+    } yield {
+      val rnd = new scala.util.Random(seed)
+      var base = 0
+      val local = parts.flatMap { p =>
+        val shifted = p.map { case (i, j) => (base + i, base + j) }
+        base += p.flatMap { case (i, j) => Seq(i, j) }.max + 1
+        shifted
+      }
+      val ids = rnd.shuffle(
+        if (wide) Iterator.continually(rnd.nextLong()).distinct.take(base).toVector
+        else (1L to base.toLong).toVector)
+      val edges = local.map { case (i, j) => (ids(i) min ids(j), ids(i) max ids(j)) }
+      (picked.map(_._1).toSet, wide, rnd.shuffle(edges.distinct))
+    }
+    val seen = scala.collection.mutable.Set.empty[String]
+    val prop = Prop.forAllNoShrink(graphs) { case (kinds, wide, edges) =>
+      seen ++= kinds + (if (wide) "wide ids" else "compact ids")
+      val byMode = rankModes.map { case (m, ns) => m -> rankResults(ns, edges) }
+      val localPath = byMode.map { case (m, r) => m -> r.map(_._2).distinct }
+      localPath == Seq("local" -> Seq(true), "broadcast" -> Seq(false),
+        "shuffle" -> Seq(false)) &&
+        byMode.map(_._2.map(r => (r._1, r._3))).distinct.size == 1
+    }
+    // few samples: each runs the distributed rounds in two sessions
+    val res = Check.check(Check.Parameters.default
+      .withMinSuccessfulTests(5).withInitialSeed(Seed(7L)), prop)
+    assert(res.passed, res.status)
+    assert(seen == shapes.map(_._1).toSet ++ Set("wide ids", "compact ids"),
+      s"the seed must cover every shape and both id layouts; saw $seen")
+  }
+
+  test("rank fixpoints: an empty edge list gives zero rows on every path") {
+    for ((m, ns) <- rankModes; (_, _, rows) <- rankResults(ns, Nil))
+      assert(rows.isEmpty, s"$m: $rows")
+  }
+
+  test("driver-local gate: an estimate at the threshold goes local, one edge more does not") {
+    import spark.implicits._
+    // a bigint (a, b) row is 24 B to Spark's size estimate
+    val ten = (1L to 10L).map(i => (i, i + 1)).toDF("a", "b")
+    val eleven = (1L to 11L).map(i => (i, i + 1)).toDF("a", "b")
+    val ns = spark.newSession()
+    ns.conf.set("spark.sql.autoBroadcastJoinThreshold", (10 * 24).toString)
+    assert(ext.Graph.fitsDriver(ns, ten), "10 edges = 240 B at a 240 B threshold")
+    assert(!ext.Graph.fitsDriver(ns, eleven), "11 edges = 264 B over it")
+    ns.conf.set(ext.Graph.BroadcastConf, "false")
+    assert(!ext.Graph.fitsDriver(ns, ten), "shuffle mode never goes local")
+    ns.conf.set(ext.Graph.BroadcastConf, "true")
+    ns.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    assert(!ext.Graph.fitsDriver(ns, ten.limit(0)),
+      "a negative threshold disables the path, even for no edges")
   }
 }
