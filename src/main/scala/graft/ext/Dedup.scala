@@ -1006,9 +1006,11 @@ object Dedup extends graft.QueryModule {
     * pair generation (minhash/simhash/ngram) and representative selection
     * ([[Corpus.keepBest]]): every node gets a `cluster_id`, the minimum
     * node id of its component (isolated nodes label themselves). Every
-    * edge endpoint must be an id of `nodes`. Exact on every graph shape:
-    * see [[connectedComponentsWithRounds]] for how, and for the one
-    * failure it reports instead of a partial answer. */
+    * edge endpoint must be an id of `nodes`. Exact on every graph shape,
+    * by one of two paths with the same rows and schema: union-find in
+    * the driver when the graph is broadcast-sized, else distributed
+    * rounds. See [[connectedComponentsWithRounds]] for both, and for the
+    * one failure it reports instead of a partial answer. */
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
                           idCol: String = "id", iCol: String = "i",
                           jCol: String = "j"): DataFrame =
@@ -1024,6 +1026,17 @@ object Dedup extends graft.QueryModule {
 
   /** [[connectedComponents]] plus the rounds each phase ran:
     * `(labels, labelRounds, starRounds)`.
+    *
+    * The driver-local path: when the edges (i, j) and then the node ids
+    * pass [[DriverRounds.collectBounded]] (each at most
+    * `spark.sql.autoBroadcastJoinThreshold` by Spark's size estimate; a
+    * negative threshold turns the path off without a job), the ids are
+    * integral and non-null and every endpoint is a node id,
+    * [[DriverRounds.components]] runs union-find over the collected ids
+    * and returns a LocalRelation with the distributed result's rows and
+    * schema. It reports `(labels, 0, 0)`: zero rounds means the local path
+    * ran, as the distributed rounds always run at least one. Otherwise
+    * the distributed rounds below run, unchanged — the 100 TB path.
     *
     * Phase 1, min-label propagation: iterate
     * `label := min(label, min(neighbor labels))` for at most
@@ -1054,22 +1067,33 @@ object Dedup extends graft.QueryModule {
     val sym = edges.select(col(iCol).as("src"), col(jCol).as("dst"))
       .union(edges.select(col(jCol).as("src"), col(iCol).as("dst")))
     var labels = nodes.select(col(idCol).as("id"), col(idCol).as("label"))
-    var converged = false
-    var iter = 0
     // The UNION form: `min over ({own label} ∪ incoming neighbor labels)
     // per id` — one exchange per side instead of join + agg + left-join
     // back. Nodes with no incoming edge keep their own-label row through
     // the union, and the pre-round label rides the same agg (max over the
     // own-flagged rows — labels is unique per id) to observe the change.
-    while (!converged && iter < LabelRounds) {
-      val obs = org.apache.spark.sql.Observation()
+    def round(labels: DataFrame): DataFrame = {
       val nbr = sym.join(labels, col("dst") === col("id"))
         .select(col("src").as("id"), col("label"), lit(0L).as("own"))
-      val updated = labels.select(col("id"), col("label"), lit(1L).as("own"))
+      labels.select(col("id"), col("label"), lit(1L).as("own"))
         .unionAll(nbr)
         .groupBy(col("id"))
         .agg(min(col("label")).as("nl"),
           max(when(col("own") === 1L, col("label"))).as("ol"))
+    }
+    // the result's schema, read off one unexecuted round: the id type and
+    // nullability the union widens to, and min's nullable label
+    val schema = round(labels).select(col("id").as(idCol), col("nl").as("cluster_id")).schema
+    DriverRounds.components(nodes.sparkSession, nodes.select(col(idCol)),
+        edges.select(col(iCol), col(jCol)), schema) match {
+      case Some(local) => return (local, 0, 0)
+      case None => // the distributed rounds
+    }
+    var converged = false
+    var iter = 0
+    while (!converged && iter < LabelRounds) {
+      val obs = org.apache.spark.sql.Observation()
+      val updated = round(labels)
         .select(col("id"), col("nl").as("label"),
           (col("nl") =!= col("ol")).cast("long").as("chg"))
         .observe(obs, sum(col("chg")).as("changed"))

@@ -4,16 +4,23 @@ import java.math.RoundingMode
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.types._
 
-/** The driver-local rounds of [[Graph.pinnedRank]] and
-  * [[Graph.hitsIterate]], taken when [[Graph.fitsDriver]] holds: the edge
-  * list is collected once and every pinned step runs in the JVM, BIT-
-  * IDENTICAL to the distributed rounds. Identity holds by construction,
-  * not by tolerance — each step goes through the same Spark classes the
-  * distributed plan evaluates:
+/** The driver-local fixpoints: [[Graph.pinnedRank]], [[Graph.hitsIterate]]
+  * and [[Dedup.connectedComponents]] below Spark's broadcast threshold.
+  *
+  * One gate, [[collectBounded]], decides for all three, and the collect
+  * that decides is the kernel's input: the relation a kernel needs is
+  * collected once when Spark's size estimate says it would broadcast, and
+  * the kernel then runs every round in the JVM and returns a LocalRelation
+  * whose schema matches the distributed result's. Above the gate the
+  * callers run their distributed rounds unchanged — the 100 TB path.
+  *
+  * The rank kernels are BIT-IDENTICAL to the distributed rounds. Identity
+  * holds by construction, not by tolerance — each step goes through the
+  * same Spark classes the distributed plan evaluates:
   *  - a decimal cast is `Decimal(x).changePrecision(p, s)` (HALF_UP);
   *  - decimal → double is `Decimal.toDouble`;
   *  - `bround(x, 12)` on a double is the `BigDecimal.valueOf` HALF_EVEN
@@ -21,10 +28,36 @@ import org.apache.spark.sql.types._
   *  - a decimal sum is an exact unscaled-long sum (`Math.addExact`, so a
   *    sum past a long throws instead of wrapping), which makes it
   *    order-independent like Spark's.
-  * Vertex ids are bigint (the co-purchase key type). Both kernels return
-  * a LocalRelation, sorted by node, whose schema matches the distributed
-  * result's; the callers keep their final projection in Spark. */
-private[ext] object DriverRounds {
+  * Their vertex ids are bigint (the co-purchase key type), and their
+  * results are sorted by node; the callers keep their final projection in
+  * Spark. Connected components is integer-only: union-find over the
+  * collected ids gives each node its component's minimum id, which is
+  * what the distributed rounds converge to. */
+private[graft] object DriverRounds {
+
+  /** The one driver-local gate: `rel`'s rows, collected, when Spark would
+    * broadcast it — at most `cap = autoBroadcastJoinThreshold /
+    * EstimationUtils.getSizePerRow(rel's output)` rows — else None.
+    *
+    * It is one bounded collect, `rel.limit(cap + 1)`: the same decision
+    * as row count × row size ≤ threshold, without a count before the
+    * collect, and the driver never holds more than cap + 1 rows.
+    * `executeTake` scans one partition in its first job and up to 4× as
+    * many in each further one, stopping once it has cap + 1 rows: two
+    * jobs for a 4-partition relation under the cap, and about one
+    * partition for a relation far over it. A negative threshold turns
+    * every local path off and runs no job. The cap is held below
+    * `Int.MaxValue`, the most rows `limit` takes. */
+  private[graft] def collectBounded(s: SparkSession, rel: DataFrame): Option[Array[Row]] = {
+    val threshold = s.sessionState.conf.autoBroadcastJoinThreshold
+    if (threshold < 0) None
+    else {
+      val perRow = EstimationUtils.getSizePerRow(rel.queryExecution.analyzed.output)
+      val cap = (BigInt(threshold) / perRow).min(Int.MaxValue - 1).toInt
+      val rows = rel.limit(cap + 1).collect()
+      if (rows.length <= cap) Some(rows) else None
+    }
+  }
 
   /** A collected edge list, its endpoints as indexes into the sorted
     * distinct vertex ids. Duplicate rows are kept: the distributed
@@ -64,15 +97,13 @@ private[ext] object DriverRounds {
     StructField("node", LongType,
       edges.schema("a").nullable || edges.schema("b").nullable)
 
-  /** [[Graph.pinnedRank]]'s rounds over canonical `edges`, `seed` read
-    * from the one collect: returns (node, deg, rank). Every vertex of the
-    * symmetric edge list is the target of its own edges, so each round's
-    * contribution sum is never empty (the distributed `coalesce` never
-    * fires here). */
-  def pinnedRank(s: SparkSession, edges: DataFrame, seed: Column => Column,
+  /** [[Graph.pinnedRank]]'s rounds over the collected canonical edges
+    * `rows` = (a, b, seed(a), seed(b)) of `edges`: returns (node, deg,
+    * rank). Every vertex of the symmetric edge list is the target of its
+    * own edges, so each round's contribution sum is never empty (the
+    * distributed `coalesce` never fires here). */
+  def pinnedRank(s: SparkSession, edges: DataFrame, rows: Array[Row],
                  rounds: Int): DataFrame = {
-    val rows = edges.select(col("a"), col("b"), seed(col("a")), seed(col("b")))
-      .collect()
     val g = index(rows.map(_.getLong(0)), rows.map(_.getLong(1)))
     val n = g.ids.length
     val isSeed = new Array[Boolean](n)
@@ -102,12 +133,12 @@ private[ext] object DriverRounds {
         StructField("rank", DoubleType))))
   }
 
-  /** [[Graph.hitsIterate]]'s sparse alternation over canonical (a → b)
-    * `edges`, densified over every vertex: returns (node, hs, as_) with a
-    * NULL where the last half-round that wrote the score did not produce
-    * the node — exactly the distributed `nodes LEFT JOIN h LEFT JOIN a`. */
-  def hits(s: SparkSession, edges: DataFrame, rounds: Int): DataFrame = {
-    val rows = edges.select(col("a"), col("b")).collect()
+  /** [[Graph.hitsIterate]]'s sparse alternation over the collected
+    * canonical (a → b) edges `rows` of `edges`, densified over every
+    * vertex: returns (node, hs, as_) with a NULL where the last half-round
+    * that wrote the score did not produce the node — exactly the
+    * distributed `nodes LEFT JOIN h LEFT JOIN a`. */
+  def hits(s: SparkSession, edges: DataFrame, rows: Array[Row], rounds: Int): DataFrame = {
     val g = index(rows.map(_.getLong(0)), rows.map(_.getLong(1)))
     val n = g.ids.length
     // a score table: decimal(13,12) unscaled per vertex, and which
@@ -140,5 +171,55 @@ private[ext] object DriverRounds {
       Row(g.ids(i), score(h, i), score(a, i))).toSeq.asJava,
       StructType(Seq(nodeField(edges), StructField("hs", DecimalType(13, 12)),
         StructField("as_", DecimalType(13, 12)))))
+  }
+
+  private val Integral: Set[DataType] = Set(ByteType, ShortType, IntegerType, LongType)
+
+  /** [[Dedup.connectedComponentsWithRounds]]'s local path: `edges` (i, j)
+    * through [[collectBounded]] first, then the node ids `nodes`; None
+    * (and the distributed rounds) whenever the two paths could differ —
+    * a field of `schema` that is not integral (checked before any job),
+    * either relation over the gate, a null id or endpoint, or an endpoint
+    * that is not a node id. Otherwise union-find over the sorted distinct
+    * ids, always hanging the larger root under the smaller (indexes are
+    * in id order), so each root is its component's minimum id: one
+    * (id, cluster_id) row per DISTINCT node id, as the distributed
+    * round's `groupBy(id)` gives, typed by `schema`, the distributed
+    * result's. */
+  def components(s: SparkSession, nodes: DataFrame, edges: DataFrame,
+                 schema: StructType): Option[DataFrame] = {
+    def anyNull(rows: Array[Row]) = rows.exists(r => (0 until r.length).exists(r.isNullAt))
+    def ids(rows: Array[Row], k: Int) = rows.map(_.getAs[Number](k).longValue)
+    if (!schema.forall(f => Integral(f.dataType))) None
+    else for {
+      e <- collectBounded(s, edges) if !anyNull(e)
+      v <- collectBounded(s, nodes) if !anyNull(v)
+      id = ids(v, 0).distinct.sorted
+      a = ids(e, 0).map(java.util.Arrays.binarySearch(id, _))
+      b = ids(e, 1).map(java.util.Arrays.binarySearch(id, _))
+      if !a.exists(_ < 0) && !b.exists(_ < 0)
+    } yield {
+      val parent = Array.range(0, id.length)
+      def find(x: Int): Int = {
+        var r = x
+        while (parent(r) != r) r = parent(r)
+        var y = x
+        while (parent(y) != r) { val next = parent(y); parent(y) = r; y = next }
+        r
+      }
+      for (k <- a.indices) {
+        val (ra, rb) = (find(a(k)), find(b(k)))
+        if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      }
+      def as(t: DataType, v: Long): Any = t match {
+        case ByteType => v.toByte
+        case ShortType => v.toShort
+        case IntegerType => v.toInt
+        case _ => v
+      }
+      val (idType, labelType) = (schema(0).dataType, schema(1).dataType)
+      s.createDataFrame(id.indices.map(k =>
+        Row(as(idType, id(k)), as(labelType, id(find(k))))).asJava, schema)
+    }
   }
 }

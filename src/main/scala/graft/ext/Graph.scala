@@ -1,7 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -38,30 +37,22 @@ object Graph extends graft.QueryModule {
     * |V|-row vertex table — the edge relation (the big side) never moves
     * again. Both modes are hash-identical (GraphSpec proves it at 4 and
     * 32 partitions). Read only by [[maybeBroadcast]], [[edgePrep]],
-    * [[hitsIterate]] and the driver-local gate [[fitsDriver]] (off means
+    * [[hitsIterate]] and the driver-local gate [[driverEdges]] (off means
     * the rank fixpoints never collect their edges). */
   val BroadcastConf = "graft.graph.broadcastVertexDomain"
 
   private def vertexBroadcast(s: SparkSession): Boolean =
     s.conf.get(BroadcastConf, "true").toBoolean
 
-  /** The one gate of the driver-local rank fixpoints ([[pinnedRank]],
-    * [[hitsIterate]]): Spark's own broadcast decision, applied to the
-    * canonical edge list. Local when the vertex domain is broadcast
-    * ([[BroadcastConf]]) and the edges' estimated size — their count
-    * times the (a, b) row size, 24 B for two bigints — is at most
-    * `spark.sql.autoBroadcastJoinThreshold`. A negative threshold (or
-    * BroadcastConf off) turns the path off without running anything;
-    * otherwise the gate costs one count job. sf0.01's 115,729 edges
-    * (2.8 MB) go local at the default 10 MB; sf0.1's 1,196,000 (28.7 MB)
-    * stay distributed. */
-  private[graft] def fitsDriver(s: SparkSession, edges: DataFrame): Boolean = {
-    val threshold = s.sessionState.conf.autoBroadcastJoinThreshold
-    vertexBroadcast(s) && threshold >= 0 && {
-      val ab = edges.select(col("a"), col("b")).queryExecution.analyzed.output
-      BigInt(edges.count()) * EstimationUtils.getSizePerRow(ab) <= threshold
-    }
-  }
+  /** The driver-local gate of the rank fixpoints ([[pinnedRank]],
+    * [[hitsIterate]]): [[DriverRounds.collectBounded]] of the edge rows a
+    * kernel needs, while the vertex domain is broadcast ([[BroadcastConf]]);
+    * with the conf off they never collect and run no gate job. sf0.01's
+    * 115,729 edges (3.0 MB as PageRank's 26 B (a, b, seed_a, seed_b) rows)
+    * go local at the default 10 MB; sf0.1's 1,196,000 (31.1 MB) stay
+    * distributed. */
+  private def driverEdges(s: SparkSession, rows: DataFrame): Option[Array[Row]] =
+    if (vertexBroadcast(s)) DriverRounds.collectBounded(s, rows) else None
 
   /** Broadcast hint only while the vertex domain is broadcast-safe. */
   private def maybeBroadcast(s: SparkSession, df: DataFrame): DataFrame =
@@ -213,7 +204,7 @@ object Graph extends graft.QueryModule {
     * (node, deg, rank).
     *
     * Two paths, one answer (GraphSpec pins them row-identical). Below
-    * [[fitsDriver]]'s broadcast-sized gate the edges are collected once
+    * [[driverEdges]]' broadcast-sized gate the edges are collected once
     * (with `seed` evaluated by Spark on both endpoints) and
     * [[DriverRounds.pinnedRank]] runs the same pinned steps in the JVM,
     * returning a LocalRelation. Above it, the distributed rounds: per
@@ -222,8 +213,9 @@ object Graph extends graft.QueryModule {
     * [[Dedup.connectedComponents]]. */
   private[graft] def pinnedRank(s: SparkSession, edges: DataFrame,
                                 seed: Column => Column): DataFrame =
-    if (fitsDriver(s, edges)) DriverRounds.pinnedRank(s, edges, seed, prIters)
-    else rankRounds(s, edges, seed)
+    driverEdges(s, edges.select(col("a"), col("b"), seed(col("a")), seed(col("b"))))
+      .map(DriverRounds.pinnedRank(s, edges, _, prIters))
+      .getOrElse(rankRounds(s, edges, seed))
 
   /** [[pinnedRank]]'s distributed rounds. */
   private def rankRounds(s: SparkSession, edges: DataFrame,
@@ -1072,14 +1064,15 @@ object Graph extends graft.QueryModule {
     * moves — the [[edgePrep]] posture, doubled for the two directions.
     *
     * Two paths, one answer (GraphSpec pins them row-identical): below
-    * [[fitsDriver]]'s broadcast-sized gate [[DriverRounds.hits]] runs the
+    * [[driverEdges]]' broadcast-sized gate [[DriverRounds.hits]] runs the
     * same sparse alternation in the JVM over the collected edges and
     * returns the dense (node, hs, as_) as a LocalRelation; above it,
     * [[hitsRounds]] runs the distributed rounds. The final rounding and
     * ordering run in Spark on either. */
   private[graft] def hitsIterate(s: SparkSession, edges: DataFrame): DataFrame =
-    (if (fitsDriver(s, edges)) DriverRounds.hits(s, edges, HitsRounds)
-     else hitsRounds(s, edges))
+    driverEdges(s, edges.select(col("a"), col("b")))
+      .map(DriverRounds.hits(s, edges, _, HitsRounds))
+      .getOrElse(hitsRounds(s, edges))
       .select(col("node"),
         bround(coalesce(col("hs"), lit(0).cast("decimal(13,12)"))
           .cast("double"), 8).as("hub"),

@@ -126,7 +126,8 @@ object Probe {
 
     if (sections("cc")) {
       // ---- CC fixpoint census on the corpus pipeline's real pair graph:
-      // rounds per phase and seconds ----
+      // the path that ran (driver-local, or the rounds per phase) and
+      // seconds ----
       val pairs = graft.Ckpt.cut(graft.ext.Dedup.md5StarChainPairs(exDocs()))
       val nodes = graft.Ckpt.cut(exDocs().select(col("doc_id")))
       println("[probe] corpus pair edges = " + pairs.count() +
@@ -136,7 +137,10 @@ object Probe {
         val (lab, labelRounds, starRounds) =
           graft.ext.Dedup.connectedComponentsWithRounds(nodes, pairs, "doc_id")
         lab.write.format("noop").mode("overwrite").save()
-        println(f"[probe] cc label_rounds=$labelRounds star_rounds=$starRounds ${(System.nanoTime() - t0) / 1e9}%.2f s")
+        // zero rounds: the driver-local union-find ran
+        val path = if (labelRounds == 0) "path=local"
+          else s"path=distributed label_rounds=$labelRounds star_rounds=$starRounds"
+        println(f"[probe] cc $path ${(System.nanoTime() - t0) / 1e9}%.2f s")
       }
       // and on dedup_minhash's verified star-edge graph over word-set reps
       locally {

@@ -49,17 +49,24 @@ class CheckpointModeSpec extends AnyFunSuite {
   }
 
   test("connected components (dedup_clusters) is hash-identical across modes") {
-    runBoth("dedup_clusters")
+    // sf0.001's pair graph fits the driver-local gate, which cuts nothing;
+    // with auto-broadcast off both legs run the distributed rounds' cuts
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try runBoth("dedup_clusters")
+    finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
   test("connected components past the round budget is hash-identical across modes") {
     // a 64-node path outgrows the min-label rounds, so the contraction
-    // and the star rounds' cuts run in both modes too
+    // and the star rounds' cuts run in both modes too; it fits the
+    // driver-local gate, which cuts nothing, so both legs run with
+    // auto-broadcast off
     import spark.implicits._
-    val rows = runBothOn("cc_deep_path") {
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val rows = try runBothOn("cc_deep_path") {
       graft.ext.Dedup.connectedComponents((1L to 64L).toDF("id"),
         (1L until 64L).map(i => (i, i + 1)).toDF("i", "j")).orderBy("id")
-    }
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     assert(rows.map(_.getLong(1)).toSet == Set(1L))
   }
 

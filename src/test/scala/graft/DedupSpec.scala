@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Near-dup operator guarantees on real testdata: MinHash candidates are
@@ -8,6 +11,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * trade-off). */
 class DedupSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
+  /** Auto-broadcast off shuts connected components' driver-local gate
+    * without a job: the round-count tests run the distributed rounds here. */
+  private lazy val distributed = {
+    val ns = spark.newSession()
+    ns.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    ns
+  }
 
   private def minhashPairsOn(sfDir: String) = {
     graft.functions.VectorFunctions.register(spark)
@@ -103,7 +113,8 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("connectedComponents: path graph needs multi-round propagation") {
-    import spark.implicits._
+    val ns = distributed
+    import ns.implicits._
     import graft.ext.Dedup
     // 1-2-3-4 is a path (label 1 must travel 3 hops), {5,6} a pair, 7 isolated
     val nodes = (1L to 7L).toDF("id")
@@ -115,7 +126,8 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("connectedComponents: one Spark action per round, no per-round count") {
-    import spark.implicits._
+    val ns = distributed
+    import ns.implicits._
     import graft.ext.Dedup
     // VERDICT r3 #3: the convergence check must ride the round's own
     // materialization action (observe metric on the localCheckpoint), not
@@ -131,7 +143,7 @@ class DedupSpec extends AnyFunSuite {
       override def onFailure(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution, ex: Exception): Unit = ()
     }
-    spark.listenerManager.register(listener)
+    ns.listenerManager.register(listener)
     try {
       val nodes = (1L to 4L).toDF("id")
       val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("i", "j")
@@ -146,7 +158,7 @@ class DedupSpec extends AnyFunSuite {
       assert(counts.getOrElse("localCheckpoint", 0) +
         counts.getOrElse("checkpoint", 0) == 4,
         s"expected 4 checkpoint actions (one per round): $counts")
-    } finally spark.listenerManager.unregister(listener)
+    } finally ns.listenerManager.unregister(listener)
   }
 
   /** Brute-force oracle: union-find, each root the minimum of its set. */
@@ -161,9 +173,11 @@ class DedupSpec extends AnyFunSuite {
     nodes.map(n => n -> find(n)).toMap
   }
 
-  /** (labels, labelRounds, starRounds) of the one CC entry. */
+  /** (labels, labelRounds, starRounds) of the one CC entry's distributed
+    * rounds. */
   private def cc(nodes: Seq[Long], edges: Seq[(Long, Long)]) = {
-    import spark.implicits._
+    val ns = distributed
+    import ns.implicits._
     val (labels, labelRounds, starRounds) = graft.ext.Dedup
       .connectedComponentsWithRounds(nodes.toDF("id"), edges.toDF("i", "j"))
     (labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap,
@@ -171,7 +185,8 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("connectedComponentsWithStatus: maxIter exhaustion degrades, not throws") {
-    import spark.implicits._
+    val ns = distributed
+    import ns.implicits._
     // a 30-node path with its minimum at one end has diameter 29: the 25
     // min-label rounds run out, and the entry must degrade to star
     // contraction and return exact labels instead of throwing;
@@ -278,14 +293,132 @@ class DedupSpec extends AnyFunSuite {
   test("CC consumers: jobs per warm run stay pinned at sf0.001") {
     // a barrier gate for the keys that end in connectedComponents: an
     // extra round, cut or shuffle moves the (jobs, stages) pair (recipe:
-    // JobCensus)
+    // JobCensus). Their graphs take the driver-local path here: the gate's
+    // two bounded collects replace the rounds
     val pinned = Map(
-      "dedup_clusters" -> (17, 37), "dedup_minhash" -> (24, 52),
-      "dedup_semantic" -> (9, 17), "corpus_clean_pipeline" -> (13, 34),
-      "dedup_semantic_bucketed" -> (25, 65), "corpus_clean_multimodal" -> (31, 74))
+      "dedup_clusters" -> (8, 13), "dedup_minhash" -> (23, 40),
+      "dedup_semantic" -> (9, 14), "corpus_clean_pipeline" -> (12, 22),
+      "dedup_semantic_bucketed" -> (18, 41), "corpus_clean_multimodal" -> (18, 24))
     val ns = JobCensus.session()
     val got = pinned.keys.map(k => k -> JobCensus.warmJobs(ns, k)).toMap
     assert(got == pinned)
+  }
+
+  test("CC consumers: the distributed rounds' jobs per warm run stay pinned") {
+    // auto-broadcast off shuts the driver-local gate without a job, so
+    // these are the distributed rounds' own barriers — the 100 TB path,
+    // unchanged by the local one. (Every other join of these keys loses
+    // its broadcast too, so the counts differ from the default session's
+    // even where the graph would not go local.)
+    val pinned = Map(
+      "dedup_clusters" -> (10, 53), "dedup_minhash" -> (14, 64),
+      "dedup_semantic" -> (7, 18), "corpus_clean_pipeline" -> (10, 39),
+      "dedup_semantic_bucketed" -> (18, 72), "corpus_clean_multimodal" -> (27, 86))
+    val ns = JobCensus.session()
+    ns.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val got = pinned.keys.map(k => k -> JobCensus.warmJobs(ns, k)).toMap
+    assert(got == pinned)
+  }
+
+  /** [[graft.ext.Dedup.connectedComponentsWithRounds]] in session `ns`
+    * over the (nodes, edges) `graph` builds there: the result's schema,
+    * whether it is a driver-local relation, its rows (ordered by their
+    * text, so null ids sort too) and its label rounds. */
+  private def ccIn(ns: SparkSession, graph: SparkSession => (DataFrame, DataFrame))
+      : (StructType, Boolean, Seq[Row], Int) = {
+    val (nodes, edges) = graph(ns)
+    val (labels, labelRounds, _) =
+      graft.ext.Dedup.connectedComponentsWithRounds(nodes, edges)
+    val local = labels.queryExecution.optimizedPlan.collectLeaves()
+      .forall(_.isInstanceOf[LocalRelation])
+    (labels.schema, local, labels.collect().toSeq.sortBy(_.toString), labelRounds)
+  }
+
+  /** `graph`'s components in a session with the default conf and with
+    * auto-broadcast off: asserts both give the same schema and rows, and
+    * returns whether the default session took the driver-local path (zero
+    * rounds and a LocalRelation) and the rows. */
+  private def localVsDistributed(graph: SparkSession => (DataFrame, DataFrame))
+      : (Boolean, Seq[Row]) = {
+    val (schema, local, rows, rounds) = ccIn(spark.newSession(), graph)
+    val (dSchema, dLocal, dRows, dRounds) = ccIn(distributed, graph)
+    assert(!dLocal && dRounds > 0, "auto-broadcast off must run the rounds")
+    assert(local == (rounds == 0), s"local relation $local after $rounds rounds")
+    assert(schema == dSchema, s"schema: $schema vs $dSchema")
+    assert(rows == dRows)
+    (local, rows)
+  }
+
+  test("connectedComponents: driver-local rows == distributed rows on generated graphs") {
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    import org.scalacheck.rng.Seed
+    // a giant component (random spanning tree plus chords), isolates,
+    // self-loops, edges duplicated in both orientations and node ids
+    // listed twice; half the graphs add a 60-node path (deeper than the
+    // min-label budget wherever its minimum sits, so the distributed leg
+    // finishes by star contraction). Ids are shuffled compact ones or
+    // spread over the whole long range.
+    val graphs = for {
+      giant <- Gen.choose(5, 30)
+      chords <- Gen.choose(0, 20)
+      deep <- Gen.oneOf(false, true)
+      isolates <- Gen.choose(1, 5)
+      wide <- Gen.oneOf(false, true)
+      seed <- Gen.long
+    } yield {
+      val rnd = new scala.util.Random(seed)
+      val n = giant + (if (deep) 60 else 0) + isolates
+      val ids =
+        if (wide) Iterator.continually(rnd.nextLong()).distinct.take(n).toVector
+        else rnd.shuffle((1L to 200L).toVector).take(n)
+      val (g, path) = (ids.take(giant), ids.slice(giant, n - isolates))
+      val tree = (1 until giant).map(k => (g(rnd.nextInt(k)), g(k)))
+      val chordEdges = Seq.fill(chords)((g(rnd.nextInt(giant)), g(rnd.nextInt(giant))))
+      val pathEdges = path.zip(path.drop(1))
+      val loops = Seq.fill(3)(ids(rnd.nextInt(n))).map(v => (v, v))
+      val dups = (tree ++ pathEdges).take(6).flatMap { case (a, b) => Seq((a, b), (b, a)) }
+      val nodes = rnd.shuffle(ids ++ Seq.fill(3)(ids(rnd.nextInt(n))))
+      (deep, wide, nodes,
+        rnd.shuffle(tree ++ chordEdges ++ pathEdges ++ loops ++ dups))
+    }
+    val seen = scala.collection.mutable.Set.empty[String]
+    val prop = Prop.forAllNoShrink(graphs) { case (deep, wide, nodes, edges) =>
+      seen += (if (deep) "deep" else "shallow")
+      seen += (if (wide) "wide ids" else "compact ids")
+      val (local, rows) = localVsDistributed { ns =>
+        import ns.implicits._
+        (nodes.toDF("id"), edges.toDF("i", "j"))
+      }
+      local && rows.map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+        unionFind(nodes.distinct, edges) && rows.size == nodes.distinct.size
+    }
+    // few samples: a deep graph's distributed leg runs 25 rounds and a
+    // star phase
+    val res = Check.check(Check.Parameters.default
+      .withMinSuccessfulTests(4).withInitialSeed(Seed(8L)), prop)
+    assert(res.passed, res.status)
+    assert(seen == Set("deep", "shallow", "wide ids", "compact ids"),
+      s"the seed must cover both depths and both id layouts; saw $seen")
+  }
+
+  test("connectedComponents: each driver-local fallback gives the distributed rows") {
+    // the gate's edge cases: an empty edge list (local: every node labels
+    // itself) and int node ids under bigint edges (local, with the union's
+    // widened id type); then every fallback to the rounds: a null id, a
+    // null endpoint, an endpoint outside `nodes`, and string ids
+    def path(graph: SparkSession => (DataFrame, DataFrame)) = localVsDistributed(graph)._1
+    assert(path { ns => import ns.implicits._
+      ((1L to 4L).toDF("id"), Seq.empty[(Long, Long)].toDF("i", "j")) })
+    assert(path { ns => import ns.implicits._
+      (Seq(1, 2, 3).toDF("id"), Seq((1L, 2L)).toDF("i", "j")) })
+    assert(!path { ns => import ns.implicits._
+      (Seq(Some(1L), Some(2L), None).toDF("id"), Seq((1L, 2L)).toDF("i", "j")) })
+    assert(!path { ns => import ns.implicits._
+      ((1L to 3L).toDF("id"), Seq((1L, Some(2L)), (2L, None)).toDF("i", "j")) })
+    assert(!path { ns => import ns.implicits._
+      ((1L to 3L).toDF("id"), Seq((1L, 2L), (3L, 9L)).toDF("i", "j")) })
+    assert(!path { ns => import ns.implicits._
+      (Seq("a", "b", "c").toDF("id"), Seq(("a", "b")).toDF("i", "j")) })
   }
 
   test("deletion-neighborhood blocking finds exactly the edit-dist<=1 pairs") {

@@ -213,13 +213,13 @@ class GraphSpec extends AnyFunSuite {
     // a barrier gate for the family's shared edge prep and kernels: an
     // extra cut, a lost broadcast, an extra shuffle or a duplicated subplan
     // moves the (jobs, stages) pair (recipe: JobCensus). pagerank, ppr and
-    // hits take the driver-local path here: the gate's count, one collect
+    // hits take the driver-local path here: the gate's one bounded collect
     // and the write.
     val pinned = Map(
-      "graph_pagerank" -> (4, 6), "graph_ppr" -> (4, 6),
+      "graph_pagerank" -> (4, 5), "graph_ppr" -> (4, 5),
       "graph_bfs" -> (11, 18), "graph_closeness" -> (11, 20),
       "graph_sssp" -> (11, 18), "graph_labelprop" -> (14, 28),
-      "graph_hits" -> (4, 6), "graph_betweenness" -> (23, 40),
+      "graph_hits" -> (4, 5), "graph_betweenness" -> (23, 40),
       "graph_random_walks" -> (16, 19), "graph_node2vec" -> (16, 20))
     val ns = JobCensus.session()
     val got = pinned.keys.map(k => k -> JobCensus.warmJobs(ns, k)).toMap
@@ -228,7 +228,7 @@ class GraphSpec extends AnyFunSuite {
 
   test("rank fixpoints' distributed rounds: jobs per warm run stay pinned") {
     // auto-broadcast off shuts the driver-local gate without running its
-    // count, so these are the distributed loops' own barriers — the 100 TB
+    // collect, so these are the distributed loops' own barriers — the 100 TB
     // path, unchanged by the local one
     val pinned = Map("graph_pagerank" -> (15, 23), "graph_ppr" -> (15, 23),
       "graph_hits" -> (21, 39))
@@ -363,19 +363,27 @@ class GraphSpec extends AnyFunSuite {
   }
 
   test("driver-local gate: an estimate at the threshold goes local, one edge more does not") {
-    import spark.implicits._
-    // a bigint (a, b) row is 24 B to Spark's size estimate
-    val ten = (1L to 10L).map(i => (i, i + 1)).toDF("a", "b")
-    val eleven = (1L to 11L).map(i => (i, i + 1)).toDF("a", "b")
+    // the one bounded collect behind every driver-local kernel. A bigint
+    // (a, b) row is 24 B to Spark's size estimate, so a 240 B threshold
+    // caps it at 10 rows; one range partition makes the collect one job.
+    // (Shuffle mode never reaching the gate is the generated-graph
+    // property's "shuffle" session.)
+    def edges(ns: SparkSession, n: Long) = ns.range(1, n + 1, 1, 1)
+      .select(col("id").as("a"), (col("id") + 1).as("b"))
+    def gate(ns: SparkSession, n: Long) = {
+      var got: Option[Array[Row]] = None
+      val (jobs, _) = JobCensus.jobsOf(ns, s"gate-$n") {
+        got = ext.DriverRounds.collectBounded(ns, edges(ns, n))
+      }
+      (got.map(_.toSeq), jobs)
+    }
     val ns = spark.newSession()
     ns.conf.set("spark.sql.autoBroadcastJoinThreshold", (10 * 24).toString)
-    assert(ext.Graph.fitsDriver(ns, ten), "10 edges = 240 B at a 240 B threshold")
-    assert(!ext.Graph.fitsDriver(ns, eleven), "11 edges = 264 B over it")
-    ns.conf.set(ext.Graph.BroadcastConf, "false")
-    assert(!ext.Graph.fitsDriver(ns, ten), "shuffle mode never goes local")
-    ns.conf.set(ext.Graph.BroadcastConf, "true")
+    assert(gate(ns, 10) == ((Some((1L to 10L).map(i => Row(i, i + 1))), 1)),
+      "10 rows = 240 B at a 240 B threshold: collected, in one job")
+    assert(gate(ns, 11) == ((None, 1)), "11 rows = 264 B over it")
     ns.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    assert(!ext.Graph.fitsDriver(ns, ten.limit(0)),
-      "a negative threshold disables the path, even for no edges")
+    assert(gate(ns, 0) == ((None, 0)),
+      "a negative threshold disables the path without a job, even for no rows")
   }
 }

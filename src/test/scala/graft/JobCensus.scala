@@ -26,15 +26,22 @@ object JobCensus extends Assertions {
   }
 
   /** Spark (jobs, stages) started by one warm run of `key` on sf0.001:
-    * an untimed first run warms the session's caches, then a listener
-    * tallies the jobs of the second run's job group (the Probe `jobs`
-    * census). A sentinel job submitted after the run marks the end of its
-    * events: the listener bus delivers them in order, so once the
-    * sentinel's start is seen every job of the run has been counted. */
+    * an untimed first run warms the session's caches, then [[jobsOf]]
+    * tallies the second run (the Probe `jobs` census). */
   def warmJobs(ns: SparkSession, key: String): (Int, Int) = {
     def run(): Unit = SparkEntry.queries(key)(ns, TestSpark.sf0001)
       .write.format("noop").mode("overwrite").save()
-    val (group, sentinel) = (s"census-$key", s"census-$key-end")
+    run()
+    jobsOf(ns, s"census-$key")(run())
+  }
+
+  /** Spark (jobs, stages) that `body` starts from this thread: a listener
+    * tallies the jobs of job group `group` while `body` runs in it. A
+    * sentinel job submitted after it marks the end of its events: the
+    * listener bus delivers them in order, so once the sentinel's start is
+    * seen every job of `body` has been counted. */
+  def jobsOf(ns: SparkSession, group: String)(body: => Unit): (Int, Int) = {
+    val sentinel = s"$group-end"
     val (jobs, stages) = (new AtomicInteger, new AtomicInteger)
     val done = new CountDownLatch(1)
     val listener = new SparkListener {
@@ -51,12 +58,11 @@ object JobCensus extends Assertions {
       sc.setJobGroup(g, g)
       try body finally sc.clearJobGroup()
     }
-    run()
     sc.addSparkListener(listener)
     try {
-      inGroup(group)(run())
+      inGroup(group)(body)
       inGroup(sentinel)(sc.parallelize(Seq(1), 1).count())
-      assert(done.await(60, TimeUnit.SECONDS), s"$key: sentinel job never seen")
+      assert(done.await(60, TimeUnit.SECONDS), s"$group: sentinel job never seen")
       (jobs.get, stages.get)
     } finally sc.removeSparkListener(listener)
   }
