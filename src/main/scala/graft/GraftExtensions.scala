@@ -4,13 +4,12 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.functions.{CosineSimilarity, DotProduct, MinHashAgg, SimHashAgg, SortedIntersectCount}
-
 /** SparkSessionExtensions entry point (SURVEY §2.J/§4): makes the graft
   * native expressions first-class session functions so a cluster deploy
   * only needs `--conf spark.sql.extensions=graft.GraftExtensions`.
   * (Library callers can equivalently use
-  * `graft.functions.VectorFunctions.register(spark)`.)
+  * `graft.functions.VectorFunctions.register(spark)`; both install the one
+  * function table, `VectorFunctions.table`.)
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -29,53 +28,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[graft.plans.AsOfJoin].getName, "graft_asof"),
       (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
         graft.plans.AsOf.sqlBuilder(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        DotProduct(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        CosineSimilarity(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_intersect_count"),
-      new ExpressionInfo(classOf[SortedIntersectCount].getName, "graft_intersect_count"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        SortedIntersectCount(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_jaro_winkler"),
-      new ExpressionInfo(classOf[graft.functions.JaroWinkler].getName, "graft_jaro_winkler"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        graft.functions.JaroWinkler(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bloom_agg"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-        "graft_bloom_agg"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-          exprs(0), exprs(1), exprs(2)).toAggregateExpression()))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bloom_contains"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        "graft_bloom_contains"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-          exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_simhash"),
-      new ExpressionInfo(classOf[SimHashAgg].getName, "graft_simhash"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        SimHashAgg(exprs(0)).toAggregateExpression()))
-    ext.injectFunction((
-      FunctionIdentifier("graft_minhash"),
-      new ExpressionInfo(classOf[MinHashAgg].getName, "graft_minhash"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        MinHashAgg(exprs(0),
-          graft.functions.VectorFunctions.constIntArg(
-            "graft_minhash", "num_hashes", exprs(1))).toAggregateExpression()))
+    graft.functions.VectorFunctions.table.foreach { case (name, cls, build) =>
+      ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
+    }
   }
 }

@@ -1044,9 +1044,9 @@ object Dedup extends graft.QueryModule {
     * on the symmetric edge list, and [[graft.Ckpt.cut]] cuts the growing
     * lineage (reliable checkpoints under `graft.checkpoint.dir`:
     * CheckpointModeSpec pins both modes bit-identical). ONE Spark action
-    * per round: the changed-label count is an `observe()` metric collected
-    * by the cut that materializes the round's labels, with an explicit
-    * count only if the metric is not delivered.
+    * per round: the changed-label count is a named `observe()` metric,
+    * read synchronously off the executed plan of the cut that materializes
+    * the round's labels.
     *
     * Phase 2, only if phase 1 ran out of rounds: contract the graph by the
     * current labels — edge (i, j) becomes (L(i), L(j)), self-loops
@@ -1092,32 +1092,21 @@ object Dedup extends graft.QueryModule {
     var converged = false
     var iter = 0
     while (!converged && iter < LabelRounds) {
-      val obs = org.apache.spark.sql.Observation()
-      val updated = round(labels)
+      val observed = round(labels)
         .select(col("id"), col("nl").as("label"),
           (col("nl") =!= col("ol")).cast("long").as("chg"))
-        .observe(obs, sum(col("chg")).as("changed"))
+        .observe("cc_changed", sum(col("chg")).as("changed"))
         .select(col("id"), col("label"))
-        .cut()
-      // localCheckpoint is a Dataset action (Dataset.withAction), so the
-      // CollectMetrics result is posted when it completes — but delivery
-      // rides the async listener bus. 5 s rides out normal bus lag without
-      // turning every round into a latency cliff; the count fallback below
-      // costs about one extra round, so LOG when it fires — systematic bus
-      // starvation (every round falling back) must be visible, not silent.
-      val changed: Long =
-        try {
-          val row = scala.concurrent.Await.result(
-            obs.future, scala.concurrent.duration.Duration(5, "s"))
-          if (row.isNullAt(0)) 0L else row.getLong(0) // null = sum over zero rows
-        } catch {
-          case _: java.util.concurrent.TimeoutException =>
-            System.err.println(s"graft.connectedComponents: observe metric " +
-              s"missed 5s window at iter $iter; falling back to a count() " +
-              "job (listener bus lagging?)")
-            updated.as("u").join(labels.as("o"), Seq("id"))
-              .filter(col("u.label") =!= col("o.label")).count()
-        }
+      val updated = observed.cut()
+      // the cut is a Dataset action over `observed`'s own executed plan, so
+      // its CollectMetrics accumulator is final once cut() returns; a
+      // reliable checkpoint may recompute the round and count a change
+      // twice, which leaves the `== 0` test below exact
+      val changed: Long = observed.queryExecution.observedMetrics.get("cc_changed") match {
+        case Some(row) => if (row.isNullAt(0)) 0L else row.getLong(0) // null = sum over zero rows
+        case None => throw new IllegalStateException(
+          s"graft.connectedComponents: no change count observed at round $iter")
+      }
       labels = updated
       converged = changed == 0
       iter += 1

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -23,49 +23,40 @@ import graft.Tables
   * 100 TB this is the difference between a runnable plan and one task
   * that never finishes; the oracle (a plain canonical a<b<c triangle
   * join — fine at oracle scale) proves the orientation loses nothing.
+  *
+  * Layout: one conf, `spark.sql.autoBroadcastJoinThreshold`, picks it
+  * for the whole family. The rank fixpoints first try the driver-local
+  * gate ([[DriverRounds.collectBounded]]); above it (or for every other
+  * kernel) a non-negative threshold broadcasts the vertex domain, and a
+  * negative one runs every vertex-domain join as a shuffle join over a
+  * pre-partitioned edge list ([[edgePrep]]). Both layouts are
+  * hash-identical (GraphSpec at 4 and 32 partitions).
   */
 object Graph extends graft.QueryModule {
 
-  /** `graft.graph.broadcastVertexDomain` (default true): when true,
-    * vertex-domain relations (degrees, adjacency arrays, the PageRank
-    * rank table) are broadcast — the right call while the vertex domain
-    * is dimension-bounded (~part table, MBs). At a scale where |V|
-    * outgrows the broadcast budget (billions of parts at 100 TB), set it
-    * FALSE: every vertex-domain join falls back to a plain shuffled
-    * equi-join, and the fixpoints pre-partition their edge table on the
-    * join key once ([[edgePrep]]) so each iteration shuffles only the
-    * |V|-row vertex table — the edge relation (the big side) never moves
-    * again. Both modes are hash-identical (GraphSpec proves it at 4 and
-    * 32 partitions). Read only by [[maybeBroadcast]], [[edgePrep]],
-    * [[hitsIterate]] and the driver-local gate [[driverEdges]] (off means
-    * the rank fixpoints never collect their edges). */
-  val BroadcastConf = "graft.graph.broadcastVertexDomain"
-
+  /** Whether the vertex domain is broadcast: the layout decision of the
+    * whole family, read off `spark.sql.autoBroadcastJoinThreshold` with
+    * the same sign test as [[DriverRounds.collectBounded]]'s, so the
+    * driver-local gate runs exactly when the vertex domain would be
+    * broadcast. A negative threshold is Spark's "never broadcast", which
+    * the explicit hints below obey too: the shuffle layout, for a vertex
+    * domain past executor memory. */
   private def vertexBroadcast(s: SparkSession): Boolean =
-    s.conf.get(BroadcastConf, "true").toBoolean
-
-  /** The driver-local gate of the rank fixpoints ([[pinnedRank]],
-    * [[hitsIterate]]): [[DriverRounds.collectBounded]] of the edge rows a
-    * kernel needs, while the vertex domain is broadcast ([[BroadcastConf]]);
-    * with the conf off they never collect and run no gate job. sf0.01's
-    * 115,729 edges (3.0 MB as PageRank's 26 B (a, b, seed_a, seed_b) rows)
-    * go local at the default 10 MB; sf0.1's 1,196,000 (31.1 MB) stay
-    * distributed. */
-  private def driverEdges(s: SparkSession, rows: DataFrame): Option[Array[Row]] =
-    if (vertexBroadcast(s)) DriverRounds.collectBounded(s, rows) else None
+    s.sessionState.conf.autoBroadcastJoinThreshold >= 0
 
   /** Broadcast hint only while the vertex domain is broadcast-safe. */
   private def maybeBroadcast(s: SparkSession, df: DataFrame): DataFrame =
     if (vertexBroadcast(s)) broadcast(df) else df
 
   /** The edge prep of the vertex-domain fixpoints: the symmetric edge
-    * list `sym`, cut once. Broadcast mode ships the |V|-row vertex table
-    * to it each round (localCheckpoint erases size stats, so the
-    * auto-broadcast heuristic can't see how small that table is — the
-    * rounds force it through [[maybeBroadcast]]). Shuffle mode first
-    * hash-partitions the list on the join `key` — localCheckpoint keeps
-    * that partitioning — so each round shuffles only the vertex table to
-    * meet it and the |E|-row side never moves again. */
+    * list `sym`, cut once. Broadcast mode ([[vertexBroadcast]]) ships the
+    * |V|-row vertex table to it each round (localCheckpoint erases size
+    * stats, so the auto-broadcast heuristic can't see how small that table
+    * is — the rounds force it through [[maybeBroadcast]]). Shuffle mode (a
+    * negative threshold) first hash-partitions the list on the join `key`
+    * — localCheckpoint keeps that partitioning — so each round shuffles
+    * only the vertex table to meet it and the |E|-row side never moves
+    * again. */
   private def edgePrep(s: SparkSession, sym: DataFrame, key: String): DataFrame =
     if (vertexBroadcast(s)) sym.cut() else sym.repartition(col(key)).cut()
 
@@ -140,7 +131,7 @@ object Graph extends graft.QueryModule {
     // orient each edge low→high by (deg, id): src gets the smaller key.
     // deg has one row per PART (bounded by the part dim, not the fact
     // table) — broadcast both lookups while the conf allows it; with
-    // BroadcastConf=false these are plain shuffled equi-joins and the
+    // a negative threshold these are plain shuffled equi-joins and the
     // plan survives an unbounded vertex domain
     val aFirst = struct(col("da"), col("a")) < struct(col("db"), col("b"))
     val oriented = e
@@ -157,7 +148,7 @@ object Graph extends graft.QueryModule {
     // sf0.1 — measured 7.3 s); this streams the SAME arithmetic through
     // 1.2 M edge rows with two broadcast adjacency lookups (0.9 s). The
     // adjacency relation is one row per VERTEX (part-dimension-bounded,
-    // ~10 MB); with BroadcastConf=false both lookups run as shuffled
+    // ~10 MB); with a negative threshold both lookups run as shuffled
     // equi-joins on src/dst — the per-edge identity is unchanged.
     val adj = oriented.groupBy(col("src"))
       .agg(sort_array(collect_list(col("dst"))).as("nbrs"))
@@ -204,8 +195,8 @@ object Graph extends graft.QueryModule {
     * (node, deg, rank).
     *
     * Two paths, one answer (GraphSpec pins them row-identical). Below
-    * [[driverEdges]]' broadcast-sized gate the edges are collected once
-    * (with `seed` evaluated by Spark on both endpoints) and
+    * [[DriverRounds.collectBounded]]' broadcast-sized gate the edges are
+    * collected once (with `seed` evaluated by Spark on both endpoints) and
     * [[DriverRounds.pinnedRank]] runs the same pinned steps in the JVM,
     * returning a LocalRelation. Above it, the distributed rounds: per
     * iteration one equi-join rank×edges (both layouts of [[edgePrep]]) +
@@ -213,7 +204,8 @@ object Graph extends graft.QueryModule {
     * [[Dedup.connectedComponents]]. */
   private[graft] def pinnedRank(s: SparkSession, edges: DataFrame,
                                 seed: Column => Column): DataFrame =
-    driverEdges(s, edges.select(col("a"), col("b"), seed(col("a")), seed(col("b"))))
+    DriverRounds.collectBounded(s,
+        edges.select(col("a"), col("b"), seed(col("a")), seed(col("b"))))
       .map(DriverRounds.pinnedRank(s, edges, _, prIters))
       .getOrElse(rankRounds(s, edges, seed))
 
@@ -1005,8 +997,8 @@ object Graph extends graft.QueryModule {
     * vertex key — integer-only, no wedges, no adjacency arrays; the
     * survivor relation only shrinks. The vertex-domain semi-join sides
     * ride [[maybeBroadcast]] like the rest of the family, so with
-    * `BroadcastConf=false` every step is a shuffled equi-join and the
-    * plan survives an unbounded vertex domain. */
+    * a negative `autoBroadcastJoinThreshold` every step is a shuffled
+    * equi-join and the plan survives an unbounded vertex domain. */
   private def kcore(s: SparkSession, d: String): DataFrame = {
     var edges = coPurchaseEdges(s, d)
     for (_ <- 1 to KCoreRounds)
@@ -1058,19 +1050,20 @@ object Graph extends graft.QueryModule {
     *
     * Scale shape per round: two equi-join + hash-agg passes over the
     * edge relation (h→auth on dst, a→hub on src). Broadcast mode ships
-    * the |V|-row score table each half-round; with [[BroadcastConf]]
-    * off, the edge relation is pre-partitioned ONCE per join side (src
-    * copy + dst copy, both checkpointed) and only the score table
-    * moves — the [[edgePrep]] posture, doubled for the two directions.
+    * the |V|-row score table each half-round; with a negative threshold
+    * ([[vertexBroadcast]]) the edge relation is pre-partitioned ONCE per
+    * join side (src copy + dst copy, both checkpointed) and only the
+    * score table moves — the [[edgePrep]] posture, doubled for the two
+    * directions.
     *
     * Two paths, one answer (GraphSpec pins them row-identical): below
-    * [[driverEdges]]' broadcast-sized gate [[DriverRounds.hits]] runs the
+    * [[DriverRounds.collectBounded]]' gate [[DriverRounds.hits]] runs the
     * same sparse alternation in the JVM over the collected edges and
     * returns the dense (node, hs, as_) as a LocalRelation; above it,
     * [[hitsRounds]] runs the distributed rounds. The final rounding and
     * ordering run in Spark on either. */
   private[graft] def hitsIterate(s: SparkSession, edges: DataFrame): DataFrame =
-    driverEdges(s, edges.select(col("a"), col("b")))
+    DriverRounds.collectBounded(s, edges.select(col("a"), col("b")))
       .map(DriverRounds.hits(s, edges, _, HitsRounds))
       .getOrElse(hitsRounds(s, edges))
       .select(col("node"),

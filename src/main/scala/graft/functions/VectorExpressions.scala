@@ -205,7 +205,7 @@ object MinHashArray {
   * Column construction goes through the public `call_function` API over
   * the registered names (the Column<->Expression bridge is private[sql]
   * in Spark 4), so callers must [[VectorFunctions.register]] the session
-  * first — every graft query that uses these does so idempotently.
+  * first — the `SparkEntry.queries` wrapper does so for every key.
   */
 object VectorFunctions {
 
@@ -269,54 +269,51 @@ object VectorFunctions {
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
 
-  /** Idempotent SQL registration (`graft_dot`, `graft_cosine`,
-    * aggregate `graft_simhash`) — memoized per session. */
+  /** Every graft SQL function: its name, the expression class it builds
+    * (the `DESCRIBE FUNCTION` class) and its builder. [[register]] and
+    * [[graft.GraftExtensions]] both loop over this one table, so a library
+    * session and an extensions-only session see the same functions. */
+  private[graft] val table: Seq[(String, Class[_], Seq[Expression] => Expression)] = {
+    import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
+    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+    Seq(
+      ("graft_dot", classOf[DotProduct], e => DotProduct(e(0), e(1))),
+      ("graft_cosine", classOf[CosineSimilarity], e => CosineSimilarity(e(0), e(1))),
+      ("graft_intersect_count", classOf[SortedIntersectCount],
+        e => SortedIntersectCount(e(0), e(1))),
+      ("graft_jaro_winkler", classOf[JaroWinkler], e => JaroWinkler(e(0), e(1))),
+      // Spark ships BloomFilterAggregate/BloomFilterMightContain for its
+      // runtime join filters but does NOT register them as SQL functions;
+      // surface them for the Bloom decontamination path (probe sets too
+      // large to broadcast exactly).
+      ("graft_bloom_agg", classOf[BloomFilterAggregate],
+        e => new BloomFilterAggregate(e(0), e(1), e(2)).toAggregateExpression()),
+      ("graft_bloom_contains", classOf[BloomFilterMightContain],
+        e => BloomFilterMightContain(e(0), e(1))),
+      ("graft_simhash", classOf[SimHashAgg], e => SimHashAgg(e(0)).toAggregateExpression()),
+      ("graft_minhash", classOf[MinHashAgg], e => MinHashAgg(e(0),
+        constIntArg("graft_minhash", "num_hashes", e(1))).toAggregateExpression()),
+      ("graft_minhash_array", classOf[MinHashArray], e => MinHashArray(e(0),
+        constIntArg("graft_minhash_array", "num_hashes", e(1)))),
+      ("graft_topk_by", classOf[TopKByAgg], e => TopKByAgg(e(0), e(1),
+        constIntArg("graft_topk_by", "k", e(2))).toAggregateExpression()),
+      ("graft_hex_long", classOf[HexToLong], e => HexToLong(e(0),
+        constIntArg("graft_hex_long", "pos", e(1)),
+        constIntArg("graft_hex_long", "len", e(2)))),
+      ("graft_zorder", classOf[ZOrderValue], e => ZOrderValue(e(0), e(1))),
+      ("graft_hilbert", classOf[HilbertValue], e => HilbertValue(e(0), e(1))),
+      ("graft_product", classOf[ProductAgg], e => ProductAgg(e(0)).toAggregateExpression()),
+      ("graft_session_id", classOf[SessionId], e => SessionId(e(0), e(1))),
+      ("graft_theta", classOf[ThetaSketchAgg], e => ThetaSketchAgg(e(0),
+        constIntArg("graft_theta", "lg_k", e(1))).toAggregateExpression()))
+  }
+
+  /** Idempotent SQL registration of [[table]] — memoized per session. */
   def register(spark: SparkSession): Unit = {
     if (registeredSessions.put(spark, java.lang.Boolean.TRUE) != null) return
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_dot",
-      exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_cosine",
-      exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_intersect_count",
-      exprs => SortedIntersectCount(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_jaro_winkler",
-      exprs => JaroWinkler(exprs(0), exprs(1)), "built-in")
-    // Spark ships BloomFilterAggregate/BloomFilterMightContain for its
-    // runtime join filters but does NOT register them as SQL functions;
-    // surface them for the Bloom decontamination path (probe sets too
-    // large to broadcast exactly).
-    reg.createOrReplaceTempFunction("graft_bloom_agg",
-      exprs => new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-        exprs(0), exprs(1), exprs(2)).toAggregateExpression(), "built-in")
-    reg.createOrReplaceTempFunction("graft_bloom_contains",
-      exprs => org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-        exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_simhash",
-      exprs => SimHashAgg(exprs(0)).toAggregateExpression(), "built-in")
-    reg.createOrReplaceTempFunction("graft_minhash",
-      exprs => MinHashAgg(exprs(0),
-        constIntArg("graft_minhash", "num_hashes", exprs(1))).toAggregateExpression(), "built-in")
-    reg.createOrReplaceTempFunction("graft_minhash_array",
-      exprs => MinHashArray(exprs(0),
-        constIntArg("graft_minhash_array", "num_hashes", exprs(1))), "built-in")
-    reg.createOrReplaceTempFunction("graft_topk_by",
-      exprs => TopKByAgg(exprs(0), exprs(1),
-        constIntArg("graft_topk_by", "k", exprs(2))).toAggregateExpression(), "built-in")
-    reg.createOrReplaceTempFunction("graft_hex_long",
-      exprs => HexToLong(exprs(0),
-        constIntArg("graft_hex_long", "pos", exprs(1)),
-        constIntArg("graft_hex_long", "len", exprs(2))), "built-in")
-    reg.createOrReplaceTempFunction("graft_zorder",
-      exprs => ZOrderValue(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_hilbert",
-      exprs => HilbertValue(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_product",
-      exprs => ProductAgg(exprs(0)).toAggregateExpression(), "built-in")
-    reg.createOrReplaceTempFunction("graft_session_id",
-      exprs => SessionId(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_theta",
-      exprs => ThetaSketchAgg(exprs(0),
-        constIntArg("graft_theta", "lg_k", exprs(1))).toAggregateExpression(), "built-in")
+    table.foreach { case (name, _, build) =>
+      reg.createOrReplaceTempFunction(name, build, "built-in")
+    }
   }
 }

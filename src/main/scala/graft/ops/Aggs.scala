@@ -184,7 +184,6 @@ object Aggs extends graft.QueryModule {
     * degrades gracefully to bounded-error estimates
     * (ThetaSketchSpec pins that regime). */
   private def thetaSetOps(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val sk = Tables.events(s, d)
       .filter(col("user_id").isNotNull)
       .select(col("event_type"), col("user_id").cast("long").as("u"))

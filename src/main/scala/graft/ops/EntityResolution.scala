@@ -36,7 +36,6 @@ object EntityResolution extends graft.QueryModule {
   private val threshold = "6.0"
 
   private def fellegiSunter(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val base = Tables.customer(s, d).selectExpr(
       "c_custkey as id",
       "substring(md5(concat('nm:', cast(c_custkey as string))), 1, 12) as nm",
@@ -120,7 +119,6 @@ object EntityResolution extends graft.QueryModule {
     * no n² — and the comparator is the codegen IEEE-bit-identical
     * [[graft.functions.JaroWinkler]]. */
   private def sortedNeighborhood(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val win = 4 // neighborhood width w: compare to the 3 successors
     val base = Tables.customer(s, d).selectExpr(
       "c_custkey as id",

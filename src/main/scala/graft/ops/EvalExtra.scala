@@ -217,7 +217,6 @@ object EvalExtra extends graft.QueryModule {
     * 13-year calendar — bounded by calendar span, not data volume);
     * everything after is domain-sized. */
   private def kaplanMeier(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val wRisk = Window.orderBy(col("t"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val wSurv = Window.orderBy(col("t"))

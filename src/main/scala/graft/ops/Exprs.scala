@@ -168,7 +168,6 @@ object Exprs extends graft.QueryModule {
     * behavior is spec-tested against the reference loop in
     * ZOrderValueSpec. */
   private def zorderValue(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     Tables.part(s, d).select(col("p_partkey"),
         graft.functions.VectorFunctions.zorder(
           col("p_size"), pmod(col("p_partkey"), lit(1000)).cast("int")).as("zval"))

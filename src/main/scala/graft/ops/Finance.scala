@@ -192,7 +192,6 @@ object Finance extends graft.QueryModule {
   }
 
   private def compoundReturn(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts"), col("event_id")).rowsBetween(-7, 0)
     Tables.events(s, d)

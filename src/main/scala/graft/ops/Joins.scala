@@ -200,7 +200,6 @@ object Joins extends graft.QueryModule {
     * eliminated by the exact join, so the result equals the plain join
     * for ANY fpp — which is exactly what the oracle checks. */
   private def bloomPruned(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val cust = Tables.customer(s, d)
       .filter(col("c_mktsegment") === "MACHINERY" && col("c_acctbal") > 4500)
       .select(col("c_custkey"), col("c_name"))

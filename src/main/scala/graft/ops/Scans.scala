@@ -423,7 +423,6 @@ object Scans extends graft.QueryModule {
     * files (ratio asserted in ZOrderValueSpec). The read result is
     * exact, so the key hash-matches a plain filtered scan. */
   private def sinkZorderScan(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val dir = graft.Scratch.dir("orders_zorder")
     val zed = Tables.orders(spark, sfDir)
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"),
@@ -453,7 +452,6 @@ object Scans extends graft.QueryModule {
     * plain filtered scan; the file-skipping win shows in the manifest
     * pruning ratio, not the answer. */
   private def sinkHilbertScan(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val dir = graft.Scratch.dir("orders_hilbert")
     val indexed = Tables.orders(spark, sfDir)
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"),

@@ -67,7 +67,6 @@ object StreamBatch extends graft.QueryModule {
     * asserts the stream's final state equals this plan's answer. Null
     * values carry no rank and are excluded on both sides. */
   private def topkStateful(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     Tables.events(s, d)
       .filter(col("value").isNotNull)
       .groupBy(col("event_type"))

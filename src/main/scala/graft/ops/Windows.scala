@@ -262,7 +262,6 @@ object Windows extends graft.QueryModule {
     * hash equality IS the proof the single-pass state machine matches
     * the two-expression idiom. */
   private def sessionizeNative(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     Tables.events(s, d)
       .select(col("user_id"), col("ts"), col("event_id"), col("value"))

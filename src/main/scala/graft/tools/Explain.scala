@@ -8,7 +8,8 @@ import org.apache.spark.sql.SparkSession
   *
   * Usage: runMain graft.tools.Explain <suffix> <key>[,<key>...]
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32),
-  *      SPARK_GRAFT_PLANDIR (default plans/r14).
+  *      SPARK_GRAFT_PLANDIR (default plans/r14), SPARK_GRAFT_CONF (session
+  *      confs, [[graft.EnvConf]]).
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -23,6 +24,7 @@ object Explain {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.EnvConf(spark)
     new java.io.File(planDir).mkdirs()
     keys.foreach { k =>
       val df = graft.SparkEntry.queries(k)(spark, sfDir)

@@ -240,38 +240,24 @@ object Probe {
     }
 
     if (sections("jobs")) {
-      // ---- deterministic barrier census (r15): count Spark jobs/stages
-      // per key with a listener. Job count is noise-free evidence for
+      // ---- deterministic barrier census (r15): Spark jobs/stages per key
+      // (graft.obs.JobCensus). Job count is noise-free evidence for
       // "fewer driver barriers per fixpoint round" claims — contention
       // moves seconds, never the job count.
-      val jobs = new java.util.concurrent.atomic.AtomicInteger
-      val stages = new java.util.concurrent.atomic.AtomicInteger
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet()
-          stages.addAndGet(j.stageInfos.size)
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
       val jobKeys = sys.env.get("SPARK_GRAFT_JOBKEYS")
         .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
         .getOrElse(Seq("graph_pagerank", "graph_hits", "graph_sssp",
           "graph_labelprop", "dedup_minhash", "dedup_clusters",
           "dedup_semantic", "corpus_clean_pipeline"))
       for (k <- jobKeys) {
+        def run(): Unit = graft.SparkEntry.queries(k)(s, d)
+          .write.format("noop").mode("overwrite").save()
         // warm the shared edge/doc caches once so per-key counts are
         // steady-state, mirroring what the bench's min-of-N times
-        graft.SparkEntry.queries(k)(s, d)
-          .write.format("noop").mode("overwrite").save()
-        Thread.sleep(300) // let the async listener bus drain
-        jobs.set(0); stages.set(0)
-        graft.SparkEntry.queries(k)(s, d)
-          .write.format("noop").mode("overwrite").save()
-        Thread.sleep(300) // let the async listener bus drain
-        println(f"[probe] jobs $k%-30s jobs=${jobs.get}%4d stages=${stages.get}%4d")
+        run()
+        val (jobs, stages) = graft.obs.JobCensus.jobsOf(s, s"census-$k")(run())
+        println(f"[probe] jobs $k%-30s jobs=$jobs%4d stages=$stages%4d")
       }
-      spark.sparkContext.removeSparkListener(listener)
     }
 
     if (sections("hnsw")) {

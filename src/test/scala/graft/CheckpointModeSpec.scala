@@ -41,9 +41,10 @@ class CheckpointModeSpec extends AnyFunSuite {
   }
 
   test("pagerank is hash-identical across checkpoint modes") {
-    // sf0.001's edges fit the driver-local gate, which cuts nothing; with
-    // auto-broadcast off both legs run the distributed rounds' cuts
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // sf0.001's edges fit the driver-local gate, which cuts nothing; at a
+    // 1 B threshold the gate declines and both legs run the cuts of the
+    // broadcast-layout distributed rounds (sf0.1's path)
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1")
     try runBoth("graph_pagerank")
     finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }

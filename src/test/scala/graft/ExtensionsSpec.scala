@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,16 +13,29 @@ import org.scalatest.funsuite.AnyFunSuite
   * SparkContext (the config-string path runs the same injector). */
 class ExtensionsSpec extends AnyFunSuite {
 
-  test("one extensions conf gives a session functions + TVF + optimizer rule") {
+  /** `body` on a session built with the extensions alone. */
+  private def withExtensionsSession(body: SparkSession => Unit): Unit = {
     val orig = TestSpark.spark // ensure the shared context exists
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     try {
-      val s2 = SparkSession.builder()
+      body(SparkSession.builder()
         .master("local[4]")
         .config("spark.sql.shuffle.partitions", 4)
         .withExtensions(new GraftExtensions)
-        .getOrCreate()
+        .getOrCreate())
+    } finally {
+      // restore the shared session for later suites; never stop the new
+      // one (it shares orig's SparkContext)
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      SparkSession.setActiveSession(orig)
+      SparkSession.setDefaultSession(orig)
+    }
+  }
+
+  test("one extensions conf gives a session functions + TVF + optimizer rule") {
+    withExtensionsSession { s2 =>
       import s2.implicits._
 
       // 1. injected scalar function, pure SQL, no register() call
@@ -54,13 +68,19 @@ class ExtensionsSpec extends AnyFunSuite {
         assert(joined.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ==
           Seq((1L, 10L), (2L, 20L)))
       } finally s2.conf.unset(graft.rules.RewriteRangeJoin.WidthConf)
-    } finally {
-      // restore the shared session for later suites; never stop s2 (it
-      // shares orig's SparkContext)
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      SparkSession.setActiveSession(orig)
-      SparkSession.setDefaultSession(orig)
+    }
+  }
+
+  test("every graft SQL function resolves on an extensions-only session") {
+    withExtensionsSession { s2 =>
+      val reg = s2.sessionState.functionRegistry
+      val missing = graft.functions.VectorFunctions.table.map(_._1)
+        .filterNot(n => reg.functionExists(FunctionIdentifier(n)))
+      assert(missing.isEmpty, s"not injected by GraftExtensions: $missing")
+      // and the injected builders evaluate through SQL text
+      val r = s2.sql("SELECT graft_zorder(3, 5), graft_hex_long('00ff', 1, 4)")
+        .collect()(0)
+      assert(!r.isNullAt(0) && r.getLong(1) == 255L)
     }
   }
 }

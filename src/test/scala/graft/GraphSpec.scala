@@ -81,13 +81,13 @@ class GraphSpec extends AnyFunSuite {
   }
 
   test("shuffle mode (no vertex broadcast) is hash-identical at 4 AND 32 partitions") {
-    // the 100 TB posture: with graft.graph.broadcastVertexDomain=false
+    // the 100 TB posture: with a negative autoBroadcastJoinThreshold
     // every vertex-domain relation moves by shuffle join, and the result
     // must be bit-identical to broadcast mode on any partitioning
     def run(parts: String): (Seq[String], Seq[String]) = {
       val ns = spark.newSession()
       ns.conf.set("spark.sql.shuffle.partitions", parts)
-      ns.conf.set(graft.ext.Graph.BroadcastConf, "false")
+      ns.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       (SparkEntry.queries("graph_triangles")(ns, TestSpark.sf0001)
         .collect().map(_.toString).toSeq,
         SparkEntry.queries("graph_pagerank")(ns, TestSpark.sf0001)
@@ -113,7 +113,7 @@ class GraphSpec extends AnyFunSuite {
       for (parts <- Seq("4", "32")) {
         val ns = spark.newSession()
         ns.conf.set("spark.sql.shuffle.partitions", parts)
-        ns.conf.set(graft.ext.Graph.BroadcastConf, "false")
+        ns.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         val off = SparkEntry.queries(key)(ns, TestSpark.sf0001)
           .collect().map(_.toString).toSeq
         assert(off == on, s"$key differs in shuffle mode at $parts partitions")
@@ -188,7 +188,7 @@ class GraphSpec extends AnyFunSuite {
     for (parts <- Seq("4", "32")) {
       val ns = spark.newSession()
       ns.conf.set("spark.sql.shuffle.partitions", parts)
-      ns.conf.set(graft.ext.Graph.BroadcastConf, "false")
+      ns.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       val off = SparkEntry.queries("graph_jaccard_neighbors")(
         ns, TestSpark.sf0001).collect().map(_.toString).toSeq
       assert(off == on, s"jaccard differs in shuffle mode at $parts partitions")
@@ -196,10 +196,10 @@ class GraphSpec extends AnyFunSuite {
   }
 
   test("shuffle mode plans contain zero BroadcastExchange") {
+    // a negative threshold takes the family's broadcast hints off with
+    // Spark's own auto-broadcast: the claim is that the PLAN SHAPE works
+    // without any driver-side vertex collection at all
     val ns = spark.newSession()
-    ns.conf.set(graft.ext.Graph.BroadcastConf, "false")
-    // disable the auto-broadcast heuristic too: the claim is that the
-    // PLAN SHAPE works without any driver-side vertex collection at all
     ns.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     for (k <- Seq("graph_triangles", "graph_pagerank", "graph_bfs",
         "graph_sssp", "graph_jaccard_neighbors")) {
@@ -227,15 +227,22 @@ class GraphSpec extends AnyFunSuite {
   }
 
   test("rank fixpoints' distributed rounds: jobs per warm run stay pinned") {
-    // auto-broadcast off shuts the driver-local gate without running its
-    // collect, so these are the distributed loops' own barriers — the 100 TB
-    // path, unchanged by the local one
-    val pinned = Map("graph_pagerank" -> (15, 23), "graph_ppr" -> (15, 23),
-      "graph_hits" -> (21, 39))
-    val ns = JobCensus.session()
-    ns.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val got = pinned.keys.map(k => k -> JobCensus.warmJobs(ns, k)).toMap
-    assert(got == pinned)
+    // the distributed loops' own barriers in both layouts — the 100 TB
+    // paths, unchanged by the local one. A 1 B threshold makes the gate
+    // collect one row and decline, so the rounds run in broadcast layout
+    // after that one job; a negative threshold shuts the gate without a
+    // job and runs the shuffle layout
+    val layouts = Seq(
+      "1" -> Map("graph_pagerank" -> (16, 24), "graph_ppr" -> (16, 24),
+        "graph_hits" -> (22, 40)),
+      "-1" -> Map("graph_pagerank" -> (10, 18), "graph_ppr" -> (10, 18),
+        "graph_hits" -> (22, 51)))
+    for ((threshold, pinned) <- layouts) {
+      val ns = JobCensus.session()
+      ns.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+      val got = pinned.keys.map(k => k -> JobCensus.warmJobs(ns, k)).toMap
+      assert(got == pinned, s"threshold $threshold")
+    }
   }
 
   test("degree distribution on sf0.001 sums to the vertex count") {
@@ -280,14 +287,16 @@ class GraphSpec extends AnyFunSuite {
   }
 
   /** The sessions whose rank rows must agree: the default (driver-local),
-    * the broadcast-mode distributed rounds (auto-broadcast off shuts the
-    * gate) and the shuffle-mode distributed rounds. */
+    * the broadcast-mode distributed rounds (a 1 B threshold: the gate
+    * collects one row and declines) and the shuffle-mode distributed
+    * rounds (a negative threshold). */
   private lazy val rankModes: Seq[(String, SparkSession)] = {
-    val off = spark.newSession()
-    off.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val shuffle = spark.newSession()
-    shuffle.conf.set(graft.ext.Graph.BroadcastConf, "false")
-    Seq("local" -> spark.newSession(), "broadcast" -> off, "shuffle" -> shuffle)
+    def at(threshold: String) = {
+      val ns = spark.newSession()
+      ns.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+      ns
+    }
+    Seq("local" -> spark.newSession(), "broadcast" -> at("1"), "shuffle" -> at("-1"))
   }
 
   /** pinnedRank under both seed rules, then hitsIterate, over `edges` in
@@ -366,13 +375,12 @@ class GraphSpec extends AnyFunSuite {
     // the one bounded collect behind every driver-local kernel. A bigint
     // (a, b) row is 24 B to Spark's size estimate, so a 240 B threshold
     // caps it at 10 rows; one range partition makes the collect one job.
-    // (Shuffle mode never reaching the gate is the generated-graph
-    // property's "shuffle" session.)
+    // A negative threshold, the shuffle layout, never collects.
     def edges(ns: SparkSession, n: Long) = ns.range(1, n + 1, 1, 1)
       .select(col("id").as("a"), (col("id") + 1).as("b"))
     def gate(ns: SparkSession, n: Long) = {
       var got: Option[Array[Row]] = None
-      val (jobs, _) = JobCensus.jobsOf(ns, s"gate-$n") {
+      val (jobs, _) = obs.JobCensus.jobsOf(ns, s"gate-$n") {
         got = ext.DriverRounds.collectBounded(ns, edges(ns, n))
       }
       (got.map(_.toSeq), jobs)

@@ -80,7 +80,7 @@ class Round8Spec extends AnyFunSuite {
       .collect().map(_.toString).toSeq
     assert(on.nonEmpty)
     val ns = spark.newSession()
-    ns.conf.set(graft.ext.Graph.BroadcastConf, "false")
+    ns.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     ns.conf.set("spark.sql.shuffle.partitions", "4")
     val off = SparkEntry.queries("graph_betweenness")(ns, TestSpark.sf0001)
       .collect().map(_.toString).toSeq
