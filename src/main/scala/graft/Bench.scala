@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark main (driver contract: ONE JSON line).
   *
@@ -216,14 +215,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    EnvConf(spark)
+    val spark = Session.local(defaultCpus = 32)
     // Warmup outside the timed loop: JVM/codegen baseline + parquet
     // footer/file-index reads + the noop write path, so per-query numbers
     // reflect steady state rather than whichever key happens to run first.

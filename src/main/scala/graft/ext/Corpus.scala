@@ -254,6 +254,16 @@ object Corpus extends graft.QueryModule {
         size(split(col("text"), " ")) >= 20 &&
         col("lang").isin("en", "fr", "de"))
 
+  /** Stage 3 of [[cleanPipeline]] over [[gatedDocs]]: exact-document
+    * dedup on the raw text (md5, lowest doc_id wins). */
+  private[graft] def exactDocs(s: SparkSession, d: String): DataFrame =
+    gatedDocs(s, d)
+      .withColumn("h", md5(col("text")))
+      .groupBy(col("h"))
+      .agg(min(struct(col("doc_id"), col("lang"), col("text"))).as("w"))
+      .select(col("w.doc_id").as("doc_id"), col("w.lang").as("lang"),
+        col("w.text").as("text"))
+
   /** The whole C4/RefinedWeb-style cleaning pipeline — the composition
     * showpiece: every stage is an operator this library already ships
     * individually, chained so Catalyst plans the chain end to end
@@ -279,7 +289,6 @@ object Corpus extends graft.QueryModule {
     * six-stage composition loses nothing vs the per-operator
     * semantics. */
   private def cleanPipeline(s: SparkSession, d: String): DataFrame = {
-    val docs = gatedDocs(s, d)
     // r15 (guide §2.4/§5): materialize the exact-dedup stage ONCE. Its
     // subplan (scan + quality filter + md5 + the min-struct hash-agg) is
     // referenced four-plus times downstream — the near-dup stage's band
@@ -287,12 +296,7 @@ object Corpus extends graft.QueryModule {
     // the left-semi survivor join — and nothing above it is checkpointed,
     // so every reference re-ran the whole scan+agg. One localCheckpoint
     // replaces 4-5 recomputations with one pass + cheap block reads.
-    val exact = graft.Ckpt.cut(docs
-      .withColumn("h", md5(col("text")))
-      .groupBy(col("h"))
-      .agg(min(struct(col("doc_id"), col("lang"), col("text"))).as("w"))
-      .select(col("w.doc_id").as("doc_id"), col("w.lang").as("lang"),
-        col("w.text").as("text")))
+    val exact = graft.Ckpt.cut(exactDocs(s, d))
     val reps = Dedup.md5ClusterAssign(exact.select(col("doc_id"), col("text")))
       .filter(col("doc_id") === col("cluster_id")).select(col("doc_id"))
     val nearDeduped = exact.join(reps, Seq("doc_id"), "left_semi")

@@ -193,12 +193,12 @@ object SimSearch extends graft.QueryModule {
   /** The beam walk over a PREBUILT undirected edge set, from an
     * explicit `entries (vec_id)` relation — parameterized (r11) so the
     * label-free bucketed build can enter from per-LSH-bucket minima
-    * while the label-blocked legs keep [[labelEntries]]. */
-  /** The walk's full VISITED set — every (vec_id, cosine) the walk ever
-    * scored. Split out of [[beamWalk]] so the cost probe
-    * ([[serveHnswScoredCount]]) can COUNT the scored candidates of the
-    * exact serving plan instead of estimating them (r13 VERDICT #4: the
-    * ef trade is two-sided; recall curves need a price axis). */
+    * while the label-blocked legs keep [[labelEntries]]. Returns the
+    * walk's full VISITED set — every (vec_id, cosine) the walk ever
+    * scored — so the HNSW cost probe ([[serveHnswScoredCount]]) can
+    * COUNT the scored candidates of the serving plan instead of
+    * estimating them (r13 VERDICT #4: the ef trade is two-sided; recall
+    * curves need a price axis). */
   private def beamWalkVisited(corpus: DataFrame, graphEdges: DataFrame,
                               entries: DataFrame,
                               probeIn: DataFrame, beamW: Int,
@@ -214,7 +214,7 @@ object SimSearch extends graft.QueryModule {
             (sqrt(col("nsq")) * sqrt(col("pnsq")))).as("cosine"))
     var visited = scored(entries).cut()
     for (_ <- 1 to steps) {
-      val beam = visited.orderBy(col("cosine").desc, col("vec_id")).limit(beamW)
+      val beam = topByCosine(visited, beamW)
       val frontier = beam.select(col("vec_id").as("i"))
         .join(graph, Seq("i")).select(col("j").as("vec_id"))
         .except(visited.select(col("vec_id")))
@@ -223,12 +223,16 @@ object SimSearch extends graft.QueryModule {
     visited
   }
 
+  /** The `k` best of a scored frame, total order (cosine DESC, vec_id). */
+  private def topByCosine(scored: DataFrame, k: Int): DataFrame =
+    scored.orderBy(col("cosine").desc, col("vec_id")).limit(k)
+
   private def beamWalk(corpus: DataFrame, graphEdges: DataFrame,
                        entries: DataFrame,
                        probeIn: DataFrame, beamW: Int, steps: Int,
                        k: Int): DataFrame =
-    beamWalkVisited(corpus, graphEdges, entries, probeIn, beamW, steps)
-      .orderBy(col("cosine").desc, col("vec_id")).limit(k)
+    topByCosine(
+      beamWalkVisited(corpus, graphEdges, entries, probeIn, beamW, steps), k)
 
   /** The walk itself, over any `(vec_id, label, embedding)` corpus and
     * 1-row `(embedding)` probe — public so the recall spec can drive
@@ -648,27 +652,15 @@ object SimSearch extends graft.QueryModule {
       .agg(min(col("vec_id")).as("vec_id")).select("vec_id")
 
   /** The label-free twin of [[graphBeamSearch]]: bucketed NN-Descent
-    * build, per-bucket entries, same beam walk — public so the recall
-    * spec can drive the identical code path over clustered fixtures. */
+    * build, per-bucket entries, same beam walk — the [[hnswSearch]]
+    * descent with no upper layer, public so the recall spec can drive
+    * the identical code path over clustered fixtures. */
   def graphBeamSearchBucketed(corpusIn: DataFrame, probeIn: DataFrame,
                               degree: Int, rounds: Int, beamW: Int,
-                              steps: Int, k: Int): DataFrame = {
-    val raw = corpusIn.select(col("vec_id"), col("embedding"))
-    val corpus = raw.select(col("vec_id"), col("embedding"),
-      dot(col("embedding"), col("embedding")).as("nsq")).cut()
-    beamWalk(corpus, symCap(knnGraphBucketed(raw, degree, rounds), degree),
-      bucketEntries(raw), probeIn, beamW, steps, k)
-  }
+                              steps: Int, k: Int): DataFrame =
+    hnswSearch(corpusIn, probeIn, 0, degree, rounds, beamW, steps, k)
 
-  private def knnGraphBucketedSearch(s: SparkSession, d: String): DataFrame = {
-    val e = Tables.embeddings(s, d)
-    graphBeamSearchBucketed(
-      e.filter(col("vec_id") =!= 0),
-      e.filter(col("vec_id") === 0).select(col("embedding")),
-      GraphAnnDegree, NnDescentRounds, GraphAnnBeam, GraphAnnSteps, k = 10)
-  }
-
-  /** Generated oracle for [[knnGraphBucketedSearch]]: the md5-coin LSH
+  /** Generated oracle for `sim_search_knn_graph_bucketed`: the md5-coin LSH
     * bucket CTEs (sim_search_ivf's weight-matrix regeneration), the
     * bucket-seeded degree ranking, [[NnDescentRounds]] unrolled
     * NN-Descent rounds, per-bucket entry points, and the shared
@@ -795,7 +787,41 @@ object SimSearch extends graft.QueryModule {
       "SELECT min(vec_id) AS vec_id FROM bk1 GROUP BY bucket")
   }
 
-  /** Generated oracle for [[hnswServe]]: the md5-coin layer sample, TWO
+  /** Hierarchical graph-ANN serving [N] (r11) — HNSW (Malkov-Yashunin,
+    * TPAMI 2018) on the label-free machinery. The flat bucketed walk
+    * enters from EVERY non-empty LSH bucket (≤ 2^planes entry scorings
+    * per probe — cheap here, but the entry fan-out is
+    * corpus-structure-bound, not a chosen knob), while HNSW replaces the
+    * fan-out with COARSE UPPER LAYERS walked first:
+    *
+    *  - LAYER assignment: layer ℓ ≥ 1 holds the nodes whose md5 coins
+    *    1..ℓ are all zero, coin ℓ being `hex8(md5(vec_id || salt)) % 4`
+    *    with salt `:hnswlvl` for ℓ = 1 and `:hnswlvl$ℓ` above — the true
+    *    HNSW level rule (level = count of leading zero coin draws,
+    *    p = 1/4), so the layers nest geometrically with no
+    *    data-dependent state ([[hnswLayerSlice]]);
+    *  - LAYER graphs: the SAME bucketed NN-Descent build
+    *    ([[knnGraphBucketed]]) over each layer's slice;
+    *  - DESCENT ([[hnswDescend]]): the top layer is walked
+    *    [[HnswUpperSteps]] beam rounds from its per-bucket minima, each
+    *    upper layer hands its single best hit down (the HNSW ef=1
+    *    descent), and layer 0 is walked the usual [[GraphAnnSteps]]
+    *    rounds.
+    *
+    * One descent serves every stack height: L = 0 is the flat bucketed
+    * walk (`sim_search_knn_graph_bucketed`), L = 1 the 2-layer
+    * `sim_search_hnsw` and its served twin, L = [[HnswMultiLevels]] the
+    * level stack `sim_search_hnsw_multi`. Per-layer walk work is
+    * steps × beam × 2·degree below the top, and only the top layer pays
+    * an entry scan — of n/4^L nodes instead of the flat walk's bucket
+    * count; at 100 TB L grows with log₄(corpus). Builds, walks and coins
+    * are the engine's existing pinned primitives, so each descent
+    * unrolls into one DuckDB statement. */
+  private val HnswLevelMod = 4
+  private val HnswUpperSteps = 3
+  private val HnswMultiLevels = 3
+
+  /** Generated oracle for `sim_search_hnsw`: the md5-coin layer sample, TWO
     * bucketed builds (upper subset + full corpus) sharing the weight
     * CTEs, the upper walk ([[HnswUpperSteps]] rounds from the upper
     * layer's per-bucket minima), its top-1 as the layer-0 entry, and
@@ -818,193 +844,11 @@ object SimSearch extends graft.QueryModule {
        |ORDER BY cosine DESC, vec_id LIMIT 10""".stripMargin
   }
 
-  /** Hierarchical graph-ANN serving [N] (r11) — the 2-layer HNSW shape
-    * (Malkov-Yashunin 2016) on the label-free machinery: the flat
-    * bucketed walk enters from EVERY non-empty LSH bucket (≤ 2^planes
-    * entry scorings per probe — cheap here, but the entry fan-out is
-    * corpus-structure-bound, not a chosen knob), while HNSW replaces
-    * the fan-out with a COARSE UPPER LAYER walked first:
-    *
-    *  - LAYER assignment: node is upper iff
-    *    `hex8(md5(vec_id || ':hnswlvl')) % 4 == 0` — the md5-coin
-    *    geometric level rule (p = 1/4), so the upper layer is an
-    *    unbiased ~25% sample with no data-dependent state;
-    *  - LAYER-1 graph: the SAME bucketed NN-Descent build
-    *    ([[knnGraphBucketed]]) over the upper subset; walked
-    *    [[HnswUpperSteps]] beam rounds from the upper layer's
-    *    per-bucket minima;
-    *  - LAYER-0 graph: the bucketed build over the full corpus, walked
-    *    the usual [[GraphAnnSteps]] rounds — entered from the single
-    *    best upper-layer hit (the HNSW ef=1 descent).
-    *
-    * At 100 TB the upper layer generalizes to a geometric level stack
-    * (1/4 per level): each descent starts from one node, walk work per
-    * layer is steps × beam × 2·degree, and only the top layer pays an
-    * entry scan — of n/4^L nodes instead of the flat walk's bucket
-    * count. Both builds, both walks, and the layer coin are the
-    * engine's existing pinned primitives, so the whole descent unrolls
-    * into one DuckDB statement. */
-  private val HnswLevelMod = 4
-  private val HnswUpperSteps = 3
-
-  /** Upper-layer membership coin: hex8(md5(vec_id:hnswlvl)) % mod == 0. */
-  private def hnswCoin: Column =
-    graft.functions.VectorFunctions.hex_long(
-      md5(concat(col("vec_id").cast("string"), lit(":hnswlvl"))), 1, 8) %
-      HnswLevelMod
-
-  /** The 2-layer descent — public so the recall spec can drive clustered
-    * fixtures through the identical path. */
-  def hnswSearch(corpusIn: DataFrame, probeIn: DataFrame, degree: Int,
-                 rounds: Int, beamW: Int, steps: Int, k: Int): DataFrame = {
-    val raw = corpusIn.select(col("vec_id"), col("embedding"))
-    val upperRaw = raw.filter(hnswCoin === 0)
-    val full = raw.select(col("vec_id"), col("embedding"),
-      dot(col("embedding"), col("embedding")).as("nsq")).cut()
-    val upper = full.filter(hnswCoin === 0).cut()
-    val entry0 = beamWalk(upper,
-        symCap(knnGraphBucketed(upperRaw, degree, rounds), degree),
-        bucketEntries(upperRaw), probeIn, beamW, HnswUpperSteps, k = 1)
-      .select("vec_id")
-    beamWalk(full,
-      symCap(knnGraphBucketed(raw, degree, rounds), degree),
-      entry0, probeIn, beamW, steps, k)
-  }
-
-  private def hnswServe(s: SparkSession, d: String): DataFrame = {
-    val e = Tables.embeddings(s, d)
-    hnswSearch(
-      e.filter(col("vec_id") =!= 0),
-      e.filter(col("vec_id") === 0).select(col("embedding")),
-      GraphAnnDegree, NnDescentRounds, GraphAnnBeam, GraphAnnSteps, k = 10)
-  }
-
-  /** Persisted-store HNSW serving as a registered key [N] (r12, VERDICT
-    * #2 — headline hygiene): `sim_search_hnsw` pays TWO full NN-Descent
-    * builds on every run, but at deployment the builds persist
-    * ([[hnswStoreSeed]]) and a query pays only the two walks — the
-    * amortized-build property is the reason the index exists. This key
-    * seeds the store once per process (per-JVM [[graft.Scratch]] dir,
-    * keyed by sf dir) and SERVES from it, so bench's min-of-N timing
-    * reads steady-state serving cost while the first (seeding) run pays
-    * the build. Same oracle as the in-query key: store serving is
-    * spec-pinned bit-equal to the one-shot descent. */
-  /** GEOMETRIC level-stack HNSW [N] (r12, VERDICT #5) — the 2-layer
-    * descent generalized to [[HnswMultiLevels]] upper layers, realizing
-    * the SCALE.md claim that only the TOP layer pays an entry scan
-    * (n/4^L nodes): layer ℓ membership = md5 coins 1..ℓ ALL zero
-    * (coin 1 is the 2-layer key's `:hnswlvl` coin, coin ℓ salts
-    * `:hnswlvl$ℓ`), so the samples nest geometrically (p = 1/4 per
-    * level) with NO data-dependent state — the true HNSW level rule
-    * (level = count of leading zero coin draws). Each layer gets the
-    * bucketed NN-Descent build over its sample; the descent walks the
-    * top layer from its per-bucket minima, then ef=1 (k=1, top-1 entry)
-    * through each intermediate layer, then the usual layer-0 walk. At
-    * 100 TB L grows with log₄(corpus) and per-layer walk work stays
-    * steps × beam × 2·degree — corpus-size-independent below the top. */
-  private val HnswMultiLevels = 3
-
-  /** Membership coin for level ℓ (1-based): level-1 reuses the 2-layer
-    * key's salt so the stacks agree on the first sample. */
-  private def hnswCoinL(l: Int): Column =
-    if (l == 1) hnswCoin
-    else
-      graft.functions.VectorFunctions.hex_long(
-        md5(concat(col("vec_id").cast("string"), lit(s":hnswlvl$l"))), 1, 8) %
-        HnswLevelMod
-
-  /** The layer-ℓ slice of a corpus: coins 1..ℓ all zero (ℓ = 0 is the
-    * full corpus). Stateless — every epoch, store, and serving path
-    * derives the same nested samples from vec_id alone. */
-  private def hnswLayerSlice(raw: DataFrame, l: Int): DataFrame =
-    (1 to l).foldLeft(raw)((df, i) => df.filter(hnswCoinL(i) === 0))
-
-  private def withNsqCut(df: DataFrame): DataFrame =
-    df.select(col("vec_id"), col("embedding"),
-      dot(col("embedding"), col("embedding")).as("nsq")).cut()
-
-  /** The L-layer descent over per-layer edge providers — shared by the
-    * in-query key (builds on the fly) and the persisted-store serving
-    * path (reads each layer's saved edges). */
-  private def hnswMultiDescend(raw: DataFrame, probeIn: DataFrame,
-                               levels: Int, degree: Int, beamW: Int,
-                               steps: Int, k: Int,
-                               layerEdges: Int => DataFrame): DataFrame = {
-    val top = hnswLayerSlice(raw, levels)
-    var entry = beamWalk(withNsqCut(top),
-        symCap(layerEdges(levels), degree),
-        bucketEntries(top), probeIn, beamW, HnswUpperSteps, k = 1)
-      .select("vec_id")
-    for (l <- (levels - 1) to 1 by -1) {
-      entry = beamWalk(withNsqCut(hnswLayerSlice(raw, l)),
-          symCap(layerEdges(l), degree),
-          entry, probeIn, beamW, HnswUpperSteps, k = 1)
-        .select("vec_id")
-    }
-    beamWalk(withNsqCut(raw), symCap(layerEdges(0), degree),
-      entry, probeIn, beamW, steps, k)
-  }
-
-  /** The L-layer descent — public for the recall spec. */
-  def hnswMultiSearch(corpusIn: DataFrame, probeIn: DataFrame, levels: Int,
-                      degree: Int, rounds: Int, beamW: Int, steps: Int,
-                      k: Int): DataFrame = {
-    val raw = corpusIn.select(col("vec_id"), col("embedding"))
-    hnswMultiDescend(raw, probeIn, levels, degree, beamW, steps, k,
-      l => knnGraphBucketed(hnswLayerSlice(raw, l), degree, rounds))
-  }
-
-  /** Seed the persistent LEVEL-STACK store (r12): vectors plus every
-    * layer's bucketed edge list land under `epoch=-1` — the L-layer
-    * generalization of [[hnswStoreSeed]]. Layer membership stays the
-    * stateless md5 coin stack, so appends never rebalance any layer
-    * (the 2-layer [[hnswDelta]] rule generalizes per layer: a delta
-    * node joins every layer its coins admit). */
-  def hnswMultiStoreSeed(vecsIn: DataFrame, storeDir: String,
-                         levels: Int = HnswMultiLevels,
-                         degree: Int = GraphAnnDegree,
-                         rounds: Int = NnDescentRounds): Unit = {
-    val st = EpochStore(vecsIn.sparkSession, storeDir)
-    val raw = vecsIn.select(col("vec_id"), col("embedding"))
-    st.seed("vecs", raw)
-    (0 to levels).foreach { l =>
-      st.seed(s"l$l", knnGraphBucketed(hnswLayerSlice(raw, l), degree, rounds))
-    }
-  }
-
-  /** Serve a probe from the persisted level stack — the same descent as
-    * `sim_search_hnsw_multi` over the union of every epoch's edges
-    * (spec-pinned EQUAL to the in-query key when the store was seeded
-    * with the same corpus). */
-  def serveHnswMultiFromStore(s: SparkSession, storeDir: String,
-                              probe: DataFrame,
-                              levels: Int = HnswMultiLevels,
-                              k: Int = 10,
-                              beamW: Int = GraphAnnBeam,
-                              steps: Int = GraphAnnSteps): DataFrame = {
-    val st = EpochStore(s, storeDir)
-    val raw = st.read("vecs").select("vec_id", "embedding")
-      .dropDuplicates("vec_id")
-    hnswMultiDescend(raw, probe, levels, GraphAnnDegree, beamW,
-      steps, k,
-      l => st.read(s"l$l")
-        .select(col("i"), col("j"), col("cosine")))
-  }
-
-  private def hnswMultiServe(s: SparkSession, d: String): DataFrame = {
-    val e = Tables.embeddings(s, d)
-    hnswMultiSearch(
-      e.filter(col("vec_id") =!= 0),
-      e.filter(col("vec_id") === 0).select(col("embedding")),
-      HnswMultiLevels, GraphAnnDegree, NnDescentRounds, GraphAnnBeam,
-      GraphAnnSteps, k = 10)
-  }
-
-  /** Generated oracle for [[hnswMultiServe]]: the nested coin samples
+  /** Generated oracle for `sim_search_hnsw_multi`: the nested coin samples
     * `up1 ⊇ up2 ⊇ up3`, FOUR bucketed builds sharing the weight CTEs,
     * the top walk from its per-bucket minima, ef=1 top-1 entries
     * through the intermediate layers, and the layer-0 walk. */
-  private def hnswMultiOracle: String = {
+  private def hnswStackOracle: String = {
     def coinSql(l: Int): String = {
       val salt = if (l == 1) ":hnswlvl" else s":hnswlvl$l"
       duckHex8(s"CAST(vec_id AS VARCHAR) || '$salt'") + s" % $HnswLevelMod = 0"
@@ -1043,6 +887,80 @@ object SimSearch extends graft.QueryModule {
        |ORDER BY cosine DESC, vec_id LIMIT 10""".stripMargin
   }
 
+  /** Membership coin for level ℓ (1-based). */
+  private def hnswCoin(l: Int): Column =
+    graft.functions.VectorFunctions.hex_long(
+      md5(concat(col("vec_id").cast("string"),
+        lit(if (l == 1) ":hnswlvl" else s":hnswlvl$l"))), 1, 8) %
+      HnswLevelMod
+
+  /** The layer-ℓ slice of a corpus: coins 1..ℓ all zero (ℓ = 0 is the
+    * full corpus). Stateless — every epoch, store, and serving path
+    * derives the same nested samples from vec_id alone. */
+  private def hnswLayerSlice(raw: DataFrame, l: Int): DataFrame =
+    (1 to l).foldLeft(raw)((df, i) => df.filter(hnswCoin(i) === 0))
+
+  private def withNsqCut(df: DataFrame): DataFrame =
+    df.select(col("vec_id"), col("embedding"),
+      dot(col("embedding"), col("embedding")).as("nsq")).cut()
+
+  /** The one HNSW descent over a layer stack `l0..lL` (L ≥ 0): the
+    * corpus is cut once with its norms and each upper layer is its
+    * [[hnswLayerSlice]] of that cut; the top layer is entered from its
+    * per-bucket minima, each upper layer is walked [[HnswUpperSteps]]
+    * rounds and hands its top-1 down, and layer 0 is walked `steps`
+    * rounds. `layerEdges(ℓ)` is layer ℓ's directed `(i, j, cosine)`
+    * list — built in-query or read from a store. Returns every layer's
+    * visited frame, top layer first: a serve takes layer 0's top k, the
+    * cost probe counts them all. */
+  private def hnswDescend(raw: DataFrame, probe: DataFrame, levels: Int,
+                          degree: Int, beamW: Int, steps: Int,
+                          layerEdges: Int => DataFrame): Seq[DataFrame] = {
+    val full = withNsqCut(raw)
+    var entries = bucketEntries(hnswLayerSlice(raw, levels))
+    (levels to 0 by -1).map { l =>
+      val visited = beamWalkVisited(
+        if (l == 0) full else hnswLayerSlice(full, l).cut(),
+        symCap(layerEdges(l), degree), entries, probe, beamW,
+        if (l == 0) steps else HnswUpperSteps)
+      entries = topByCosine(visited, 1).select("vec_id")
+      visited
+    }
+  }
+
+  /** The in-query descent over `levels` upper layers (0, 1 or more),
+    * every layer built on the fly — public so the recall spec can drive
+    * clustered fixtures through the identical path. */
+  def hnswSearch(corpusIn: DataFrame, probeIn: DataFrame, levels: Int,
+                 degree: Int, rounds: Int, beamW: Int, steps: Int,
+                 k: Int): DataFrame = {
+    val raw = corpusIn.select(col("vec_id"), col("embedding"))
+    topByCosine(hnswDescend(raw, probeIn, levels, degree, beamW, steps,
+      l => knnGraphBucketed(hnswLayerSlice(raw, l), degree, rounds)).last, k)
+  }
+
+  /** The in-query descent keys at the pinned defaults: L = 0
+    * (`sim_search_knn_graph_bucketed`), 1 (`sim_search_hnsw`) and
+    * [[HnswMultiLevels]] (`sim_search_hnsw_multi`). */
+  private def hnswKey(levels: Int)(s: SparkSession, d: String): DataFrame = {
+    val e = Tables.embeddings(s, d)
+    hnswSearch(
+      e.filter(col("vec_id") =!= 0),
+      e.filter(col("vec_id") === 0).select(col("embedding")),
+      levels, GraphAnnDegree, NnDescentRounds, GraphAnnBeam, GraphAnnSteps,
+      k = 10)
+  }
+
+  /** Persisted-store HNSW serving as a registered key [N] (r12, VERDICT
+    * #2 — headline hygiene): `sim_search_hnsw` pays TWO full NN-Descent
+    * builds on every run, but at deployment the builds persist
+    * ([[hnswStoreSeed]]) and a query pays only the two walks — the
+    * amortized-build property is the reason the index exists. This key
+    * seeds the store once per process (per-JVM [[graft.Scratch]] dir,
+    * keyed by sf dir) and SERVES from it, so bench's min-of-N timing
+    * reads steady-state serving cost while the first (seeding) run pays
+    * the build. Same oracle as the in-query key: store serving is
+    * spec-pinned bit-equal to the one-shot descent. */
   private def hnswServedKey(s: SparkSession, d: String): DataFrame = {
     val e = Tables.embeddings(s, d)
     val dir = graft.Scratch.dir(
@@ -1053,7 +971,7 @@ object SimSearch extends graft.QueryModule {
     // mid-write of l1 leaves a partial dir that would read as fully
     // seeded and serve incomplete data (ADVICE r12 + r13)
     if (!EpochStore(s, dir).seeded("l1"))
-      hnswStoreSeed(e.filter(col("vec_id") =!= 0), dir)
+      hnswStoreSeed(e.filter(col("vec_id") =!= 0), dir, levels = 1)
     // serving-time quality knobs (r13): defaults match the oracle's
     // unrolled rounds; a user widens the beam per session for recall
     serveHnswFromStore(s, dir,
@@ -1063,47 +981,58 @@ object SimSearch extends graft.QueryModule {
 
   // --- persisted HNSW lifecycle (seed → serve → append → stream) -------
 
-  /** Seed the persistent HIERARCHICAL store: vectors plus BOTH layers'
-    * bucketed edge lists land under `epoch=-1` partitions — the day-0
-    * backfill the deltas append to. Layer membership is the stateless
-    * md5 coin, so the split never needs rebalancing as epochs accrue. */
-  def hnswStoreSeed(vecsIn: DataFrame, storeDir: String,
-                    degree: Int = GraphAnnDegree,
-                    rounds: Int = NnDescentRounds): Unit = {
+  /** The layer sub-tables `l0..lL` of an HNSW store, bottom first: the
+    * store's stack height is read from its layout, by the serve, the
+    * delta and the compaction alike. */
+  private[graft] def hnswLayerSubs(storeDir: String): Seq[String] =
+    graft.Hfs.childDirNames(storeDir).filter(_.matches("l\\d+"))
+      .sortBy(_.tail.toInt)
+
+  private def hnswLevels(st: EpochStore): Int = {
+    val layers = hnswLayerSubs(st.storeDir)
+    require(layers.nonEmpty, s"${st.storeDir} holds no HNSW layer l0..lL")
+    layers.size - 1
+  }
+
+  /** Seed the persistent HIERARCHICAL store: vectors plus every layer's
+    * bucketed edge list (`l0..l<levels>`) land under `epoch=-1`
+    * partitions — the day-0 backfill the deltas append to. Layer
+    * membership is the stateless md5 coin stack, so the split never
+    * needs rebalancing as epochs accrue. */
+  def hnswStoreSeed(vecsIn: DataFrame, storeDir: String, levels: Int): Unit = {
     val st = EpochStore(vecsIn.sparkSession, storeDir)
     val raw = vecsIn.select(col("vec_id"), col("embedding"))
     st.seed("vecs", raw)
-    st.seed("l0", knnGraphBucketed(raw, degree, rounds))
-    st.seed("l1", knnGraphBucketed(raw.filter(hnswCoin === 0), degree, rounds))
+    (0 to levels).foreach { l =>
+      st.seed(s"l$l",
+        knnGraphBucketed(hnswLayerSlice(raw, l), GraphAnnDegree, NnDescentRounds))
+    }
   }
 
-  /** Serve a probe from the persisted hierarchical store — the same
-    * two-walk descent as `sim_search_hnsw`, over the union of every
-    * epoch's edges (spec-pinned EQUAL to the in-query key when the
-    * store was seeded with the same corpus). */
-  def serveHnswFromStore(s: SparkSession, storeDir: String,
-                         probe: DataFrame, k: Int = 10,
-                         beamW: Int = GraphAnnBeam,
-                         steps: Int = GraphAnnSteps): DataFrame = {
+  /** The descent over a persisted store's layers, as many as it holds,
+    * over the union of every epoch's edges. */
+  private def storeDescent(s: SparkSession, storeDir: String,
+                           probe: DataFrame, beamW: Int,
+                           steps: Int): Seq[DataFrame] = {
     val st = EpochStore(s, storeDir)
     // dropDuplicates: a doc re-delivered under a DIFFERENT epoch (the
     // at-least-once contract only pins same-epoch replays) leaves the
     // same vec_id in two epoch partitions; duplicate corpus rows would
     // enter beamWalk's visited set and eat beam slots (ADVICE r11)
-    val vecs = st.read("vecs").select("vec_id", "embedding")
+    val raw = st.read("vecs").select("vec_id", "embedding")
       .dropDuplicates("vec_id")
-    val full = vecs.select(col("vec_id"), col("embedding"),
-      dot(col("embedding"), col("embedding")).as("nsq")).cut()
-    val upperRaw = vecs.filter(hnswCoin === 0)
-    val g1 = symCap(st.read("l1")
-      .select(col("i"), col("j"), col("cosine")), GraphAnnDegree)
-    val g0 = symCap(st.read("l0")
-      .select(col("i"), col("j"), col("cosine")), GraphAnnDegree)
-    val entry0 = beamWalk(full.filter(hnswCoin === 0).cut(), g1,
-        bucketEntries(upperRaw), probe, beamW, HnswUpperSteps, k = 1)
-      .select("vec_id")
-    beamWalk(full, g0, entry0, probe, beamW, steps, k)
+    hnswDescend(raw, probe, hnswLevels(st), GraphAnnDegree, beamW, steps,
+      l => st.read(s"l$l").select(col("i"), col("j"), col("cosine")))
   }
+
+  /** Serve a probe from a persisted HNSW store — the same descent as the
+    * in-query key of the store's height (spec-pinned EQUAL to it when
+    * the store was seeded with the same corpus). */
+  def serveHnswFromStore(s: SparkSession, storeDir: String,
+                         probe: DataFrame, k: Int = 10,
+                         beamW: Int = GraphAnnBeam,
+                         steps: Int = GraphAnnSteps): DataFrame =
+    topByCosine(storeDescent(s, storeDir, probe, beamW, steps).last, k)
 
   /** Corpus-size-aware AUTO default for the serving beam (r13 VERDICT
     * #7 stretch). The fixed beam-10 default degrades as the index
@@ -1142,52 +1071,15 @@ object SimSearch extends graft.QueryModule {
 
   /** COST probe for the served-HNSW dials (r13 VERDICT #4): the number
     * of candidates the descent actually SCORES at a given (beamW,
-    * steps) — the price axis beside the recall curves, measured on the
-    * identical plan (both layers' visited sets counted, nothing
+    * steps) — the price axis beside the recall curves, the sum of the
+    * serving descent's own visited frames (every layer counted, nothing
     * estimated). Tool-facing ([[graft.tools.AnnBeamCurve]]); the
     * serving keys never run it. */
   def serveHnswScoredCount(s: SparkSession, storeDir: String,
                            probe: DataFrame,
                            beamW: Int = GraphAnnBeam,
-                           steps: Int = GraphAnnSteps): Long = {
-    val st = EpochStore(s, storeDir)
-    val vecs = st.read("vecs").select("vec_id", "embedding")
-      .dropDuplicates("vec_id")
-    val full = vecs.select(col("vec_id"), col("embedding"),
-      dot(col("embedding"), col("embedding")).as("nsq")).cut()
-    val upperRaw = vecs.filter(hnswCoin === 0)
-    val g1 = symCap(st.read("l1")
-      .select(col("i"), col("j"), col("cosine")), GraphAnnDegree)
-    val g0 = symCap(st.read("l0")
-      .select(col("i"), col("j"), col("cosine")), GraphAnnDegree)
-    val upperVisited = beamWalkVisited(full.filter(hnswCoin === 0).cut(), g1,
-      bucketEntries(upperRaw), probe, beamW, HnswUpperSteps)
-    val entry0 = upperVisited.orderBy(col("cosine").desc, col("vec_id"))
-      .limit(1).select("vec_id")
-    upperVisited.count() +
-      beamWalkVisited(full, g0, entry0, probe, beamW, steps).count()
-  }
-
-  /** COST probe for the IVF `nprobe` dial: candidate rows the probed
-    * cells contribute to the serve-time scoring join — the same routing
-    * and join as [[servedTopKPinned]], counted instead of top-k'd. */
-  def servedIvfScoredCount(spark: SparkSession, dir: String,
-                           probes: DataFrame, nprobe: Int): Long = {
-    import org.apache.spark.sql.expressions.Window
-    val centroids = spark.read.parquet(s"$dir/centroids")
-    val cells = spark.read.parquet(s"$dir/cells")
-      .select(col("cell").cast("long").as("cell"), col("vec_id"))
-    val probeCells = probes.crossJoin(broadcast(centroids))
-      .select(col("probe_id"), col("cid"),
-        pinnedAffinity(col("probe"), col("cvec")).as("aff"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy(col("probe_id")).orderBy(col("aff").desc, col("cid"))))
-      .filter(col("rnk") <= nprobe)
-      .select(col("probe_id"), col("cid").as("probe_cell"))
-    cells.join(broadcast(probeCells),
-      col("cell") === col("probe_cell") && col("vec_id") =!= col("probe_id"))
-      .count()
-  }
+                           steps: Int = GraphAnnSteps): Long =
+    storeDescent(s, storeDir, probe, beamW, steps).map(_.count()).sum
 
   /** Label-free delta ranking — the bucketed twin of [[knnEdges]]'s
     * append leg: the delta's nodes rank against saved ∪ delta restricted
@@ -1235,9 +1127,9 @@ object SimSearch extends graft.QueryModule {
 
   /** One STREAMING micro-batch of hierarchical index append — the HNSW
     * twin of [[knnGraphDelta]]: the delta ranks label-free against
-    * saved ∪ delta on BOTH layers (upper membership is the same md5
-    * coin, so the batch's upper slice is known statelessly), every
-    * epoch table lands in its own `epoch=N` partition
+    * saved ∪ delta on EVERY layer of the store (layer ℓ's batch slice is
+    * the same md5 coin stack, so per-layer membership needs no store
+    * lookup), and every epoch table lands in its own `epoch=N` partition
     * (replay-idempotent: dropDuplicates on vec_id makes the ranking
     * side replay-safe). Returns the merged servable layer-0 edge list
     * as of this epoch. */
@@ -1246,39 +1138,15 @@ object SimSearch extends graft.QueryModule {
     val batch = batchIn.select(col("vec_id"), col("embedding")).cut()
     val savedVecs = st.read("vecs").select(col("vec_id"), col("embedding"))
     val allVecs = savedVecs.union(batch).dropDuplicates("vec_id")
-    // materialize BEFORE the store writes (a replayed epoch's saved side
-    // still references the files the overwrite below replaces)
-    val fresh0 = bucketedDeltaEdges(batch, allVecs, GraphAnnDegree).cut()
-    val fresh1 = bucketedDeltaEdges(batch.filter(hnswCoin === 0),
-      allVecs.filter(hnswCoin === 0), GraphAnnDegree).cut()
-    st.write("vecs", batch)
-    st.write("l0", fresh0)
-    st.write("l1", fresh1)
-    symCap(st.read("l0").select(col("i"), col("j"), col("cosine")),
-        GraphAnnDegree)
-      .orderBy("i", "j")
-  }
-
-  /** One micro-batch of LEVEL-STACK index append (r12) — [[hnswDelta]]
-    * generalized to the [[hnswMultiStoreSeed]] store: the delta ranks
-    * label-free against saved ∪ delta on EVERY layer its coins admit
-    * (layer ℓ slice = coins 1..ℓ zero — stateless, so the batch's
-    * per-layer membership needs no store lookup), each layer's epoch
-    * table lands in `l$ℓ/epoch=N` (replay-idempotent like the 2-layer
-    * twin). Returns the merged servable layer-0 edge list. */
-  def hnswMultiDelta(batchIn: DataFrame, storeDir: String, epoch: Long,
-                     levels: Int = HnswMultiLevels): DataFrame = {
-    val st = EpochStore(batchIn.sparkSession, storeDir).append(epoch)
-    val batch = batchIn.select(col("vec_id"), col("embedding")).cut()
-    val savedVecs = st.read("vecs").select(col("vec_id"), col("embedding"))
-    val allVecs = savedVecs.union(batch).dropDuplicates("vec_id")
-    // materialize every layer BEFORE the store writes (replay safety)
-    val fresh = (0 to levels).map { l =>
-      l -> bucketedDeltaEdges(hnswLayerSlice(batch, l),
+    // materialize every layer BEFORE the store writes (a replayed
+    // epoch's saved side still references the files the overwrite
+    // below replaces)
+    val fresh = (0 to hnswLevels(st)).map { l =>
+      bucketedDeltaEdges(hnswLayerSlice(batch, l),
         hnswLayerSlice(allVecs, l), GraphAnnDegree).cut()
     }
     st.write("vecs", batch)
-    fresh.foreach { case (l, df) => st.write(s"l$l", df) }
+    fresh.zipWithIndex.foreach { case (df, l) => st.write(s"l$l", df) }
     symCap(st.read("l0").select(col("i"), col("j"), col("cosine")),
         GraphAnnDegree)
       .orderBy("i", "j")
@@ -2224,6 +2092,18 @@ object SimSearch extends graft.QueryModule {
   private def servePinnedBatch(cells: DataFrame, centroids: DataFrame,
                                probes: DataFrame, nprobe: Int,
                                topK: Int): DataFrame = {
+    val scored = ivfCandidates(cells, centroids, probes, nprobe)
+      .select(col("probe_id"), col("vec_id"),
+        cosine(col("embedding"), col("probe")).as("cosine"))
+    explodeTopK(scored.groupBy(col("probe_id"))
+      .agg(VectorFunctions.topk_by(col("cosine"), col("vec_id"), topK).as("nn")))
+  }
+
+  /** The IVF candidate join: each probe routed to its `nprobe`
+    * highest-affinity cells, joined with those cells' corpus rows —
+    * what the serve scores and the `nprobe` cost probe counts. */
+  private def ivfCandidates(cells: DataFrame, centroids: DataFrame,
+                            probes: DataFrame, nprobe: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val probeCells = probes.crossJoin(broadcast(centroids))
       .select(col("probe_id"), col("probe"), col("cid"),
@@ -2232,12 +2112,8 @@ object SimSearch extends graft.QueryModule {
         Window.partitionBy(col("probe_id")).orderBy(col("aff").desc, col("cid"))))
       .filter(col("rnk") <= nprobe)
       .select(col("probe_id"), col("cid").as("probe_cell"), col("probe"))
-    val scored = cells.join(broadcast(probeCells),
-        col("cell") === col("probe_cell") && col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id"),
-        cosine(col("embedding"), col("probe")).as("cosine"))
-    explodeTopK(scored.groupBy(col("probe_id"))
-      .agg(VectorFunctions.topk_by(col("cosine"), col("vec_id"), topK).as("nn")))
+    cells.join(broadcast(probeCells),
+      col("cell") === col("probe_cell") && col("vec_id") =!= col("probe_id"))
   }
 
   /** Index BUILD/SERVE split — the production ANN lifecycle: train once,
@@ -2260,15 +2136,29 @@ object SimSearch extends graft.QueryModule {
       .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/cells")
   }
 
+  /** The saved index's `(cells, centroids)` tables. */
+  private def savedIvfIndex(spark: SparkSession,
+                            dir: String): (DataFrame, DataFrame) =
+    (spark.read.parquet(s"$dir/cells")
+      // the partition column comes back type-inferred (int); restore long
+      .select(col("cell").cast("long").as("cell"), col("vec_id"),
+        col("embedding")),
+     spark.read.parquet(s"$dir/centroids"))
+
   /** Serve a probe batch from a [[buildIvfIndexPinned]] index on disk. */
   def servedTopKPinned(spark: SparkSession, dir: String, probes: DataFrame,
                        nprobe: Int = 4, topK: Int = 10): DataFrame = {
-    val centroids = spark.read.parquet(s"$dir/centroids")
-    val cells = spark.read.parquet(s"$dir/cells")
-      // the partition column comes back type-inferred (int); restore long
-      .select(col("cell").cast("long").as("cell"), col("vec_id"),
-        col("embedding"))
+    val (cells, centroids) = savedIvfIndex(spark, dir)
     servePinnedBatch(cells, centroids, probes, nprobe, topK)
+  }
+
+  /** COST probe for the IVF `nprobe` dial: the candidate rows the
+    * probed cells contribute to the serve-time scoring join — the
+    * serve's own [[ivfCandidates]], counted instead of top-k'd. */
+  def servedIvfScoredCount(spark: SparkSession, dir: String,
+                           probes: DataFrame, nprobe: Int): Long = {
+    val (cells, centroids) = savedIvfIndex(spark, dir)
+    ivfCandidates(cells, centroids, probes, nprobe).count()
   }
 
   private def ivfSaved(s: SparkSession, d: String): DataFrame = {
@@ -3316,10 +3206,10 @@ object SimSearch extends graft.QueryModule {
     "sim_search_ivf_saved" -> ivfSaved,
     "sim_search_knn_graph" -> knnGraphSearch,
     "sim_search_knn_graph_append" -> knnGraphAppend,
-    "sim_search_knn_graph_bucketed" -> knnGraphBucketedSearch,
-    "sim_search_hnsw" -> hnswServe,
+    "sim_search_knn_graph_bucketed" -> hnswKey(0),
+    "sim_search_hnsw" -> hnswKey(1),
     "sim_search_hnsw_served" -> hnswServedKey,
-    "sim_search_hnsw_multi" -> hnswMultiServe,
+    "sim_search_hnsw_multi" -> hnswKey(HnswMultiLevels),
     "sim_search_graph_batch" -> graphBatch)
 
   private val dotSql =
@@ -3380,7 +3270,7 @@ object SimSearch extends graft.QueryModule {
     // store serving is pinned bit-equal to the in-query descent, so the
     // served key shares the one-shot oracle verbatim
     "sim_search_hnsw_served" -> hnswOracle,
-    "sim_search_hnsw_multi" -> hnswMultiOracle,
+    "sim_search_hnsw_multi" -> hnswStackOracle,
     "sim_search_graph_batch" -> graphBatchOracle,
     "sim_search_ivf_multi" -> ivfMultiOracle,
     "sim_search_ivf_append" ->

@@ -266,14 +266,14 @@ object StoreCompact {
       .join(latest, Seq("band", "h", "ep")).drop("ep")
   }
 
-  /** The HNSW stores (2-layer and level-stack alike — layer sub-tables
-    * are discovered from the layout): vectors dedup on vec_id (the
-    * serve-time rule), layer edges collapse exact-duplicate rows (the
-    * symCap distinct). */
+  /** The HNSW stores (any stack height — the layer sub-tables are read
+    * from the layout, as the serve reads them): vectors dedup on vec_id
+    * (the serve-time rule), layer edges collapse exact-duplicate rows
+    * (the symCap distinct). */
   def compactHnswStore(spark: SparkSession, storeDir: String): Unit =
     EpochStore(spark, storeDir).compact(
       Fold.of("vecs")(_.dropDuplicates("vec_id")) +:
-        Hfs.childDirNames(storeDir).filter(_.matches("l\\d+")).sorted
+        graft.ext.SimSearch.hnswLayerSubs(storeDir)
           .map(l => Fold.of(l)(_.distinct())): _*)
 
   /** The incremental-dedup band store (docs/bands/pairs): readers take

@@ -457,7 +457,7 @@ object Streams {
     * `delta(batch, epoch)` — one of the stores' delta writers, e.g.
     * `Dedup.dedupDelta(_, storeDir, _)`, `SubstrDedup.substrDedupDelta`,
     * `substrCharsDelta`, `EvalExtra.bm25Delta`, `SimSearch.centroidDelta`,
-    * `knnGraphDelta`, `hnswDelta`, `hnswMultiDelta`,
+    * `knnGraphDelta`, `hnswDelta` (any HNSW stack height),
     * `Multimodal.corpusCleanMultimodalDelta` or `Audio.audioFpDelta` — and
     * the sink receives what the writer serves as of that epoch. Every
     * writer reads only the saved store plus the batch (the historical

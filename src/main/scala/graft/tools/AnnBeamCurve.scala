@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Local measurement harness for the ANN serving-quality knobs (r13,
   * VERDICT #3; cost axes r14, VERDICT #4): seeds the persisted HNSW
   * store once, then serves the probe at widening beam widths and
@@ -15,24 +13,20 @@ import org.apache.spark.sql.SparkSession
   * PERF.md; the dial-up guidance in SCALE.md.
   *
   * `runMain graft.tools.AnnBeamCurve [sfDir] [beam,beam,...] [np,np,...]`
+  * in the [[graft.Session]] (SPARK_GRAFT_CPUS default 32).
   */
 object AnnBeamCurve {
   def main(args: Array[String]): Unit = {
     val sf = args.headOption.getOrElse("/root/testdata/sf0.01")
     val beams = args.lift(1).getOrElse("10,20,40").split(",").map(_.trim.toInt)
     val nprobes = args.lift(2).getOrElse("2,4,8,16").split(",").map(_.trim.toInt)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(defaultCpus = 32)
     graft.functions.VectorFunctions.register(spark)
     val e = graft.Tables.embeddings(spark, sf)
     val exact = graft.SparkEntry.queries("sim_search_cosine")(spark, sf)
       .collect().map(_.getLong(0)).toSet
     val dir = java.nio.file.Files.createTempDirectory("graft_beam_curve").toString
-    graft.ext.SimSearch.hnswStoreSeed(e.filter("vec_id <> 0"), dir)
+    graft.ext.SimSearch.hnswStoreSeed(e.filter("vec_id <> 0"), dir, levels = 1)
     val probe = e.filter("vec_id = 0").select("embedding")
     def steady(run: () => Unit): Double = {
       run() // warmup: planning + codegen, not the serving cost

@@ -127,7 +127,11 @@ class BenchLineSpec extends AnyFunSuite {
   }
 
   test("SPARK_GRAFT_CONF: trimmed key=value pairs; a value may hold '='") {
-    assert(EnvConf.pairs(" spark.sql.autoBroadcastJoinThreshold = -1 ,a=b=c,junk") ==
+    assert(EnvConf.pairs(" spark.sql.autoBroadcastJoinThreshold = -1 ,a=b=c") ==
       Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1", "a" -> "b=c"))
+    // an entry without '=' (a typo) is named, never silently dropped
+    val e = intercept[IllegalArgumentException](
+      EnvConf.pairs("a=b,junk,spark.sql.autoBroadcastJoinThreshold-1"))
+    assert(e.getMessage.contains("'junk'"), e.getMessage)
   }
 }

@@ -9,7 +9,7 @@ import graft.pipeline.EpochStore
 import graft.pipeline.EpochStore.Fold
 
 /** The contract every persisted incremental store shares through
-  * [[EpochStore]]: the compaction lease stops all ten delta writers
+  * [[EpochStore]]: the compaction lease stops all nine delta writers
   * before they touch the store, and compaction's staged commit discards,
   * rolls forward, or keeps the lease exactly as its protocol says. Toy
   * rows only — the per-store lifecycles are StoreCompactSpec's. */
@@ -35,8 +35,6 @@ class EpochStoreSpec extends AnyFunSuite {
     "centroidDelta" -> ((d, e) => ext.SimSearch.centroidDelta(vecs, d, e)),
     "knnGraphDelta" -> ((d, e) => ext.SimSearch.knnGraphDelta(vecs, d, e)),
     "hnswDelta" -> ((d, e) => ext.SimSearch.hnswDelta(vecs.drop("label"), d, e)),
-    "hnswMultiDelta" ->
-      ((d, e) => ext.SimSearch.hnswMultiDelta(vecs.drop("label"), d, e)),
     "corpusCleanMultimodalDelta" ->
       ((d, e) => ext.Multimodal.corpusCleanMultimodalDelta(mmDocs, d, e)),
     "audioFpDelta" -> ((d, e) => ext.Audio.audioFpDelta(docs, d, e)))

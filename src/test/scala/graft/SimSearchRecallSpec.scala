@@ -263,7 +263,8 @@ class SimSearchRecallSpec extends AnyFunSuite {
     val exact = rows.map { case (id, _, v) => (id, cosD(v, probeVec)) }
       .sortBy { case (id, c) => (-c, id) }.take(10).map(_._1).toSet
     val got = graft.ext.SimSearch.hnswSearch(
-        corpus, probe, degree = 6, rounds = 2, beamW = 10, steps = 6, k = 10)
+        corpus, probe, levels = 1, degree = 6, rounds = 2, beamW = 10,
+        steps = 6, k = 10)
       .collect().map(_.getLong(0)).toSet
     val recall = (exact & got).size.toDouble / exact.size
     info(s"HNSW clustered recall@10 = $recall")
@@ -302,7 +303,7 @@ class SimSearchRecallSpec extends AnyFunSuite {
     val probe = spark.createDataFrame(Seq(Tuple1(probeVec))).toDF("embedding")
     val exact = rows.map { case (id, _, v) => (id, cosD(v, probeVec)) }
       .sortBy { case (id, c) => (-c, id) }.take(10).map(_._1).toSet
-    val got = graft.ext.SimSearch.hnswMultiSearch(
+    val got = graft.ext.SimSearch.hnswSearch(
         corpus, probe, levels = 3, degree = 6, rounds = 2, beamW = 10,
         steps = 6, k = 10)
       .collect().map(_.getLong(0)).toSet
@@ -342,7 +343,7 @@ class SimSearchRecallSpec extends AnyFunSuite {
     val sf = "/root/testdata/sf0.001"
     val e = graft.Tables.embeddings(spark, sf)
     val dir = java.nio.file.Files.createTempDirectory("graft_hnsw_store").toString
-    graft.ext.SimSearch.hnswStoreSeed(e.filter("vec_id <> 0"), dir)
+    graft.ext.SimSearch.hnswStoreSeed(e.filter("vec_id <> 0"), dir, levels = 1)
     val served = graft.ext.SimSearch.serveHnswFromStore(
         spark, dir, e.filter("vec_id = 0").select("embedding"))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
@@ -353,15 +354,15 @@ class SimSearchRecallSpec extends AnyFunSuite {
   }
 
   test("level-stack store serve equals the in-query multi-layer descent") {
-    // the L-layer twin of the 2-layer store test: hnswMultiStoreSeed
-    // persists every layer's edge list, serveHnswMultiFromStore replays
-    // the same descent — bit-for-bit equal to the registered key
+    // the L-layer twin of the 2-layer store test: hnswStoreSeed
+    // persists every layer's edge list, serveHnswFromStore replays the
+    // same descent — bit-for-bit equal to the registered key
     graft.functions.VectorFunctions.register(spark)
     val sf = "/root/testdata/sf0.001"
     val e = graft.Tables.embeddings(spark, sf)
     val dir = java.nio.file.Files.createTempDirectory("graft_hnswm_store").toString
-    graft.ext.SimSearch.hnswMultiStoreSeed(e.filter("vec_id <> 0"), dir)
-    val served = graft.ext.SimSearch.serveHnswMultiFromStore(
+    graft.ext.SimSearch.hnswStoreSeed(e.filter("vec_id <> 0"), dir, levels = 3)
+    val served = graft.ext.SimSearch.serveHnswFromStore(
         spark, dir, e.filter("vec_id = 0").select("embedding"))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val inQuery = SparkEntry.queries("sim_search_hnsw_multi")(spark, sf)
@@ -383,7 +384,7 @@ class SimSearchRecallSpec extends AnyFunSuite {
     val exact = SparkEntry.queries("sim_search_cosine")(spark, sf)
       .collect().map(_.getLong(0)).toSet
     val dir = java.nio.file.Files.createTempDirectory("graft_beam_dial").toString
-    graft.ext.SimSearch.hnswStoreSeed(e.filter("vec_id <> 0"), dir)
+    graft.ext.SimSearch.hnswStoreSeed(e.filter("vec_id <> 0"), dir, levels = 1)
     val probe = e.filter("vec_id = 0").select("embedding")
     def recallAt(beam: Int): Double =
       graft.ext.SimSearch.serveHnswFromStore(spark, dir, probe,
@@ -429,7 +430,8 @@ class SimSearchRecallSpec extends AnyFunSuite {
           .collect().map(_.getLong(0)).toSet
         val dir = java.nio.file.Files
           .createTempDirectory("graft_beam_auto").toString
-        graft.ext.SimSearch.hnswStoreSeed(e.filter("vec_id <> 0"), dir)
+        graft.ext.SimSearch.hnswStoreSeed(e.filter("vec_id <> 0"), dir,
+          levels = 1)
         val got = graft.ext.SimSearch.serveHnswAuto(spark, dir,
             e.filter("vec_id = 0").select("embedding"))
           .collect().map(_.getLong(0)).toSet

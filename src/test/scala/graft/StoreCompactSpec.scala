@@ -18,7 +18,7 @@ class StoreCompactSpec extends AnyFunSuite {
     val e = graft.Tables.embeddings(spark, sf)
     val store = Files.createTempDirectory("graft_compact_hnsw").toString
     graft.ext.SimSearch.hnswStoreSeed(
-      e.filter("vec_id <> 0 AND vec_id % 3 = 0"), store)
+      e.filter("vec_id <> 0 AND vec_id % 3 = 0"), store, levels = 1)
     graft.ext.SimSearch.hnswDelta(
       e.filter("vec_id <> 0 AND vec_id % 3 = 1")
         .select("vec_id", "embedding"), store, 0L).collect()
@@ -41,7 +41,7 @@ class StoreCompactSpec extends AnyFunSuite {
     // the same answer as a store built from all three slices directly
     val store2 = Files.createTempDirectory("graft_compact_hnsw2").toString
     graft.ext.SimSearch.hnswStoreSeed(
-      e.filter("vec_id <> 0 AND vec_id % 3 = 0"), store2)
+      e.filter("vec_id <> 0 AND vec_id % 3 = 0"), store2, levels = 1)
     graft.ext.SimSearch.hnswDelta(
       e.filter("vec_id <> 0 AND vec_id % 3 = 1")
         .select("vec_id", "embedding"), store2, 0L).collect()

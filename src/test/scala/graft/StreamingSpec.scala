@@ -822,7 +822,7 @@ class StreamingSpec extends AnyFunSuite {
     val store = Files.createTempDirectory("graft_hnsw_dstore").toString
     val ckp = Files.createTempDirectory("graft_hnsw_dckp").toString
     graft.ext.SimSearch.hnswStoreSeed(
-      e.filter("vec_id <> 0 AND vec_id % 2 = 0"), store)
+      e.filter("vec_id <> 0 AND vec_id % 2 = 0"), store, levels = 1)
     val odd = e.filter("vec_id <> 0 AND vec_id % 2 = 1")
       .select("vec_id", "embedding")
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
@@ -915,8 +915,8 @@ class StreamingSpec extends AnyFunSuite {
     val e = graft.Tables.embeddings(spark, sf)
     val store = Files.createTempDirectory("graft_hnswm_dstore").toString
     val ckp = Files.createTempDirectory("graft_hnswm_dckp").toString
-    graft.ext.SimSearch.hnswMultiStoreSeed(
-      e.filter("vec_id <> 0 AND vec_id % 2 = 0"), store)
+    graft.ext.SimSearch.hnswStoreSeed(
+      e.filter("vec_id <> 0 AND vec_id % 2 = 0"), store, levels = 3)
     val odd = e.filter("vec_id <> 0 AND vec_id % 2 = 1")
       .select("vec_id", "embedding")
       .collect().map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
@@ -926,7 +926,7 @@ class StreamingSpec extends AnyFunSuite {
       merged = g.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     ms.addData(odd)
     Streams.epochDeltas(ms.toDF().toDF("vec_id", "embedding"), ckp)(
-      graft.ext.SimSearch.hnswMultiDelta(_, store, _))(sink).awaitTermination()
+      graft.ext.SimSearch.hnswDelta(_, store, _))(sink).awaitTermination()
     assert(merged.nonEmpty, "the sink never received a merged edge list")
     // layer 1 took the epoch's append (deeper layers thin geometrically
     // — at 250 seed vectors layer 3 may legitimately receive no delta)
@@ -934,7 +934,7 @@ class StreamingSpec extends AnyFunSuite {
       .select("epoch").distinct().collect().map(_.get(0).toString).toSet
     assert(l1Epochs.size >= 2, s"layer 1 missing the delta epoch: $l1Epochs")
     val probe = e.filter("vec_id = 0").select("embedding")
-    val served = graft.ext.SimSearch.serveHnswMultiFromStore(spark, store, probe)
+    val served = graft.ext.SimSearch.serveHnswFromStore(spark, store, probe)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(served.size == 10, s"served ${served.size} rows")
     val lastEpoch = spark.read.parquet(s"$store/l0")
@@ -942,10 +942,10 @@ class StreamingSpec extends AnyFunSuite {
       .head().getLong(0)
     val lastBatch = spark.read.parquet(s"$store/vecs/epoch=$lastEpoch")
       .select("vec_id", "embedding").localCheckpoint()
-    val replayed = graft.ext.SimSearch.hnswMultiDelta(lastBatch, store, lastEpoch)
+    val replayed = graft.ext.SimSearch.hnswDelta(lastBatch, store, lastEpoch)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(replayed == merged, "a replayed epoch changed the merged graph")
-    val servedAgain = graft.ext.SimSearch.serveHnswMultiFromStore(spark, store, probe)
+    val servedAgain = graft.ext.SimSearch.serveHnswFromStore(spark, store, probe)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(servedAgain == served, "a replayed epoch changed the served answer")
   }
