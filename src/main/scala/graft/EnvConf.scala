@@ -1,11 +1,11 @@
 package graft
 
 /** `SPARK_GRAFT_CONF=key=value,key=value`: session confs that the
-  * driver-facing mains apply on their one session builder ([[Session]])
+  * command-line mains set on their one session builder ([[Session]])
   * before they run any key, for local A/B runs — e.g.
   * `spark.sql.autoBroadcastJoinThreshold=-1` for the graph family's
-  * shuffle layout (no driver-local rounds, no vertex-domain broadcast),
-  * or `=1` for its broadcast-layout distributed rounds at sf0.01. An
+  * shuffle layout (no in-JVM rounds, no vertex-domain broadcast), or
+  * `=1` for its broadcast-layout distributed rounds at sf0.01. An
   * entry without `=` is rejected, so a typo never runs an A/B on the
   * default conf. */
 object EnvConf {

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one session of the driver-facing mains (Bench, Verify, Probe,
+/** The one session of the command-line mains (Bench, Verify, Probe,
   * `tools.Explain`, `tools.AnnBeamCurve`): `local[SPARK_GRAFT_CPUS]`
   * (each main passes its own default) with as many shuffle partitions,
   * the UTC session time zone, the UI off, WARN logging, and the
