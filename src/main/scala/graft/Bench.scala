@@ -223,7 +223,7 @@ object Bench {
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings").foreach { t =>
       try { if (t == "events") graft.Tables.events(spark, sfDir).limit(1).count()
-            else spark.read.parquet(s"$sfDir/$t.parquet").limit(1).count() }
+            else graft.Tables(spark, sfDir, t).limit(1).count() }
       catch { case _: Throwable => () }
     }
     val keys: Seq[String] =

@@ -7,10 +7,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Every query in [[SparkEntry.queries]] receives `(spark, sfDir)` and reads
   * its inputs through here, so filter/column pushdown reaches the parquet
   * scan unimpeded (no caching layer in between — Catalyst sees the scan).
+  * Each frame takes its schema from one footer read in the driver
+  * ([[ParquetFrame]]), so building it starts no Spark job.
   */
 object Tables {
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    ParquetFrame(spark, Seq(s"$sfDir/$name.parquet"))
 
   def region(s: SparkSession, d: String): DataFrame    = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = apply(s, d, "nation")

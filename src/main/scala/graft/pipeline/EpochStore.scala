@@ -1,10 +1,11 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Hfs
+import graft.{Hfs, ParquetFrame}
 
 /** One persisted incremental store, and the only code that knows its
   * layout: each sub-table `<storeDir>/<sub>` holds one parquet
@@ -13,6 +14,16 @@ import graft.Hfs
   * compacted baseline, so it reads as the oldest epoch. Delta writers
   * open the store with [[append]], which probes the lease below before
   * the writer's first read.
+  *
+  * VISIBILITY: the commit is the rule for what a reader sees. An epoch is
+  * committed once its partition holds Spark's `_SUCCESS` marker; Spark
+  * creates the partition dir before its write job commits, so an epoch
+  * that crashed mid-append holds parquet files but no marker. [[read]],
+  * [[saved]] and the re-delivery guard list committed epochs only, and
+  * compaction folds only those, so it discards a crashed epoch. Every
+  * frame takes its schema from one footer read in the driver
+  * ([[graft.ParquetFrame]]), and an append whose columns differ from the
+  * committed epochs' fails before it writes.
   *
   * Epoch-store COMPACTION [N] (r13) — the maintenance leg of the
   * persisted incremental lifecycles (dedup band stores, HNSW layer
@@ -68,9 +79,20 @@ class EpochStore(val spark: SparkSession, val storeDir: String) {
   protected def put(sub: String, epoch: Long, df: DataFrame): Unit =
     df.write.mode("overwrite").parquet(partition(sub, epoch))
 
-  /** Whether any epoch of `sub` exists — probed through Hadoop's
-    * FileSystem, so an HDFS/S3 store never reads as absent. */
-  protected def has(sub: String): Boolean = Hfs.exists(s"$storeDir/$sub")
+  /** `sub`'s committed epoch dirs: those that hold `_SUCCESS`, probed
+    * through Hadoop's FileSystem, so an HDFS/S3 store never reads as
+    * absent. */
+  protected def committed(sub: String): Seq[String] =
+    Hfs.childDirNames(s"$storeDir/$sub").map(e => s"$storeDir/$sub/$e")
+      .filter(d => Hfs.exists(s"$d/_SUCCESS"))
+
+  /** Every committed epoch of `sub`, with its `epoch` partition column;
+    * None before the first commit. */
+  protected def frame(sub: String): Option[DataFrame] = {
+    val dirs = committed(sub)
+    if (dirs.isEmpty) None
+    else Some(ParquetFrame(spark, dirs, basePath = Some(s"$storeDir/$sub")))
+  }
 
   /** Whether `sub`'s baseline job committed (`epoch=-1/_SUCCESS`): Spark
     * creates the output dir before the job commits, so a seed that
@@ -78,14 +100,17 @@ class EpochStore(val spark: SparkSession, val storeDir: String) {
     * seeded. */
   def seeded(sub: String): Boolean = Hfs.exists(s"${partition(sub, -1L)}/_SUCCESS")
 
-  /** Every epoch of `sub`, with its `epoch` partition column. */
-  def read(sub: String): DataFrame = spark.read.parquet(s"$storeDir/$sub")
+  /** Every committed epoch of `sub`, with its `epoch` partition column.
+    *
+    * @throws IllegalStateException if `sub` has no committed epoch */
+  def read(sub: String): DataFrame = frame(sub).getOrElse(throw new IllegalStateException(
+    s"store $storeDir: sub-table $sub has no committed epoch (no epoch=N/_SUCCESS)"))
 
-  /** Every epoch of `sub`, or — before its first epoch — an empty
-    * relation with the schema of `like`, the frame the saved rows are
-    * combined with. */
+  /** Every committed epoch of `sub`, or — before its first commit — an
+    * empty relation with the schema of `like`, the frame the saved rows
+    * are combined with. */
   def saved(sub: String, like: DataFrame): DataFrame =
-    if (has(sub)) read(sub) else empty(like)
+    frame(sub).getOrElse(empty(like))
 
   /** An empty LocalRelation, so the optimizer prunes the joins over it. */
   protected def empty(like: DataFrame): DataFrame =
@@ -101,13 +126,14 @@ class EpochStore(val spark: SparkSession, val storeDir: String) {
     new Append(spark, storeDir, epoch)
   }
 
-  /** Fold each present sub into a single `epoch=-1` baseline by its
-    * rule, all under one lease and one commit marker. Absent sub-tables
-    * no-op. Every parquet write fully commits here — before any rename
-    * anywhere. */
+  /** Fold each sub's committed epochs into a single `epoch=-1` baseline
+    * by its rule, all under one lease and one commit marker; an epoch
+    * without `_SUCCESS` is not folded, so the publish discards it.
+    * Sub-tables with no committed epoch no-op. Every parquet write fully
+    * commits here — before any rename anywhere. */
   def compact(folds: Fold*): Unit =
     withLease(storeDir) {
-      val staged = folds.filter(f => has(f.sub))
+      val staged = folds.filter(f => committed(f.sub).nonEmpty)
       staged.foreach(f => assertNoInflightWriter(storeDir, f.sub))
       staged.foreach { f =>
         Hfs.deleteRecursive(s"$storeDir/.compact_${f.sub}")
@@ -127,21 +153,32 @@ object EpochStore {
                                           val epoch: Long)
       extends EpochStore(s, dir) {
 
-    /** Replace this epoch's partition of `sub` with `df`. */
-    def write(sub: String, df: DataFrame): Unit = put(sub, epoch, df)
+    /** Replace this epoch's partition of `sub` with `df`.
+      *
+      * @throws IllegalArgumentException before writing, if `df`'s column
+      *   names and types (nullability aside) differ from the committed
+      *   epochs' schema: every reader takes all epochs under that one
+      *   schema, so the mismatch would otherwise surface only later, as
+      *   a read or merge error */
+    def write(sub: String, df: DataFrame): Unit = {
+      ParquetFrame.schema(spark, committed(sub)).foreach { saved =>
+        require(DataTypeUtils.equalsIgnoreNullability(saved, df.schema),
+          s"store $storeDir: sub-table $sub holds ${saved.simpleString}; " +
+            s"epoch $epoch appends ${df.schema.simpleString}")
+      }
+      put(sub, epoch, df)
+    }
 
     /** This epoch's partition of `sub` as written (no `epoch` column). */
     def written(sub: String): DataFrame =
-      spark.read.parquet(partition(sub, epoch))
+      ParquetFrame(spark, Seq(partition(sub, epoch)))
 
     /** The cross-epoch re-delivery guard: the rows of `batch` whose `key`
       * no PRIOR epoch of `sub` holds. A same-epoch replay is not
       * filtered — it rewrites its own partition instead. */
     def unseen(batch: DataFrame, sub: String, key: String): DataFrame = {
-      val seen =
-        if (has(sub))
-          read(sub).filter(col("epoch").cast("long") =!= epoch).select(key)
-        else empty(batch.select(key))
+      val seen = frame(sub).fold(empty(batch.select(key)))(
+        _.filter(col("epoch").cast("long") =!= epoch).select(key))
       batch.join(seen, Seq(key), "left_anti")
     }
   }

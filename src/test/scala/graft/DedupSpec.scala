@@ -296,9 +296,9 @@ class DedupSpec extends AnyFunSuite {
     // JobCensus). Their graphs take the driver-local path here: the gate's
     // two bounded collects replace the rounds
     val pinned = Map(
-      "dedup_clusters" -> (8, 13), "dedup_minhash" -> (23, 40),
-      "dedup_semantic" -> (9, 14), "corpus_clean_pipeline" -> (12, 22),
-      "dedup_semantic_bucketed" -> (18, 41), "corpus_clean_multimodal" -> (18, 24))
+      "dedup_clusters" -> (6, 11), "dedup_minhash" -> (22, 39),
+      "dedup_semantic" -> (7, 12), "corpus_clean_pipeline" -> (11, 21),
+      "dedup_semantic_bucketed" -> (16, 39), "corpus_clean_multimodal" -> (17, 23))
     val ns = JobCensus.session()
     val got = pinned.keys.map(k => k -> JobCensus.warmJobs(ns, k)).toMap
     assert(got == pinned)
@@ -311,9 +311,9 @@ class DedupSpec extends AnyFunSuite {
     // its broadcast too, so the counts differ from the default session's
     // even where the graph would not go local.)
     val pinned = Map(
-      "dedup_clusters" -> (10, 53), "dedup_minhash" -> (14, 64),
-      "dedup_semantic" -> (7, 18), "corpus_clean_pipeline" -> (10, 39),
-      "dedup_semantic_bucketed" -> (18, 72), "corpus_clean_multimodal" -> (27, 86))
+      "dedup_clusters" -> (8, 51), "dedup_minhash" -> (13, 63),
+      "dedup_semantic" -> (5, 16), "corpus_clean_pipeline" -> (9, 38),
+      "dedup_semantic_bucketed" -> (16, 70), "corpus_clean_multimodal" -> (26, 85))
     val ns = JobCensus.session()
     ns.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val got = pinned.keys.map(k => k -> JobCensus.warmJobs(ns, k)).toMap

@@ -13,10 +13,10 @@ class GraphAnnSpec extends AnyFunSuite {
     // first run seeds its per-process store, so the counted run is a
     // pure serve from the persisted layers
     val pinned = Map(
-      "sim_search_knn_graph_bucketed" -> (41, 87),
-      "sim_search_hnsw" -> (68, 147),
-      "sim_search_hnsw_served" -> (51, 96),
-      "sim_search_hnsw_multi" -> (122, 267))
+      "sim_search_knn_graph_bucketed" -> (40, 86),
+      "sim_search_hnsw" -> (67, 146),
+      "sim_search_hnsw_served" -> (47, 92),
+      "sim_search_hnsw_multi" -> (121, 266))
     val ns = JobCensus.session()
     val got = pinned.keys.map(k => k -> JobCensus.warmJobs(ns, k)).toMap
     assert(got == pinned)
