@@ -523,106 +523,67 @@ object Dedup extends graft.QueryModule {
     verifyExactJaccard(cand, docsDf, 0.8).orderBy("i", "j")
   }
 
-  /** Scratch dir of the most recent [[minhashIncremental]] run — the
-    * per-run UUID made the path unknowable from outside, and the pair
-    * store it names is exactly what Round10Spec audits. Last-writer-wins
-    * global: the hook assumes the key is not run CONCURRENTLY in one JVM
-    * (true for the single-threaded suites that read it; a parallel run
-    * would only misdirect the audit, never the key's result). */
-  @volatile private[graft] var lastIncrScratchDir: String = _
-
   /** INCREMENTAL near-dup dedup [N] (r10, VERDICT #3) — the lifecycle
     * leg the family lacked (the dedup analogue of
-    * `sim_search_ivf_append`): dedup a daily DELTA against a SAVED
-    * signature/band store without rescanning the historical corpus.
-    *
-    * Phase 1 (historical build, runs once): the base corpus' band rows
-    * and its VERIFIED pair set persist as two plain parquet tables —
-    * at 100 TB this is yesterday's state, partitioned by band hash.
-    * Phase 2 (the delta batch): band ONLY the delta docs, bucket-join
-    * them against (saved ∪ delta) bands — so candidate work is
-    * O(delta × collision rate), never O(corpus) — verify exact Jaccard
-    * on the delta-involving candidates, and run components over
-    * (saved pairs ∪ fresh pairs).
+    * `sim_search_ivf_append`): dedup a DELTA against a SAVED band store
+    * without rescanning the historical corpus. The key runs the store's
+    * own lifecycle ([[appendSplit]], then [[dedupServeFromStore]]): the
+    * base corpus is epoch 0 of a fresh [[EpochStore]], the delta epoch 1,
+    * and the serve runs components over every stored pair.
     *
     * Soundness: a doc's band keys are corpus-independent
     * ([[md5BandRows]]), so bucket-join candidates over the union
-    * decompose exactly into base×base (all in the saved pair store's
-    * candidate set) ∪ delta-involving (computed fresh) — the
-    * incremental result is IDENTICAL to a full rebuild, which is
-    * precisely what the oracle checks: the DuckDB mirror is the full
-    * union recompute, so the hash gate proves delta-computed ≡ full.
-    * (This is why the pipeline uses plain bucket-pair candidates, not
-    * the star/chain form of [[md5ClusterAssign]]: chain adjacency
-    * WITHIN a bucket changes when new docs enter it, so the star/chain
-    * candidate set does not decompose incrementally.)
-    *
-    * Split: base = first 80% of the doc-id space, delta = the rest —
-    * derived from max(doc_id), so the same key is meaningful at every
-    * SF. Store under a per-run UUID dir (FIXTURES.md "Scratch paths"). */
+    * decompose exactly into base×base (epoch 0's pairs) ∪
+    * delta-involving (epoch 1's) — the incremental result is IDENTICAL
+    * to a full rebuild, which is precisely what the oracle checks: the
+    * DuckDB mirror is the full union recompute, so the hash gate proves
+    * delta-computed ≡ full. (This is why the pipeline uses plain
+    * bucket-pair candidates, not the star/chain form of
+    * [[md5ClusterAssign]]: chain adjacency WITHIN a bucket changes when
+    * new docs enter it, so the star/chain candidate set does not
+    * decompose incrementally.) Store under a per-run UUID dir
+    * (FIXTURES.md "Scratch paths"): every run starts from an empty store. */
   private def minhashIncremental(s: SparkSession, d: String): DataFrame = {
-    val docsDf = docs(s, d)
-    val split = (docsDf.agg(max(col("doc_id"))).head().getLong(0) + 1L) * 4L / 5L
-    val base = docsDf.filter(col("doc_id") < split)
-    val delta = docsDf.filter(col("doc_id") >= split)
-    // per-run temp dir (r11, VERDICT cosmetic): a fixed path let two
-    // concurrent sessions overwrite each other's band store mid-query;
-    // the UUID only names scratch space — results are path-independent
-    val dir = graft.Scratch.dir(s"dedup_incr_index-${java.util.UUID.randomUUID()}")
-    lastIncrScratchDir = dir
-    // phase 1 — persist yesterday's state (band store + verified pairs)
-    md5BandRows(base).write.mode("overwrite").parquet(s"$dir/bands")
-    val baseBandsSaved = s.read.parquet(s"$dir/bands")
-    val baseCand = baseBandsSaved.as("x").join(baseBandsSaved.as("y"),
-        col("x.band") === col("y.band") && col("x.h") === col("y.h") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("i"), col("y.doc_id").as("j"))
-      .distinct()
-    verifyExactJaccard(baseCand, base, 0.8).select(col("i"), col("j"))
-      .write.mode("overwrite").parquet(s"$dir/pairs")
-    // phase 2 — the delta batch: band only the delta, join against the
-    // SAVED store ∪ the delta's own bands, verify, and merge components
-    val savedBands = s.read.parquet(s"$dir/bands")
-    val deltaBands = md5BandRows(delta)
-    val cand = deltaBands.as("x")
-      .join(savedBands.union(deltaBands).as("y"),
-        col("x.band") === col("y.band") && col("x.h") === col("y.h") &&
-          col("x.doc_id") =!= col("y.doc_id"))
-      .select(least(col("x.doc_id"), col("y.doc_id")).as("i"),
-        greatest(col("x.doc_id"), col("y.doc_id")).as("j"))
-      .distinct()
-    val fresh = verifyExactJaccard(cand, docsDf, 0.8).select(col("i"), col("j"))
-    val edges = s.read.parquet(s"$dir/pairs").union(fresh)
-    connectedComponents(docsDf.select(col("doc_id")), edges, "doc_id")
-      .orderBy("doc_id")
+    val dir = graft.Scratch.dir(s"dedup_incr_store-${java.util.UUID.randomUUID()}")
+    appendSplit(docs(s, d), dir)
+    dedupServeFromStore(s, dir)
   }
 
-  /** One STREAMING micro-batch of incremental near-dup dedup — the
-    * per-epoch core [[graft.streaming.Streams.epochDeltas]] runs inside
-    * `foreachBatch` (r10, VERDICT #3's streaming twin). Same soundness
-    * argument as [[minhashIncremental]] (corpus-independent band keys →
-    * delta-bands × (saved ∪ delta-bands) candidates decompose exactly),
-    * with the store made REPLAY-IDEMPOTENT: every table the epoch
-    * produces (its docs, its band rows, its verified delta-involving
-    * pairs) lands in an `epoch=N` partition via dynamic partition
-    * overwrite, so a re-delivered micro-batch (the foreachBatch
-    * at-least-once contract) REWRITES its own partition with the
-    * deterministically identical rows instead of duplicating them —
-    * exactly-once state without a transaction log. Returns the full
-    * cluster assignment over the store as of this epoch (components
-    * over all saved pairs), which the sink publishes. */
-  def dedupDelta(batchIn: DataFrame, storeDir: String, epoch: Long): DataFrame = {
+  /** Build the incremental near-dup store over `docsDf` in `dir` with two
+    * [[dedupAppend]]s: epoch 0 holds the first 80% of the doc-id space,
+    * epoch 1 the rest. The split derives from max(doc_id), so it means
+    * the same at every SF. */
+  private[graft] def appendSplit(docsDf: DataFrame, dir: String): Unit = {
+    val split = (docsDf.agg(max(col("doc_id"))).head().getLong(0) + 1L) * 4L / 5L
+    dedupAppend(docsDf.filter(col("doc_id") < split), dir, 0L)
+    dedupAppend(docsDf.filter(col("doc_id") >= split), dir, 1L)
+  }
+
+  /** Append one epoch of `(doc_id, text)` docs to an incremental near-dup
+    * store — the write half of [[dedupDelta]]. The batch's band rows join
+    * the saved bands and, once per pair (`x.doc_id < y.doc_id`), their
+    * own; the delta-involving candidates verify at exact Jaccard >= 0.8.
+    * The epoch's docs, bands and verified pairs land in `epoch=N`
+    * partitions, so a re-delivered batch REWRITES its own partition with
+    * identical rows instead of duplicating them — exactly-once state
+    * without a transaction log. */
+  private[graft] def dedupAppend(batchIn: DataFrame, storeDir: String,
+                                 epoch: Long): Unit = {
     val st = EpochStore(batchIn.sparkSession, storeDir).append(epoch)
     val batch = batchIn.select(col("doc_id"), col("text")).cut()
     val savedDocs = st.saved("docs", batch)
     val deltaBands = md5BandRows(batch).cut()
-    val savedBands = st.saved("bands", deltaBands)
-    val cand = deltaBands.as("x")
-      .join(savedBands.select("doc_id", "band", "h").union(deltaBands).as("y"),
-        col("x.band") === col("y.band") && col("x.h") === col("y.h") &&
-          col("x.doc_id") =!= col("y.doc_id"))
+    val savedBands = st.saved("bands", deltaBands).select("doc_id", "band", "h")
+    def bucketPairs(y: DataFrame, pair: Column): DataFrame =
+      deltaBands.as("x").join(y.as("y"),
+        col("x.band") === col("y.band") && col("x.h") === col("y.h") && pair)
+    // a replayed epoch's saved side holds this batch's own bands too, so
+    // saved pairs come in either orientation
+    val cand = bucketPairs(savedBands, col("x.doc_id") =!= col("y.doc_id"))
       .select(least(col("x.doc_id"), col("y.doc_id")).as("i"),
         greatest(col("x.doc_id"), col("y.doc_id")).as("j"))
+      .union(bucketPairs(deltaBands, col("x.doc_id") < col("y.doc_id"))
+        .select(col("x.doc_id").as("i"), col("y.doc_id").as("j")))
       .distinct()
     // dropDuplicates: on a REPLAYED epoch the saved store already holds
     // this batch's docs — text is identical, so any copy verifies alike
@@ -636,7 +597,16 @@ object Dedup extends graft.QueryModule {
     st.write("docs", batch)
     st.write("bands", deltaBands)
     st.write("pairs", fresh)
-    dedupServeFromStore(st.spark, storeDir)
+  }
+
+  /** One STREAMING micro-batch of incremental near-dup dedup — the
+    * per-epoch core [[graft.streaming.Streams.epochDeltas]] runs inside
+    * `foreachBatch` (r10, VERDICT #3's streaming twin): [[dedupAppend]],
+    * then the full cluster assignment over the store as of this epoch
+    * ([[dedupServeFromStore]]), which the sink publishes. */
+  def dedupDelta(batchIn: DataFrame, storeDir: String, epoch: Long): DataFrame = {
+    dedupAppend(batchIn, storeDir, epoch)
+    dedupServeFromStore(batchIn.sparkSession, storeDir)
   }
 
   /** Serve the cluster assignment from a [[dedupDelta]] store:
@@ -726,8 +696,8 @@ object Dedup extends graft.QueryModule {
   /** Epoch-store compaction under the correctness gate [N] (r13 VERDICT
     * #5 — the `sink_compact_files` precedent says maintenance
     * operations earn oracle keys): build the incremental-dedup band
-    * store across TWO delta epochs ([[dedupDelta]], the streaming
-    * micro-batch core), fold it to the `epoch=-1` baseline
+    * store across TWO delta epochs ([[appendSplit]]), fold it to the
+    * `epoch=-1` baseline
     * ([[graft.pipeline.StoreCompact.compactDedupStore]] — lease,
     * staged commit, crash recovery), and SERVE components from the
     * compacted store. Compaction must be invisible to the reader, so
@@ -736,15 +706,10 @@ object Dedup extends graft.QueryModule {
     * delta-built-then-compacted store serves exactly the from-scratch
     * clustering — nothing lost, duplicated, or reordered by the swap. */
   private def sinkStoreCompact(s: SparkSession, d: String): DataFrame = {
-    val docsDf = docs(s, d)
-    val split = (docsDf.agg(max(col("doc_id"))).head().getLong(0) + 1L) * 4L / 5L
     // fresh store per run: a retry must rebuild, not re-append onto the
     // already-compacted baseline (FIXTURES.md "Scratch paths")
     val dir = graft.Scratch.dir(s"store_compact-${java.util.UUID.randomUUID()}")
-    dedupDelta(docsDf.filter(col("doc_id") < split).localCheckpoint(),
-      dir, 0L): Unit
-    dedupDelta(docsDf.filter(col("doc_id") >= split).localCheckpoint(),
-      dir, 1L): Unit
+    appendSplit(docs(s, d), dir)
     graft.pipeline.StoreCompact.compactDedupStore(s, dir)
     // the reader's serve, now over single-baseline sub-tables
     dedupServeFromStore(s, dir)

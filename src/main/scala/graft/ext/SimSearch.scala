@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Ckpt.CutOps
-import graft.Tables
+import graft.{ParquetFrame, Tables}
 import graft.pipeline.EpochStore
 import graft.functions.VectorFunctions
 
@@ -346,34 +346,28 @@ object SimSearch extends graft.QueryModule {
 
   /** Graph-ANN index APPEND [N] (r10) — the graph analogue of
     * `sim_search_ivf_append`, completing the graph leg of the index
-    * lifecycle (build → search → APPEND → serve): the even-id half of
-    * the corpus is the SAVED graph (its directed k-NN edge lists persist
-    * as parquet and are read back, never recomputed), and the odd-id
-    * delta inserts by ranking each new node against base ∪ delta — the
-    * HNSW insertion rule in batch form. Symmetrization then gives saved
-    * nodes their back-edges from the delta (how HNSW wires reverse
-    * links) and the shared 2×degree cap re-applies. Append cost is
-    * O(delta × per-label candidates) — the historical corpus is scanned
-    * only as the ranking side of the delta's equi-join, never re-banded.
+    * lifecycle (build → search → APPEND → serve), run as the graph
+    * store's own lifecycle: the even-id half of the corpus seeds the
+    * store ([[knnGraphStoreSeed]] — its directed k-NN edge lists persist
+    * and are read back, never recomputed), the odd-id delta appends as
+    * epoch 0 ([[knnGraphDelta]] — each new node ranks against base ∪
+    * delta, the HNSW insertion rule in batch form), and
+    * [[serveFromGraphStore]] symmetrizes (saved nodes get their
+    * back-edges from the delta, as HNSW wires reverse links), re-applies
+    * the shared 2×degree cap and walks. Append cost is O(delta ×
+    * per-label candidates) — the historical corpus is scanned only as
+    * the ranking side of the delta's equi-join, never re-banded.
     * NOTE: append ≠ rebuild (saved base-base lists never re-rank against
     * delta nodes — the price of not rebuilding), so the oracle mirrors
     * the DECOMPOSED construction, not a full rebuild. */
   private def knnGraphAppend(s: SparkSession, d: String): DataFrame = {
-    val e = withNsq(Tables.embeddings(s, d).filter(col("vec_id") =!= 0))
-      .cut()
-    val base = e.filter(col("vec_id") % 2 === 0)
-    val delta = e.filter(col("vec_id") % 2 === 1)
-    // per-run temp dir (r11): results are path-independent; a fixed path
+    val e = Tables.embeddings(s, d)
+    // per-run store (r11): results are path-independent; a fixed path
     // raced when two sessions ran the key concurrently (FIXTURES.md)
-    val dir = graft.Scratch.dir(s"knn_graph_index-${java.util.UUID.randomUUID()}")
-    knnEdges(base, base, GraphAnnDegree)
-      .write.mode("overwrite").parquet(dir)
-    val saved = s.read.parquet(dir)
-    val merged = symCap(saved.union(knnEdges(delta, e, GraphAnnDegree)),
-      GraphAnnDegree)
-    beamWalk(e, merged, labelEntries(e),
-      Tables.embeddings(s, d).filter(col("vec_id") === 0).select(col("embedding")),
-      GraphAnnBeam, GraphAnnSteps, k = 10)
+    val dir = graft.Scratch.dir(s"knn_graph_store-${java.util.UUID.randomUUID()}")
+    knnGraphStoreSeed(e.filter(col("vec_id") =!= 0 && col("vec_id") % 2 === 0), dir)
+    knnGraphDelta(e.filter(col("vec_id") % 2 === 1), dir, 0L): Unit
+    serveFromGraphStore(s, dir, e.filter(col("vec_id") === 0).select(col("embedding")))
   }
 
   /** Oracle for [[knnGraphAppend]]: the decomposed edge construction
@@ -412,41 +406,37 @@ object SimSearch extends graft.QueryModule {
     * "day-0 backfill" the streaming deltas then append to. */
   def knnGraphStoreSeed(vecsIn: DataFrame, storeDir: String): Unit = {
     val st = EpochStore(vecsIn.sparkSession, storeDir)
-    val vecs = vecsIn.select(col("vec_id"), col("label"), col("embedding"))
-    st.seed("vecs", vecs)
-    val e = withNsq(vecs).cut()
+    st.seed("vecs", vecsIn.select(col("vec_id"), col("label"), col("embedding")))
+    // rank over the seeded rows as written, not a second cut of the input
+    val e = withNsq(st.read("vecs"))
     st.seed("edges", knnEdges(e, e, GraphAnnDegree))
   }
 
   /** One STREAMING micro-batch of graph-ANN index append — the per-epoch
     * core [[graft.streaming.Streams.epochDeltas]] runs inside
-    * `foreachBatch` (r11, VERDICT #4). Mirrors the batch
-    * `sim_search_knn_graph_append` legs exactly: the delta's nodes rank
+    * `foreachBatch` (r11, VERDICT #4), and the batch
+    * `sim_search_knn_graph_append`'s epoch 0: the delta's nodes rank
     * against saved ∪ delta (the HNSW insertion rule), saved nodes' lists
     * are never re-ranked, and symmetrization + the degree cap happen at
     * SERVE time over the union of all epochs' edges. Replay-idempotent
     * the same way [[graft.ext.Dedup.dedupDelta]] is: the epoch's vectors
     * and edges land in their own `epoch=N` partitions via direct
     * partition-path overwrite, so a re-delivered micro-batch rewrites
-    * identical rows instead of duplicating them (dropDuplicates on
-    * vec_id makes the ranking side replay-safe — on a replay the saved
-    * store already holds this epoch's vectors). Returns the merged
-    * servable edge list (symmetrized, capped) as of this epoch. */
+    * identical rows instead of duplicating them. The vectors land
+    * first and the edges rank the epoch's vectors as written against
+    * every committed one, deduplicated on vec_id — frames built after
+    * the overwrite, so a replay reads only its own new files. Returns
+    * the merged servable edge list (symmetrized, capped) as of this
+    * epoch. */
   def knnGraphDelta(batchIn: DataFrame, storeDir: String,
                     epoch: Long): DataFrame = {
     val st = EpochStore(batchIn.sparkSession, storeDir).append(epoch)
-    val batch = batchIn.select(col("vec_id"), col("label"), col("embedding"))
-      .cut()
-    val savedVecs = st.saved("vecs", batch)
+    st.write("vecs", batchIn.select(col("vec_id"), col("label"), col("embedding")))
+    val allVecs = st.read("vecs")
       .select(col("vec_id"), col("label"), col("embedding"))
-    val allVecs = savedVecs.union(batch).dropDuplicates("vec_id")
-    // materialize BEFORE the store writes: on a replayed epoch the
-    // saved side still references this epoch's previous files, which
-    // the overwrite below deletes — cut the lineage first
-    val fresh = knnEdges(withNsq(batch), withNsq(allVecs).cut(),
-      GraphAnnDegree).cut()
-    st.write("vecs", batch)
-    st.write("edges", fresh)
+      .dropDuplicates("vec_id")
+    st.write("edges",
+      knnEdges(withNsq(st.written("vecs")), withNsq(allVecs), GraphAnnDegree))
     symCap(st.read("edges").select(col("i"), col("j"), col("cosine")),
         GraphAnnDegree)
       .orderBy("i", "j")
@@ -2139,11 +2129,11 @@ object SimSearch extends graft.QueryModule {
   /** The saved index's `(cells, centroids)` tables. */
   private def savedIvfIndex(spark: SparkSession,
                             dir: String): (DataFrame, DataFrame) =
-    (spark.read.parquet(s"$dir/cells")
+    (ParquetFrame(spark, Seq(s"$dir/cells"))
       // the partition column comes back type-inferred (int); restore long
       .select(col("cell").cast("long").as("cell"), col("vec_id"),
         col("embedding")),
-     spark.read.parquet(s"$dir/centroids"))
+     ParquetFrame(spark, Seq(s"$dir/centroids")))
 
   /** Serve a probe batch from a [[buildIvfIndexPinned]] index on disk. */
   def servedTopKPinned(spark: SparkSession, dir: String, probes: DataFrame,
@@ -2324,7 +2314,7 @@ object SimSearch extends graft.QueryModule {
     val e = Tables.embeddings(s, d)
     val dir = graft.Scratch.dir("ivf_index_append")
     buildIvfIndexPinned(e.filter(col("vec_id") % 2 === 0), dir)
-    val centroids = s.read.parquet(s"$dir/centroids")
+    val centroids = ParquetFrame(s, Seq(s"$dir/centroids"))
     val delta = e.filter(col("vec_id") % 2 === 1)
       .select(col("vec_id"), col("embedding"))
     pinnedAssign(delta, centroids).join(delta, Seq("vec_id"))
@@ -2692,21 +2682,21 @@ object SimSearch extends graft.QueryModule {
       .limit(topK)
   }
 
-  /** Persist the trained PQ index: codebooks, 8-byte codes, and the
-    * raw vectors (the exact-rerank side + probe source). Deployment
-    * trains ONCE and serves codes — the artifact split this store
-    * realizes; `codes` is written LAST so its existence implies a
-    * complete seed (the hnsw-store completeness rule). */
+  /** Persist the trained PQ index as the `epoch=-1` baselines of an
+    * [[EpochStore]]: codebooks, 8-byte codes, and the raw vectors (the
+    * exact-rerank side + probe source). Deployment trains ONCE and
+    * serves codes — the artifact split this store realizes; `codes` is
+    * seeded LAST, so `seeded("codes")` implies a complete seed. */
   def pqStoreSeed(e: DataFrame, storeDir: String, m: Int = 8, k: Int = 16,
                   iters: Int = 3): Unit = {
+    val st = EpochStore(e.sparkSession, storeDir)
     val subDim = 64 / m
     val vecs = e.select(col("vec_id"), col("embedding"))
     val sub = sliceSubs(gridify(vecs), "gv", m, subDim)
     val cents = pqTrainCodebooksPinned(sub, k, iters)
-    vecs.write.mode("overwrite").parquet(s"$storeDir/vecs")
-    cents.write.mode("overwrite").parquet(s"$storeDir/cents")
-    pqEncodePinned(sub, cents)
-      .write.mode("overwrite").parquet(s"$storeDir/codes")
+    st.seed("vecs", vecs)
+    st.seed("cents", cents)
+    st.seed("codes", pqEncodePinned(sub, cents))
   }
 
   /** Serve from the persisted PQ index: ADC over the stored codes +
@@ -2714,12 +2704,11 @@ object SimSearch extends graft.QueryModule {
     * makes the stored artifacts exact longs, so store serving is
     * bit-equal to the in-query key (spec-pinned). */
   def servePqFromStore(s: SparkSession, storeDir: String, m: Int = 8,
-                       rerank: Int = 200, topK: Int = 10): DataFrame =
-    pqAdcServe(
-      s.read.parquet(s"$storeDir/vecs"),
-      s.read.parquet(s"$storeDir/cents"),
-      s.read.parquet(s"$storeDir/codes"),
-      m, rerank, topK)
+                       rerank: Int = 200, topK: Int = 10): DataFrame = {
+    val st = EpochStore(s, storeDir)
+    def sub(name: String) = st.read(name).drop("epoch")
+    pqAdcServe(sub("vecs"), sub("cents"), sub("codes"), m, rerank, topK)
+  }
 
   private def pq(s: SparkSession, d: String): DataFrame = {
     pqTopKPinned(Tables.embeddings(s, d))
@@ -2792,10 +2781,9 @@ object SimSearch extends graft.QueryModule {
   private def pqServed(s: SparkSession, d: String): DataFrame = {
     val dir = graft.Scratch.dir(
       "pq_store_" + d.replaceAll("[^A-Za-z0-9.]", "_"))
-    // _SUCCESS, not the dir: a seed crashed mid-write of codes (the
-    // last artifact) must read as unseeded, not serve a partial index
-    // (ADVICE r13)
-    if (!graft.Hfs.exists(s"$dir/codes/_SUCCESS"))
+    // a seed that crashed mid-write of codes (the last sub-table) reads
+    // as unseeded, never as a partial index (ADVICE r13)
+    if (!EpochStore(s, dir).seeded("codes"))
       pqStoreSeed(Tables.embeddings(s, d), dir)
     servePqFromStore(s, dir)
   }

@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{ParquetFrame, Tables}
 
 /** SURVEY.md §2.K — text analysis for training-data pipelines: token
   * counting, corpus term frequencies, heuristic language ID, quality
@@ -755,7 +755,7 @@ object TextAnalysis extends graft.QueryModule {
       .agg(sort_array(collect_set(col("doc_id"))).as("postings"),
         count(lit(1)).as("df"))
       .write.mode("overwrite").parquet(dir)
-    val idx = s.read.parquet(dir)
+    val idx = ParquetFrame(s, Seq(dir))
     val top2 = idx.orderBy(col("df").desc, col("w")).limit(2)
       .select(col("postings"))
     top2.agg(collect_list(col("postings")).as("ps"))

@@ -132,9 +132,7 @@ object StreamBatch extends graft.QueryModule {
     val q = graft.streaming.Streams.maintainIncrementalState(
       s, src, s"$base/state", s"$base/ckpt")
     q.awaitTermination()
-    val latest = graft.streaming.Streams.latestStateVersion(s"$base/state")
-      .getOrElse(sys.error("no incremental state version written"))
-    s.read.parquet(latest)
+    graft.streaming.Streams.latestState(s, s"$base/state")
       .select(col("user_id"), col("n"),
         col("s").cast("double").as("total"),
         col("mn").cast("double").as("mn"), col("mx").cast("double").as("mx"))
@@ -162,9 +160,7 @@ object StreamBatch extends graft.QueryModule {
     val q = graft.streaming.Streams.maintainChangelogState(
       s, s"$base/src", s"$base/seed", s"$base/state", s"$base/ckpt")
     q.awaitTermination()
-    val latest = graft.streaming.Streams.latestStateVersion(s"$base/state")
-      .getOrElse(sys.error("no changelog state version written"))
-    s.read.parquet(latest)
+    graft.streaming.Streams.latestState(s, s"$base/state")
       .select(col("o_custkey"), col("n"), col("s").cast("double").as("total"))
       .orderBy("o_custkey")
   }

@@ -4,6 +4,8 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
+import graft.ParquetFrame
+
 /** Small-file compaction — the maintenance operation every long-running
   * ingest needs: streaming/incremental sinks accrete many small part
   * files, and at 100 TB the resulting per-file open/footer overhead
@@ -44,7 +46,7 @@ object Compact {
     val before = parts
     val totalBytes = before.map(_.getLen).sum
     val wanted = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    val df = spark.read.parquet(dir)
+    val df = ParquetFrame(spark, Seq(dir))
     if (before.length <= wanted) {
       return Report(before.length, before.length, totalBytes, df.count())
     }
@@ -52,7 +54,7 @@ object Compact {
     val old = new Path(dir + "_compact_old")
     // coalesce, not repartition: narrowing to fewer files needs no shuffle
     df.coalesce(wanted).write.mode("overwrite").parquet(tmp.toString)
-    val rows = spark.read.parquet(tmp.toString).count()
+    val rows = ParquetFrame(spark, Seq(tmp.toString)).count()
     require(rows == df.count(),
       s"compaction row-count drift: $rows vs ${df.count()}")
     require(fs.rename(path, old), s"swap failed: $path -> $old")

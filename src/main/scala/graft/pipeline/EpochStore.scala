@@ -25,6 +25,16 @@ import graft.{Hfs, ParquetFrame}
   * ([[graft.ParquetFrame]]), and an append whose columns differ from the
   * committed epochs' fails before it writes.
   *
+  * LIFECYCLES: the stores that run through this class are the
+  * incremental dedup band store, the ExactSubstr word and char
+  * stores, the BM25 and centroid indexes, the graph-ANN edge store, the
+  * HNSW layer stores, the multimodal corpus-clean store and the audio
+  * fingerprint store (each seeded and/or appended epoch by epoch, then
+  * served), and the seed-only PQ index store (vectors, codebooks and
+  * codes under `epoch=-1`). The saved IVF index keeps its own
+  * `cells/cell=N` layout: pruning to a probe's cells is its reason to
+  * exist.
+  *
   * Epoch-store COMPACTION [N] (r13) — the maintenance leg of the
   * persisted incremental lifecycles (dedup band stores, HNSW layer
   * stores, audio fingerprints, the multimodal corpus-clean store):
@@ -267,8 +277,10 @@ object EpochStore {
   }
 }
 
-/** The compaction rules of the seven stores: each `compact*Store` lists
-  * one [[EpochStore.Fold]] per sub-table.
+/** The compaction rules of the seven store layouts that fold appended
+  * epochs (the graph-ANN edge store has none, and the seed-only PQ store
+  * needs none): each `compact*Store` lists one [[EpochStore.Fold]] per
+  * sub-table.
   *
   * Row semantics are preserved per store: sub-tables whose READERS
   * deduplicate get the same dropDuplicates/distinct applied at

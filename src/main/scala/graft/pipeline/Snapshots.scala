@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.Hfs
+import graft.{Hfs, ParquetFrame}
 
 /** Versioned snapshot table with time-travel reads — the Iceberg/Delta
   * idea (immutable snapshot versions + as-of reads) on plain parquet.
@@ -54,7 +54,7 @@ object Snapshots {
     if (!Hfs.isDirectory(p))
       sys.error(s"snapshot v$version does not exist under $dir " +
         s"(latest = ${latestVersion(dir).getOrElse(-1)})")
-    spark.read.parquet(p)
+    ParquetFrame(spark, Seq(p))
   }
 
   /** Read the latest committed snapshot. */

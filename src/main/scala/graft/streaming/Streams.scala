@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.ParquetFrame
 import graft.model.Schemas
 import graft.ops.StreamBatch
 
@@ -547,22 +548,11 @@ object Streams {
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark2 = batch.sparkSession
-        val prev = s"$stateDir/v${batchId - 1}"
         val st =
-          if (batchId > 0) {
-            // Only batch 0 may start from empty state. A missing
-            // predecessor version with a surviving checkpoint (state dir
-            // cleaned, prior batch died between checkpoint and state
-            // write) must FAIL LOUDLY — folding batch k into empty state
-            // would serve silently undercounted aggregates forever after.
-            // (Hadoop-FS probe: stateDir may be an HDFS/S3 URI — r11 #4.)
-            if (!graft.Hfs.exists(prev))
-              sys.error(s"incremental state v${batchId - 1} missing under " +
-                s"$stateDir but checkpoint expects batch $batchId; refusing " +
-                "to rebuild from empty state (would silently undercount)")
-            spark2.read.parquet(prev)
-          } else // empty state with the state schema
+          if (batchId > 0)
+            predecessorState(batch.sparkSession, stateDir, batchId,
+              "incremental", "undercount")
+          else // empty state with the state schema
             graft.ops.Incremental.state(batch.limit(0), Seq("user_id"), "price")
         graft.ops.Incremental.mergeDelta(st, batch, Seq("user_id"), "price")
           .write.mode("overwrite").parquet(s"$stateDir/v$batchId")
@@ -592,16 +582,11 @@ object Streams {
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark2 = batch.sparkSession
-        val prev = s"$stateDir/v${batchId - 1}"
         val st =
-          if (batchId > 0) {
-            if (!graft.Hfs.exists(prev))
-              sys.error(s"changelog state v${batchId - 1} missing under " +
-                s"$stateDir but checkpoint expects batch $batchId; refusing " +
-                "to rebuild from empty state (would silently drift)")
-            spark2.read.parquet(prev)
-          } else spark2.read.parquet(seedDir)
+          if (batchId > 0)
+            predecessorState(batch.sparkSession, stateDir, batchId,
+              "changelog", "drift")
+          else ParquetFrame(batch.sparkSession, Seq(seedDir))
         graft.ops.Incremental.mergeChangelog(st, batch, Seq("o_custkey"),
             "old_price", "new_price")
           .write.mode("overwrite").parquet(s"$stateDir/v$batchId")
@@ -609,11 +594,42 @@ object Streams {
       .start()
   }
 
-  /** Latest state version written by [[maintainIncrementalState]] —
-    * discovered through Hadoop's FileSystem so an HDFS/S3 stateDir lists
-    * correctly (r11 #4); returns the version path under `stateDir`. */
+  /** Whether state version dir `v` is committed: Spark creates `v<k>`
+    * before its write job commits and leaves `_SUCCESS` only on commit,
+    * so a crashed or in-flight state write is not a version (the
+    * [[graft.pipeline.EpochStore]] rule). Probed through Hadoop's
+    * FileSystem, so an HDFS/S3 stateDir reads alike (r11 #4). */
+  private def committedVersion(v: String): Boolean = graft.Hfs.exists(s"$v/_SUCCESS")
+
+  /** The committed state version `v<batchId-1>` that batch `batchId > 0`
+    * folds into. Only batch 0 may start without one: a missing
+    * predecessor with a surviving checkpoint (state dir cleaned, prior
+    * batch died between checkpoint and state write) must FAIL LOUDLY —
+    * folding batch k into empty state would serve silently wrong
+    * aggregates forever after. */
+  private def predecessorState(spark: SparkSession, stateDir: String,
+                               batchId: Long, kind: String,
+                               harm: String): DataFrame = {
+    val prev = s"$stateDir/v${batchId - 1}"
+    if (!committedVersion(prev))
+      sys.error(s"$kind state v${batchId - 1} missing under " +
+        s"$stateDir but checkpoint expects batch $batchId; refusing " +
+        s"to rebuild from empty state (would silently $harm)")
+    ParquetFrame(spark, Seq(prev))
+  }
+
+  /** Latest committed state version written by
+    * [[maintainIncrementalState]] or [[maintainChangelogState]]; returns
+    * the version path under `stateDir`. */
   def latestStateVersion(stateDir: String): Option[String] =
     graft.Hfs.childDirNames(stateDir)
       .filter(_.matches("v\\d+")).map(_.drop(1).toInt)
-      .sorted.lastOption.map(v => s"$stateDir/v$v")
+      .sorted.map(v => s"$stateDir/v$v").filter(committedVersion).lastOption
+
+  /** The [[latestStateVersion]]'s rows.
+    *
+    * @throws RuntimeException if `stateDir` holds no committed version */
+  def latestState(spark: SparkSession, stateDir: String): DataFrame =
+    ParquetFrame(spark, Seq(latestStateVersion(stateDir).getOrElse(
+      sys.error(s"no committed state version under $stateDir"))))
 }

@@ -320,6 +320,17 @@ class DedupSpec extends AnyFunSuite {
     assert(got == pinned)
   }
 
+  test("incremental store keys: jobs per warm run stay pinned at sf0.001") {
+    // (jobs, stages) per warm run (recipe: JobCensus): two appends and one
+    // serve (plus the compaction for sink_store_compact) — a discarded
+    // serve or an extra inference read moves the pair
+    val pinned = Map(
+      "dedup_minhash_incremental" -> (30, 43), "sink_store_compact" -> (33, 46))
+    val ns = JobCensus.session()
+    val got = pinned.keys.map(k => k -> JobCensus.warmJobs(ns, k)).toMap
+    assert(got == pinned)
+  }
+
   /** [[graft.ext.Dedup.connectedComponentsWithRounds]] in session `ns`
     * over the (nodes, edges) `graph` builds there: the result's schema,
     * whether it is a driver-local relation, its rows (ordered by their

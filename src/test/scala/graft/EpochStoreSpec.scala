@@ -195,6 +195,25 @@ class EpochStoreSpec extends AnyFunSuite {
     assert(jobs(ep.written("a")) == 0)
   }
 
+  test("frames start no Spark job: the PQ and IVF serves, a snapshot, a state version") {
+    functions.VectorFunctions.register(spark)
+    def jobs(body: => DataFrame): Int = obs.JobCensus.jobsOf(spark, "frame")(body: Unit)._1
+    val e = Tables.embeddings(spark, TestSpark.sf0001)
+    val pq = tmp("graft_pq_store")
+    ext.SimSearch.pqStoreSeed(e, pq)
+    assert(jobs(ext.SimSearch.servePqFromStore(spark, pq)) == 0)
+    val ivf = tmp("graft_ivf_index")
+    ext.SimSearch.buildIvfIndexPinned(e, ivf)
+    val probes = e.filter("vec_id < 3").selectExpr("vec_id AS probe_id", "embedding AS probe")
+    assert(jobs(ext.SimSearch.servedTopKPinned(spark, ivf, probes)) == 0)
+    val snaps = tmp("graft_snapshots")
+    pipeline.Snapshots.commit(Seq(1L, 2L).toDF("x"), snaps)
+    assert(jobs(pipeline.Snapshots.readAsOf(spark, snaps, 0)) == 0)
+    val state = tmp("graft_state")
+    Seq(1L).toDF("x").write.parquet(s"$state/v0")
+    assert(jobs(streaming.Streams.latestState(spark, state)) == 0)
+  }
+
   test("a frame's schema is the one Spark's inference gives") {
     val st = toyStore()
     Seq("a", "b").foreach { sub =>

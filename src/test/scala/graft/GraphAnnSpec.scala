@@ -22,6 +22,17 @@ class GraphAnnSpec extends AnyFunSuite {
     assert(got == pinned)
   }
 
+  test("graph and PQ store keys: jobs per warm run stay pinned at sf0.001") {
+    // (jobs, stages) per warm run (recipe: JobCensus): the graph key
+    // seeds, appends and serves a fresh store; the PQ key's first run
+    // seeds its per-process store, so the counted run is a pure serve
+    val pinned = Map(
+      "sim_search_knn_graph_append" -> (36, 68), "sim_search_pq_served" -> (6, 8))
+    val ns = JobCensus.session()
+    val got = pinned.keys.map(k => k -> JobCensus.warmJobs(ns, k)).toMap
+    assert(got == pinned)
+  }
+
   test("a 3-level store serves its whole stack and appends to every layer") {
     functions.VectorFunctions.register(spark)
     val sf = TestSpark.sf0001

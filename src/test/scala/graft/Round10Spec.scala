@@ -34,16 +34,16 @@ class Round10Spec extends AnyFunSuite {
   }
 
   test("incremental dedup pair store holds only verified >= 0.8 pairs") {
-    // run the registered key (rebuilds the fixture store), then check
+    // build the store with the registered key's two appends, then check
     // the persisted pair store against an exact recompute — the store
     // is tomorrow's "saved base", so a bad write poisons every later
     // delta batch
-    SparkEntry.queries("dedup_minhash_incremental")(spark, TestSpark.sf0001)
-      .collect()
     val docsDf = Tables.documents(spark, TestSpark.sf0001)
       .select(col("doc_id"), col("text"))
-    val stored = spark.read
-      .parquet(s"${graft.ext.Dedup.lastIncrScratchDir}/pairs")
+    val dir = java.nio.file.Files.createTempDirectory("graft_incr_dedup").toString
+    graft.ext.Dedup.appendSplit(docsDf, dir)
+    val stored = graft.pipeline.EpochStore(spark, dir).read("pairs")
+      .select("i", "j")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(stored.nonEmpty, "pair store is empty")
     val exactAll = graft.ext.Dedup.verifyExactJaccard(

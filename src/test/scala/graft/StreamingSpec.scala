@@ -978,6 +978,18 @@ class StreamingSpec extends AnyFunSuite {
       (2L, 2L, "3.25", "-3.75", "7.00")))
   }
 
+  test("latestStateVersion: a version dir without _SUCCESS is not committed") {
+    import spark.implicits._
+    val state = Files.createTempDirectory("graft_state_commit").toString
+    Seq((1L, 2L)).toDF("user_id", "n").write.parquet(s"$state/v0")
+    // a crashed or in-flight write of v1: Spark made the dir and its
+    // files, but the job never committed
+    val v1 = new java.io.File(s"$state/v1")
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(s"$state/v0"), v1)
+    assert(new java.io.File(v1, "_SUCCESS").delete())
+    assert(Streams.latestStateVersion(state).contains(s"$state/v0"))
+  }
+
   test("streaming CUSUM == batch fold, arrival-order independent") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
